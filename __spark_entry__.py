@@ -1,17 +1,14 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` runs the flagship KG-construction query; ``queries()``
-exposes one entry per implemented operator (SURVEY.md §2 + the
-training-data ops); ``oracle_sql()`` gives the DuckDB twin for every
-SQL-expressible operator.
+exposes one entry per implemented RDF operator (SURVEY.md §2);
+``oracle_sql()`` gives the DuckDB twin for every SQL-expressible operator.
 
-RDF operators run over the deterministic fixture docs table
-(FIXTURES.md; generated idempotently under ``fixtures/rdf_sf*``) — golden
-triples/verdicts are computed by construction at generation time, so the
-oracle side reads the golden parquet while the Spark side runs the real
-extract→canonicalize→validate pipeline. Text/dedup/similarity/events
-operators run over the driver's own tables with genuinely independent
-SQL oracles.
+Operators run over the deterministic fixture docs tables (FIXTURES.md;
+generated idempotently under ``fixtures/*_sf*``) — golden triples/verdicts
+are computed by construction at generation time, so the oracle side reads
+the golden parquet while the Spark side runs the real
+extract→canonicalize→validate pipeline.
 """
 
 from __future__ import annotations
@@ -251,7 +248,7 @@ def _q_validate_shacl(spark, sf_dir):
 
 
 def _q_w3c_sample(spark, sf_dir):
-    """W3C ShEx/SHACL conformance sample: ~93 cases transcribed from the
+    """W3C ShEx/SHACL conformance sample: 108 cases transcribed from the
     official shexTest / data-shapes manifests (fixtures/w3c_sample.py),
     validated in ONE validate_batch pass over the unioned corpus.
     sf-independent by design — the corpus IS the suite sample.  The
@@ -873,458 +870,6 @@ def _q_catalog_validate(spark, sf_dir):
     return validate(
         tri, parse_shexc(SHEX_ITEM), shapemap=SHAPEMAP_ITEM, shape_label="shex_item"
     ).select("doc_sha256", "node", "status")
-
-
-def _q_text_redact(spark, sf_dir):
-    from rdfshape_api_spark.functions.textops import redact_pii
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    return redact_pii(docs)
-
-
-def _q_text_features(spark, sf_dir):
-    from rdfshape_api_spark.functions.textops import text_features
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    return text_features(docs)
-
-
-def _q_text_repetition(spark, sf_dir):
-    from rdfshape_api_spark.functions.textops import repetition_signals
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    return repetition_signals(docs)
-
-
-def _q_text_quality(spark, sf_dir):
-    from rdfshape_api_spark.functions.textops import quality_filter
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    return quality_filter(docs)
-
-
-def _q_dedup_exact(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    from rdfshape_api_spark.functions.dedup import exact_duplicates
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    # key on the normalized 80-char prefix: full-text exact duplicates
-    # don't exist at the driver's sf0.01 tier (a 0=0 oracle match verifies
-    # nothing), prefix groups do — same groupBy/HAVING plan, real output
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-    return exact_duplicates(docs, fp=F.md5(F.substring(norm, 1, 80)))
-
-
-def _q_dedup_bloom(spark, sf_dir):
-    """Bloom-filter incremental dedup: the 100 TB ingest pattern — the
-    existing corpus (doc_id % 10 < 8) is distilled once into its bloom
-    bit set; the incoming batch (the other 20%) is flagged map-side +
-    one small groupBy, never joining the corpus itself.  Key = normalized
-    80-char-prefix fingerprint (same as dedup_exact, so real collisions
-    exist at every tier)."""
-    from pyspark.sql import functions as F
-
-    from rdfshape_api_spark.functions.dedup import bloom_build, bloom_dedup_incremental
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-    fp = F.md5(F.substring(norm, 1, 80))
-    corpus = docs.filter(F.col("doc_id") % 10 < 8)
-    incoming = docs.filter(F.col("doc_id") % 10 >= 8).select("doc_id", fp.alias("fp"))
-    bloom = bloom_build(corpus, fp, k=5, m=1 << 20)
-    return bloom_dedup_incremental(incoming, bloom, "fp", k=5, m=1 << 20)
-
-
-def _q_corpus_stats(spark, sf_dir):
-    """Corpus mixture report per (lang, source): doc/token/char counts +
-    exact-integer ppm shares (functions/textops.corpus_stats)."""
-    from rdfshape_api_spark.functions.textops import corpus_stats
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    return corpus_stats(docs)
-
-
-def _q_bpe_encode(spark, sf_dir):
-    """Real corpus-trained BPE tokenization (functions/tokenize.py):
-    merges trained on the distributed word-frequency table (top-2000
-    words, 200 merges, deterministic tiebreaks), applied corpus-wide in
-    one Arrow-batched mapInPandas stage.  Iterative merge order is not
-    SQL-expressible — rows-only contract entry; pytest pins hand-computed
-    merges + the decode∘encode identity."""
-    from rdfshape_api_spark.functions.tokenize import (
-        bpe_encode,
-        build_vocab,
-        train_bpe,
-        word_frequencies,
-    )
-
-    from pyspark.sql import functions as F
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    wf = [(r["word"], r["n"]) for r in word_frequencies(docs, top_k=2000).collect()]
-    merges = train_bpe(wf, num_merges=200)
-    vocab = build_vocab(merges, wf)
-    enc = bpe_encode(docs, merges, vocab)
-    # Contract shape: stringify the array column so the driver's pandas
-    # canonicalizer (sort_values over every column) can hash the row.
-    return enc.select(
-        *[c for c in enc.columns if c != "token_ids"],
-        F.concat_ws(",", F.col("token_ids").cast("array<string>")).alias("token_ids"),
-    )
-
-
-def _q_pack_token_ids(spark, sf_dir):
-    """Concat-and-chunk packing (functions/sampling.pack_token_ids) over a
-    portable hash-word tokenization (md5-derived int per whitespace word),
-    so the DuckDB twin can rebuild the identical token stream: unnest WITH
-    ORDINALITY → row_number within shard → (rn-1)//seq_len groups, full
-    sequences only.  Spark never shuffles per-token rows — one doc-level
-    repartition + a streaming Arrow chunker; the oracle (tiny data) can
-    afford the per-token form."""
-    from pyspark.sql import functions as F
-
-    from rdfshape_api_spark.functions.sampling import pack_token_ids
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    word_id = lambda w: F.conv(F.substring(F.md5(w), 1, 7), 16, 10).cast("int")
-    encoded = docs.select(
-        "doc_id",
-        F.transform(
-            F.split(F.lower(F.trim(F.col("text"))), r"\s+"), word_id
-        ).alias("token_ids"),
-    )
-    packed = pack_token_ids(encoded, seq_len=32, n_shards=8)
-    # Contract shape: the driver's canonicalizer sorts columns with pandas,
-    # which cannot hash a list column — project the sequence to a sortable
-    # scalar (comma-joined string) on BOTH sides; the oracle mirrors with
-    # array_to_string.  pack_token_ids itself keeps the array<int> schema.
-    return packed.select(
-        "shard",
-        "seq_idx",
-        F.concat_ws(",", F.col("token_ids").cast("array<string>")).alias("token_ids"),
-    )
-
-
-def _q_dedup_lsh(spark, sf_dir):
-    from rdfshape_api_spark.functions.dedup import lsh_candidate_pairs
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    return lsh_candidate_pairs(docs)
-
-
-def _q_dedup_lsh_keep(spark, sf_dir):
-    from rdfshape_api_spark.functions.dedup import lsh_dedup_keep
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    return lsh_dedup_keep(docs)
-
-
-def _q_dedup_verified(spark, sf_dir):
-    from rdfshape_api_spark.functions.dedup import lsh_verified_pairs
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    return lsh_verified_pairs(docs, threshold=0.5)
-
-
-def _q_dedup_lsh_incremental(spark, sf_dir):
-    """Batch-vs-corpus near-dup dedup: docs with doc_id % 4 == 0 arrive as
-    the incoming batch; the rest are the existing corpus, represented ONLY
-    by its stored band table (the 100 TB ingest contract — the corpus text
-    is never re-read)."""
-    from rdfshape_api_spark.functions.dedup import lsh_incremental_keep, minhash_bands
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    batch = docs.filter(F.col("doc_id") % 4 == 0)
-    corpus_bands = minhash_bands(docs.filter(F.col("doc_id") % 4 != 0))
-    return lsh_incremental_keep(corpus_bands, batch)
-
-
-def _q_dedup_clusters(spark, sf_dir):
-    """Duplicate clusters: connected components of the LSH candidate-pair
-    graph, computed by contracting each bucket-clique to a star before the
-    min-label fixpoint (Σ|bucket| edges, not Σ|bucket|²) — row-identical
-    to CC over the enumerated pairs (oracle = recursive CTE over them)."""
-    from rdfshape_api_spark.functions.dedup import lsh_duplicate_clusters
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    return lsh_duplicate_clusters(docs)
-
-
-def _q_dedup_ngram(spark, sf_dir):
-    from rdfshape_api_spark.functions.dedup import ngram_jaccard_pairs
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    return ngram_jaccard_pairs(docs, threshold=0.5)
-
-
-def _q_text_decontaminate(spark, sf_dir):
-    """Benchmark decontamination (GPT-3 appendix-C style n-gram overlap).
-
-    The "benchmark" is a deterministic slice of the corpus itself
-    (doc_id % 97 == 0 — every eval set a lab guards against is drawn
-    from the same web distribution as the training data, so the slice is
-    a faithful stand-in and the check is self-contained)."""
-    from pyspark.sql import functions as F
-
-    from rdfshape_api_spark.functions.dedup import decontaminate
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    bench = docs.filter(F.col("doc_id") % 97 == 0)
-    return decontaminate(docs, bench, n=3)
-
-
-def _q_text_span_dedup(spark, sf_dir):
-    """C4-style duplicate-span removal: drop 3-word spans occurring in >=2
-    docs, reassemble the survivors (dedup.span_dedup docstring has the
-    100TB plan notes)."""
-    from rdfshape_api_spark.functions.dedup import span_dedup
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    return span_dedup(docs, span_words=3, min_df=2)
-
-
-def _q_dedup_simhash(spark, sf_dir):
-    from rdfshape_api_spark.functions.dedup import simhash_bucket_pairs
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    return simhash_bucket_pairs(docs)
-
-
-def _q_sim_topk(spark, sf_dir):
-    from rdfshape_api_spark.functions.similarity import cosine_topk
-
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    return cosine_topk(emb, k=5, n_queries=10)
-
-
-def _q_sim_near_dups(spark, sf_dir):
-    from rdfshape_api_spark.functions.similarity import embedding_near_dups
-
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    # 0.4: the synthetic embeddings' top within-cell cosine is ~0.47, so
-    # 0.9 matched the oracle on 0 rows — trivially green; 0.4 verifies
-    # real pairs at every tier (5 at sf0.01, 86 at sf0.1)
-    return embedding_near_dups(emb, threshold=0.4).select("vec_a", "vec_b")
-
-
-def _q_text_pack(spark, sf_dir):
-    """Token-budget sequence packing, 16 shards, 64-token bins."""
-    from rdfshape_api_spark.functions.sampling import pack_sequences
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    return pack_sequences(docs, max_tokens=64, n_shards=16)
-
-
-def _q_text_lm_score(spark, sf_dir):
-    """CCNet-style unigram-LM quality buckets (textops.lm_score)."""
-    from rdfshape_api_spark.functions.textops import lm_score
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    return lm_score(docs)
-
-
-def _q_text_normalize(spark, sf_dir):
-    """Unicode NFC + CCNet dedup-key normalization (textops.normalize_text)."""
-    from rdfshape_api_spark.functions.textops import normalize_text
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    return normalize_text(docs)
-
-
-def _q_text_top_ngrams(spark, sf_dir):
-    """Corpus heavy-hitter bigrams at 5% document-frequency support
-    (the synthetic word-soup corpus tops out near 9% — 0.05 keeps the
-    result non-trivial at every tier)."""
-    from rdfshape_api_spark.functions.textops import top_ngrams
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    return top_ngrams(docs, n=2, support=0.05)
-
-
-def _q_text_tfidf(spark, sf_dir):
-    """Per-document top-5 TF-IDF terms (integerized scores)."""
-    from rdfshape_api_spark.functions.textops import tfidf_topk
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    return tfidf_topk(docs, k=5)
-
-
-def _q_text_leakage_split(spark, sf_dir):
-    """Duplicate-cluster-aware train/val/test split: the split key is the
-    duplicate-family component (dups land in one split — no train/eval
-    contamination), singletons key on themselves; md5-bucket assignment
-    into cumulative ratio ranges (96/2/2).  Families here = the
-    normalized-prefix exact-dup groups (the LSH transitive components
-    chain 494/500 synthetic docs into ONE family at sf0.01 — correct CC
-    but a degenerate split demo; the `clusters` parameter exists for
-    exactly this policy choice)."""
-    from rdfshape_api_spark.functions.dedup import exact_duplicates
-    from rdfshape_api_spark.functions.sampling import leakage_safe_split
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-    fp = F.md5(F.substring(norm, 1, 80))
-    groups = exact_duplicates(docs, fp=fp)
-    clusters = (
-        docs.select("doc_id", fp.alias("fp"))
-        .join(groups.select("fp", F.col("min_doc_id").alias("component")), on="fp")
-        .select("doc_id", "component")
-    )
-    return leakage_safe_split(
-        docs, {"train": 0.96, "val": 0.02, "test": 0.02}, clusters=clusters
-    )
-
-
-def _q_text_hash_sample(spark, sf_dir):
-    """Deterministic corpus-mixing sample: en halved, es upsampled 2.25x,
-    de kept whole, zh/fr dropped (explicit-manifest convention)."""
-    from rdfshape_api_spark.functions.sampling import hash_sample
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    return hash_sample(docs, {"en": 0.5, "es": 2.25, "de": 1.0}).select(
-        "doc_id", "lang", F.col("n_copy").cast("int").alias("n_copy")
-    )
-
-
-def _q_text_source_cap(spark, sf_dir):
-    """Per-source quota (Dolma/RefinedWeb-style skew guard): at most 10
-    docs per source, selected by deterministic hash rank."""
-    from rdfshape_api_spark.functions.sampling import per_source_cap
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    return per_source_cap(docs, cap=10).select(
-        "doc_id", "source", F.col("src_rank").cast("int").alias("src_rank")
-    )
-
-
-def _q_temperature_mix(spark, sf_dir):
-    """α=0.5 temperature rebalancing over lang strata: weights derived
-    from the corpus itself via IEEE-exact ops (max/divide/sqrt/floor), so
-    the DuckDB twin recomputes the micro-weights bit-identically."""
-    from rdfshape_api_spark.functions.sampling import temperature_mix
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    return temperature_mix(docs, alpha=0.5, stratum_col="lang").select(
-        "doc_id", "lang", "weight_micro",
-        F.col("n_copy").cast("int").alias("n_copy"),
-    )
-
-
-def _q_epoch_shards(spark, sf_dir):
-    """Per-epoch deterministic shard assignment (3 epochs × 64 shards) —
-    the scale-correct 'reshuffle every epoch' (no global permutation)."""
-    from rdfshape_api_spark.functions.sampling import epoch_shards
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    return epoch_shards(docs, epochs=3, n_shards=64).select(
-        F.col("epoch").cast("int").alias("epoch"), "shard", "sort_key", "doc_id"
-    )
-
-
-def _q_sim_pca(spark, sf_dir):
-    """Distributed PCA: one-pass partial moments -> driver eigh -> map-only
-    integerized projection onto the top-4 components.  No SQL twin (the
-    eigendecomposition has no DuckDB equivalent) — rows-only check, same
-    contract tier as IVF k-means."""
-    from rdfshape_api_spark.functions.similarity import pca_fit, pca_project
-
-    from pyspark.sql import functions as F
-
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    mean, comps, _ = pca_fit(emb, k=4)
-    proj = pca_project(emb, mean, comps)
-    # Contract shape: stringify the array column so the driver's pandas
-    # canonicalizer (sort_values over every column) can hash the row.
-    return proj.select(
-        *[c for c in proj.columns if c != "proj"],
-        F.concat_ws(",", F.col("proj").cast("array<string>")).alias("proj"),
-    )
-
-
-def _q_sim_semantic_dedup(spark, sf_dir):
-    """SemDeDup-style keep/drop per vector: hyperplane-bucketed candidate
-    pairs, cosine >= 0.4 (the de-trivialized threshold, see
-    sim_embedding_near_dups), keep-the-min rule."""
-    from rdfshape_api_spark.functions.similarity import semantic_dedup
-
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    return semantic_dedup(emb, threshold=0.4, n_planes=4)
-
-
-def _q_sim_lsh_ann(spark, sf_dir):
-    from rdfshape_api_spark.functions.similarity import lsh_ann_topk
-
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    return lsh_ann_topk(emb, k=5, n_queries=10)
-
-
-def _q_sim_ivf_ann(spark, sf_dir):
-    """IVF ANN (k-means cells + n_probe search): deterministic for the
-    fixed seed but no SQL twin (k-means) — rows-only driver entry; the
-    correctness gate is the recall@5 test vs cosine_topk in
-    tests/test_functions.py."""
-    from rdfshape_api_spark.functions.similarity import ivf_ann_topk
-
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    return ivf_ann_topk(emb, k=5, n_queries=10, n_cells=8, n_probe=2)
-
-
-def _q_sim_semantic_dedup_kmeans(spark, sf_dir):
-    """SemDeDup with the k-means coarse quantizer as the blocking key
-    (cells scale with N — the corpus-scale blocking form, r5).  No SQL
-    twin (k-means) — rows-only; keep semantics pinned by pytest against
-    the hyperplane form on separated clusters."""
-    from rdfshape_api_spark.functions.similarity import semantic_dedup_kmeans
-
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    return semantic_dedup_kmeans(emb, threshold=0.4, n_cells=16, max_bucket=500)
-
-
-def _q_mm_meta(spark, sf_dir):
-    from rdfshape_api_spark.functions.multimodal import payload_metadata
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    return payload_metadata(docs)
-
-
-def _q_mm_features(spark, sf_dir):
-    """Byte-histogram features as 8 integer columns (hash-friendly: the
-    driver's canonicalizer can't sort/hash array columns, and integer
-    counts avoid float-rounding skew vs the oracle)."""
-    from rdfshape_api_spark.functions.multimodal import (
-        FEATURE_DIM,
-        attach_binary,
-        extract_features,
-    )
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    feats = extract_features(attach_binary(docs), normalize=False)
-    return feats.select(
-        "doc_id",
-        *[
-            F.element_at("features", i + 1).cast("bigint").alias(f"f{i}")
-            for i in range(FEATURE_DIM)
-        ],
-    )
-
-
-def _q_mm_frames(spark, sf_dir):
-    from rdfshape_api_spark.functions.multimodal import attach_binary, frame_sample
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    return frame_sample(attach_binary(docs.filter(F.col("doc_id") < 100)))
-
-
-def _q_mm_audio(spark, sf_dir):
-    """Audio feature plumbing: the text-byte payloads take the fake
-    unsigned-8-bit-PCM path (integer-exact energy / zero crossings); RIFF
-    payloads would hit the real stdlib WAV decoder (multimodal.decode_wav,
-    pytest-covered on generated WAVs)."""
-    from rdfshape_api_spark.functions.multimodal import attach_binary, audio_features
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    return audio_features(attach_binary(docs.filter(F.col("doc_id") < 100)))
 
 
 def _merged_triples(spark, sf_dir):
@@ -1960,158 +1505,6 @@ def _q_stream_validate(spark, sf_dir):
     )
 
 
-def _q_docs_stream_dedup(spark, sf_dir):
-    """Custom stateful streaming operator (applyInPandasWithState) driven
-    over the documents table as a bounded stream: first-seen dedup keyed
-    by content fingerprint.  One availableNow trigger = one batch, and
-    the within-trigger representative is the min sha — so the result
-    equals the batch GROUP BY, which is exactly the DuckDB oracle."""
-    from rdfshape_api_spark.streaming.stateful_dedup import stream_dedup_first_seen
-
-    doc_schema = (
-        "doc_id bigint, text string, lang string, source string, n_chars bigint"
-    )
-    stream = (
-        spark.readStream.schema(doc_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
-    keyed = stream.select(
-        F.md5("text").alias("fp"), F.col("doc_id").cast("string").alias("doc_sha256")
-    )
-    name = "docs_stream_dedup_sink"
-    q = (
-        stream_dedup_first_seen(keyed)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).select("fp", "doc_sha256", "n_seen")
-
-
-def _q_events_windowed_stream(spark, sf_dir):
-    """Structured-Streaming tumbling-window aggregation (watermark +
-    event-time windows, streaming/windowed_events.py) driven over the
-    events table as a bounded file stream; complete output mode emits
-    every window, so the result equals the batch tumbling aggregation —
-    which is exactly the DuckDB oracle."""
-    from rdfshape_api_spark.streaming.windowed_events import windowed_event_counts
-
-    ev_schema = (
-        "event_id bigint, ts timestamp, user_id bigint, "
-        "event_type string, value double, props string"
-    )
-    # events.parquet is a single file; file streams want a directory —
-    # stream the sf dir with a glob pinned to the one table
-    stream = (
-        spark.readStream.schema(ev_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    agg = windowed_event_counts(stream, window_minutes=60, watermark_minutes=120)
-    name = "events_windowed_stream_sink"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    out = spark.table(name)
-    return out.select(
-        F.date_format("window_start", "yyyy-MM-dd HH:00:00").alias("hour"),
-        "event_type",
-        F.col("n_events").cast("bigint").alias("n_events"),
-        F.round("sum_value", 4).alias("sum_value"),
-    )
-
-
-def _q_events_hourly(spark, sf_dir):
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    return (
-        ev.groupBy(
-            F.date_format(F.date_trunc("hour", "ts"), "yyyy-MM-dd HH:00:00").alias("hour"),
-            "event_type",
-        )
-        .agg(
-            F.count("*").cast("bigint").alias("n_events"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
-        )
-    )
-
-
-def _q_events_sessionize(spark, sf_dir):
-    from rdfshape_api_spark.functions.textops import sessionize
-
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    return sessionize(ev, gap_minutes=30)
-
-
-def _q_events_sessions(spark, sf_dir):
-    from pyspark.sql import Window
-
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return ev.select(
-        "user_id", "event_id", F.row_number().over(w).cast("bigint").alias("seq")
-    )
-
-
-# --- code-corpus operators over the north-rule input shape ----------------
-# (repo, path, commit, lang, content) — repository-level analytics of the
-# source-file corpus itself, complementing the per-file RDF extraction.
-
-
-def _code_docs(spark, sf_dir):
-    """Fixture docs table for the tier, spread over partitions (the fixture
-    parquet is a single file; production reads a bucketed Iceberg table)."""
-    tag = sf_tag_from_dir(sf_dir)
-    return spark.read.parquet(ensure_fixtures(tag)["docs"]).repartition(
-        32, "repo", "path"
-    )
-
-
-def _q_code_winnow_fp(spark, sf_dir):
-    """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken SIGMOD'03,
-    the MOSS sketch): min-hash of each w-window of k-gram hashes, exploded
-    to the inverted-index shape. Map-only Column/array expressions."""
-    from rdfshape_api_spark.functions.codeops import winnow_fingerprints
-
-    return winnow_fingerprints(_code_docs(spark, sf_dir))
-
-
-def _q_code_winnow_clones(spark, sf_dir):
-    """Intra-repo near-duplicate file pairs by winnowing-fingerprint
-    Jaccard (clone/vendored-copy detection). Scoped to the org0/org1
-    repos on the first 400 content chars — the head sketch keeps the
-    oracle twin tractable; the operator itself takes the full corpus."""
-    from rdfshape_api_spark.functions.codeops import winnow_near_dup_pairs
-
-    docs = _code_docs(spark, sf_dir).filter(
-        F.col("repo").startswith("org0/") | F.col("repo").startswith("org1/")
-    ).withColumn("content", F.substring("content", 1, 400))
-    return winnow_near_dup_pairs(docs, threshold=0.35, within_repo=True)
-
-
-def _q_sim_pq_ann(spark, sf_dir):
-    """IVF-PQ-style ANN: product-quantization codes (8 subspaces x 16
-    centroids = 64x compression), ADC shortlist by LUT join, exact cosine
-    re-rank of the shortlist. k-means has no SQL twin — rows-only entry
-    (recall gate in tests/test_functions.py)."""
-    from rdfshape_api_spark.functions.similarity import pq_ann_topk
-
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    return pq_ann_topk(emb, k=5, n_queries=10, rerank=50)
-
-
 def _q_social_triangles(spark, sf_dir):
     """Per-node triangle counts over the merged knows graph — the
     degree-ordered wedge join (compact-forward), O(m^1.5) wedges on any
@@ -2126,126 +1519,8 @@ def _q_social_triangles(spark, sf_dir):
     return triangle_counts(kn)
 
 
-def _q_code_winnow_lsh(spark, sf_dir):
-    """Cross-repo near-dup candidates at corpus scale: winnow sketch →
-    MinHash signature → band-bucket join (the scale path the raw
-    fingerprint join can't take — Σ bucket², not Σ df²). Same org0/org1 +
-    400-char head scope as code_winnow_clones for oracle tractability."""
-    from rdfshape_api_spark.functions.codeops import winnow_lsh_pairs
-
-    docs = _code_docs(spark, sf_dir).filter(F.col("repo").startswith("org0/"))
-    return winnow_lsh_pairs(docs, num_hashes=16, bands=2)
-
-
-def _q_code_repo_stats(spark, sf_dir):
-    from rdfshape_api_spark.functions.codeops import repo_stats
-
-    return repo_stats(_code_docs(spark, sf_dir))
-
-
-def _q_code_license_profile(spark, sf_dir):
-    """Per-repo license-family rollup (the governance gate a code-corpus
-    training pipeline filters on).  The RDF fixture corpus carries no
-    real license headers, so the entry prepends a DETERMINISTIC header
-    chosen by ``length(content) % 7`` — declared identically in the
-    DuckDB twin; what the entry exercises is the operator's own
-    detection path (SPDX tag extraction + phrase matching + rollup),
-    which sees only the augmented text."""
-    from rdfshape_api_spark.functions.codeops import repo_license_profile
-
-    docs = _code_docs(spark, sf_dir)
-    r = F.length("content") % 7
-    hdr = (
-        F.when(r == 0, F.lit("// SPDX-License-Identifier: MIT\n"))
-        .when(r == 1, F.lit("# Licensed under the Apache License, Version 2.0\n"))
-        .when(r == 2, F.lit("/* GNU General Public License */\n"))
-        .when(r == 3, F.lit("// SPDX-License-Identifier: BSD-3-Clause\n"))
-        .otherwise(F.lit(""))
-    )
-    aug = docs.withColumn("content", F.concat(hdr, F.col("content")))
-    return repo_license_profile(aug)
-
-
-def _q_code_ident_top(spark, sf_dir):
-    from rdfshape_api_spark.functions.codeops import identifier_top
-
-    return identifier_top(_code_docs(spark, sf_dir), top=10)
-
-
-# Driver-verification rotation: the driver runs the FIRST 50 queries() keys
-# per round, so entries past the window never get a CORRECTNESS row.  Keys
-# listed here are moved to the FRONT of the dict (in this order) so
-# never-verified and least-recently-verified entries get their green row.
-# Maintenance: each round, lead with (a) entries new this round, (b) entries
-# with no green row in any CORRECTNESS_r*.json, (c) entries whose last green
-# row is oldest.  r4 ordering: 4 never-verified (r3 additions), then the 17
-# LLM-pipeline entries last green in r2.
-_VERIFY_FIRST = [
-    # Tie-break hints WITHIN the never-verified class only — the rotation
-    # itself is dynamic (_driver_verified reads CORRECTNESS_r*.json at
-    # call time and floats never-verified entries to the front, r4s10).
-    # Order here: the r4 verdict's 14 never-driver-verified entries, one
-    # hash-checkable entry per code-corpus family first so the window's
-    # slots sample different subsystems; rows-only entries (k-means PCA,
-    # trained BPE, PQ — no SQL twin) last so window slots carry
-    # hash-checkable oracles.
-    "text_pack_token_ids",
-    "social_shacl_member_prop",
-    "social_triangles",
-    "code_winnow_clones",
-    "code_winnow_lsh",
-    "code_ident_top",
-    "text_pack_sequences",
-    "rdf_trig",
-    "rdf_rdfjson_roundtrip",
-    "rdf_check_datatype",
-    "text_epoch_shards",
-    "text_tfidf",
-    "sim_pca_project",
-    "text_bpe_encode",
-    "sim_pq_ann",
-]
-
-
-def _driver_verified() -> set[str]:
-    """Entries that already have a hash-green (or rows-green) row in ANY
-    driver CORRECTNESS file — read at call time so the rotation below
-    self-updates every round without manual list maintenance."""
-    import glob
-    import json
-
-    seen: set[str] = set()
-    here = os.path.dirname(os.path.abspath(__file__))
-    try:
-        for p in sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
-            with open(p) as f:
-                for name, row in json.load(f).items():
-                    if isinstance(row, dict) and not row.get("err") and (
-                        row.get("hash_match") or row.get("rows_match")
-                    ):
-                        seen.add(name)
-    except Exception:
-        pass  # rotation is an optimization; never let it break queries()
-    return seen
-
-
-def _rotate_for_verification(
-    d: dict[str, Callable[[SparkSession, str], DataFrame]],
-) -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Order the contract so the driver's 50-entry CORRECTNESS window
-    always covers never-verified entries first: within each class
-    (never-verified, then already-green), _VERIFY_FIRST acts as a manual
-    priority hint and registration order breaks ties."""
-    verified = _driver_verified()
-    hinted = [k for k in _VERIFY_FIRST if k in d]
-    ordered = hinted + [k for k in d if k not in set(hinted)]
-    out = {k: d[k] for k in ordered if k not in verified}
-    out.update((k, d[k]) for k in ordered if k in verified)
-    return out
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return _rotate_for_verification({
+    return {
         # SURVEY §2 operators (RDF engine)
         "rdf_extract_canonical": _q_rdf_extract,         # S1+S4, canonicalize
         "rdf_incremental_merge": _q_incremental_merge,   # incremental MERGE (r4s8)
@@ -2309,7 +1584,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "social_shacl_member_prop": _q_shacl_member_prop,  # §2.7 sh:property on or-members (r4s9)
         "social_shacl_node_level": _q_shacl_node_level,    # §2.7 node-shape-level or/not (r4s10)
         "social_triangles": _q_social_triangles,  # KG triangle support (r4s9)
-        "sim_pq_ann": _q_sim_pq_ann,  # PQ-ADC ANN + exact re-rank (r4s9; rows-only)
         "rdf_infer_profile": _q_infer_profile,           # §2.6 schema inference
         "rdf_rdfs_closure": _q_rdfs_closure,             # I1 RDFS entailment
         "rdf_owl_sameas": _q_owl_sameas,                 # I1 owl:sameAs merge (r5)
@@ -2332,59 +1606,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "rdf_entity_link": _q_entity_link,               # north-star entity linking
         "catalog_validate_item": _q_catalog_validate,    # §2.7 repeated-prop EachOf
         "rdf_html_extract": _q_html_extract,             # S2 HTML→RDF (RDFa/Microdata)
-        # training-data pipeline operators
-        "text_features": _q_text_features,
-        "text_redact": _q_text_redact,
-        "text_repetition": _q_text_repetition,
-        "text_quality": _q_text_quality,
-        "dedup_exact": _q_dedup_exact,
-        "dedup_bloom_incremental": _q_dedup_bloom,   # bloom ingest guard (r4s7)
-        "text_corpus_stats": _q_corpus_stats,        # mixture report (r4s7)
-        "text_bpe_encode": _q_bpe_encode,            # real BPE tokenizer (r4s7, rows-only)
-        "text_pack_token_ids": _q_pack_token_ids,    # concat-and-chunk packing (r4s7)
-        "dedup_lsh_pairs": _q_dedup_lsh,
-        "dedup_verified_pairs": _q_dedup_verified,   # est-Jaccard refine (r4s8)
-        "dedup_lsh_incremental": _q_dedup_lsh_incremental,  # batch-vs-corpus ingest (r4s8)
-        "dedup_lsh_keep": _q_dedup_lsh_keep,
-        "dedup_clusters": _q_dedup_clusters,
-        "dedup_ngram_jaccard": _q_dedup_ngram,
-        "text_decontaminate": _q_text_decontaminate,
-        "text_span_dedup": _q_text_span_dedup,
-        "dedup_simhash_pairs": _q_dedup_simhash,
-        "sim_cosine_topk": _q_sim_topk,
-        "sim_embedding_near_dups": _q_sim_near_dups,
-        "sim_lsh_ann": _q_sim_lsh_ann,
-        "sim_ivf_ann": _q_sim_ivf_ann,                   # IVF (rows-only, r5)
-        "sim_semantic_dedup_kmeans": _q_sim_semantic_dedup_kmeans,  # r5, rows-only
-        "sim_semantic_dedup": _q_sim_semantic_dedup,
-        "sim_pca_project": _q_sim_pca,
-        "text_top_ngrams": _q_text_top_ngrams,
-        "text_tfidf": _q_text_tfidf,
-        "text_hash_sample": _q_text_hash_sample,
-        "text_source_cap": _q_text_source_cap,           # per-source quota
-        "text_leakage_split": _q_text_leakage_split,  # cluster-aware split (r4)
-        "text_temperature_mix": _q_temperature_mix,      # α-tempered rebalance (r4)
-        "text_epoch_shards": _q_epoch_shards,            # per-epoch shard shuffle (r4)
-        "text_lm_score": _q_text_lm_score,
-        "text_normalize": _q_text_normalize,
-        "text_pack_sequences": _q_text_pack,
-        "mm_payload_meta": _q_mm_meta,
-        "mm_features": _q_mm_features,
-        "mm_frame_samples": _q_mm_frames,
-        "mm_audio_features": _q_mm_audio,
-        "events_hourly": _q_events_hourly,
-        "events_windowed_stream": _q_events_windowed_stream,  # T1+ watermarked windows
-        "docs_stream_dedup": _q_docs_stream_dedup,       # stateful streaming dedup (r4)
-        "events_sessions": _q_events_sessions,
-        "events_sessionize_gap": _q_events_sessionize,
-        # code-corpus operators over the north-rule input shape (r4s9)
-        "code_winnow_fp": _q_code_winnow_fp,
-        "code_winnow_clones": _q_code_winnow_clones,
-        "code_winnow_lsh": _q_code_winnow_lsh,
-        "code_repo_stats": _q_code_repo_stats,
-        "code_license_profile": _q_code_license_profile,
-        "code_ident_top": _q_code_ident_top,
-    })
+    }
 
 
 # ---------------------------------------------------------------------------
@@ -3483,875 +2705,6 @@ def oracle_sql() -> dict[str, str]:
             LEFT JOIN bad b ON b.doc_sha256 = f.doc_sha256 AND b.node = f.node
         """,
         "rdf_html_extract": f"SELECT DISTINCT * FROM '{_WEB_TRIPLES}'",
-        "text_features": """
-            SELECT doc_id,
-                   len(regexp_split_to_array(trim(text), '\\s+'))::BIGINT AS n_tokens,
-                   len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]'))::BIGINT AS n_bpe_tokens,
-                   CASE
-                     WHEN (len(regexp_split_to_array(text, '\\bthe\\b'))-1
-                          +len(regexp_split_to_array(text, '\\ba\\b'))-1
-                          +len(regexp_split_to_array(text, '\\bof\\b'))-1) >=
-                          greatest(
-                            len(regexp_split_to_array(text, '\\bthe\\b'))-1+len(regexp_split_to_array(text, '\\ba\\b'))-1+len(regexp_split_to_array(text, '\\bof\\b'))-1,
-                            len(regexp_split_to_array(text, '\\bel\\b'))-1+len(regexp_split_to_array(text, '\\bla\\b'))-1+len(regexp_split_to_array(text, '\\bde\\b'))-1,
-                            len(regexp_split_to_array(text, '\\bder\\b'))-1+len(regexp_split_to_array(text, '\\bdie\\b'))-1+len(regexp_split_to_array(text, '\\bdas\\b'))-1,
-                            len(regexp_split_to_array(text, '\\ble\\b'))-1+len(regexp_split_to_array(text, '\\bles\\b'))-1+len(regexp_split_to_array(text, '\\bune\\b'))-1)
-                      AND greatest(
-                            len(regexp_split_to_array(text, '\\bthe\\b'))-1+len(regexp_split_to_array(text, '\\ba\\b'))-1+len(regexp_split_to_array(text, '\\bof\\b'))-1,
-                            len(regexp_split_to_array(text, '\\bel\\b'))-1+len(regexp_split_to_array(text, '\\bla\\b'))-1+len(regexp_split_to_array(text, '\\bde\\b'))-1,
-                            len(regexp_split_to_array(text, '\\bder\\b'))-1+len(regexp_split_to_array(text, '\\bdie\\b'))-1+len(regexp_split_to_array(text, '\\bdas\\b'))-1,
-                            len(regexp_split_to_array(text, '\\ble\\b'))-1+len(regexp_split_to_array(text, '\\bles\\b'))-1+len(regexp_split_to_array(text, '\\bune\\b'))-1) > 0
-                     THEN 'en'
-                     WHEN (len(regexp_split_to_array(text, '\\bel\\b'))-1
-                          +len(regexp_split_to_array(text, '\\bla\\b'))-1
-                          +len(regexp_split_to_array(text, '\\bde\\b'))-1) >=
-                          greatest(
-                            len(regexp_split_to_array(text, '\\bel\\b'))-1+len(regexp_split_to_array(text, '\\bla\\b'))-1+len(regexp_split_to_array(text, '\\bde\\b'))-1,
-                            len(regexp_split_to_array(text, '\\bder\\b'))-1+len(regexp_split_to_array(text, '\\bdie\\b'))-1+len(regexp_split_to_array(text, '\\bdas\\b'))-1,
-                            len(regexp_split_to_array(text, '\\ble\\b'))-1+len(regexp_split_to_array(text, '\\bles\\b'))-1+len(regexp_split_to_array(text, '\\bune\\b'))-1)
-                      AND (len(regexp_split_to_array(text, '\\bel\\b'))-1
-                          +len(regexp_split_to_array(text, '\\bla\\b'))-1
-                          +len(regexp_split_to_array(text, '\\bde\\b'))-1) > 0
-                     THEN 'es'
-                     WHEN (len(regexp_split_to_array(text, '\\bder\\b'))-1
-                          +len(regexp_split_to_array(text, '\\bdie\\b'))-1
-                          +len(regexp_split_to_array(text, '\\bdas\\b'))-1) >=
-                          greatest(
-                            len(regexp_split_to_array(text, '\\bder\\b'))-1+len(regexp_split_to_array(text, '\\bdie\\b'))-1+len(regexp_split_to_array(text, '\\bdas\\b'))-1,
-                            len(regexp_split_to_array(text, '\\ble\\b'))-1+len(regexp_split_to_array(text, '\\bles\\b'))-1+len(regexp_split_to_array(text, '\\bune\\b'))-1)
-                      AND (len(regexp_split_to_array(text, '\\bder\\b'))-1
-                          +len(regexp_split_to_array(text, '\\bdie\\b'))-1
-                          +len(regexp_split_to_array(text, '\\bdas\\b'))-1) > 0
-                     THEN 'de'
-                     WHEN (len(regexp_split_to_array(text, '\\ble\\b'))-1
-                          +len(regexp_split_to_array(text, '\\bles\\b'))-1
-                          +len(regexp_split_to_array(text, '\\bune\\b'))-1) > 0
-                     THEN 'fr'
-                     ELSE 'unknown'
-                   END AS lang_pred,
-                   round(
-                     0.4 * least((n_chars::DOUBLE / len(regexp_split_to_array(trim(text), '\\s+'))) / 8.0, 1.0)
-                   + 0.3 * least(((len(regexp_split_to_array(text, '\\bthe\\b'))-1
-                                  +len(regexp_split_to_array(text, '\\ba\\b'))-1
-                                  +len(regexp_split_to_array(text, '\\bof\\b'))-1
-                                  +len(regexp_split_to_array(text, '\\band\\b'))-1
-                                  +len(regexp_split_to_array(text, '\\bto\\b'))-1
-                                  +len(regexp_split_to_array(text, '\\bin\\b'))-1)::DOUBLE
-                                  / len(regexp_split_to_array(trim(text), '\\s+'))) * 5.0, 1.0)
-                   + 0.3 * least(n_chars::DOUBLE / 500.0, 1.0), 4) AS quality,
-                   md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fp
-            FROM documents
-        """,
-        "text_repetition": r"""
-            -- Gopher-style repetition signals: integer numerators only
-            -- (floats would hash differently across engines); bigram
-            -- frequencies via list functions, mirroring the Spark
-            -- zip_with/transform expression exactly
-            WITH d AS (
-              SELECT doc_id, coalesce(text, '') AS text FROM documents
-            ), p AS (
-              SELECT doc_id,
-                list_filter(string_split(text, chr(10)), x -> x <> '') AS lines,
-                list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x <> '') AS words
-              FROM d
-            ), g AS (
-              SELECT doc_id, lines, words,
-                list_transform(range(1, greatest(len(words), 1)),
-                               i -> words[i] || ' ' || words[i+1]) AS grams
-              FROM p
-            )
-            SELECT doc_id,
-              len(lines)::BIGINT AS n_lines,
-              (len(lines) - len(list_distinct(lines)))::BIGINT AS n_dup_lines,
-              (length(array_to_string(lines, ''))
-               - length(array_to_string(list_distinct(lines), '')))::BIGINT AS n_dup_line_chars,
-              len(words)::BIGINT AS n_words,
-              (len(words) - len(list_distinct(words)))::BIGINT AS n_dup_words,
-              coalesce(list_max(list_transform(list_distinct(grams),
-                       gg -> len(list_filter(grams, x -> x = gg)))), 0)::BIGINT AS top_bigram_count
-            FROM g
-        """,
-        "text_quality": r"""
-            -- C4/Gopher-style keep/drop: floor() is the portable
-            -- double->int path (Spark casts truncate, DuckDB casts round)
-            WITH p AS (
-              SELECT doc_id,
-                list_filter(regexp_split_to_array(trim(coalesce(text,'')), '\s+'),
-                            x -> x <> '') AS words
-              FROM documents
-            ), m AS (
-              SELECT doc_id,
-                len(words)::BIGINT AS n_words,
-                CASE WHEN len(words) > 0
-                     THEN CAST(floor(length(array_to_string(words,'')) * 100.0 / len(words)) AS BIGINT)
-                     ELSE 0 END AS mean_word_len_x100,
-                CASE WHEN len(words) > 0
-                     THEN CAST(floor((len(words) - len(list_distinct(words))) * 100.0 / len(words)) AS BIGINT)
-                     ELSE 0 END AS dup_word_pct
-              FROM p
-            ), r AS (
-              SELECT doc_id, n_words, mean_word_len_x100, dup_word_pct,
-                list_filter([
-                  CASE WHEN n_words < 20 THEN 'too_few_words' END,
-                  CASE WHEN n_words > 100000 THEN 'too_many_words' END,
-                  CASE WHEN mean_word_len_x100 < 200 THEN 'mean_word_too_short' END,
-                  CASE WHEN mean_word_len_x100 > 1200 THEN 'mean_word_too_long' END,
-                  CASE WHEN dup_word_pct > 60 THEN 'repetitive' END
-                ], x -> x IS NOT NULL) AS reasons
-              FROM m
-            )
-            SELECT doc_id, n_words, mean_word_len_x100, dup_word_pct,
-                   len(reasons) = 0 AS keep,
-                   coalesce(array_to_string(reasons, ','), '') AS drop_reasons
-            FROM r
-        """,
-        "text_redact": r"""
-            -- identical RE2-safe patterns as functions/textops.py redact_pii;
-            -- IPv4 replaced BEFORE phone (phone pattern matches inside
-            -- digit-grouped dotted IPs), counts from each step's input
-            WITH s1 AS (
-              SELECT doc_id, text,
-                regexp_replace(text,
-                  '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g')
-                AS after_email
-              FROM documents
-            ), s2 AS (
-              SELECT doc_id, text, after_email,
-                regexp_replace(after_email,
-                  '[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}', '<IP>', 'g')
-                AS after_ip
-              FROM s1
-            )
-            SELECT doc_id,
-                   regexp_replace(after_ip,
-                     '\+?[0-9]{1,3}[-. ][0-9]{2,4}[-. ][0-9]{3,6}', '<PHONE>', 'g')
-                     AS clean_text,
-                   (len(regexp_extract_all(text,
-                      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))
-                    + len(regexp_extract_all(after_email,
-                      '[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}'))
-                    + len(regexp_extract_all(after_ip,
-                      '\+?[0-9]{1,3}[-. ][0-9]{2,4}[-. ][0-9]{3,6}')))::BIGINT
-                     AS n_redactions
-            FROM s2
-        """,
-        "dedup_exact": """
-            -- normalized-80-char-prefix fingerprint (full-text exact dups
-            -- are absent at sf0.01; prefix groups make the check non-trivial)
-            SELECT md5(substring(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), 1, 80)) AS fp,
-                   count(*)::BIGINT AS n_docs, min(doc_id) AS min_doc_id
-            FROM documents GROUP BY 1 HAVING count(*) > 1
-        """,
-        "dedup_bloom_incremental": """
-            -- bloom membership by relational division: a doc is maybe_dup
-            -- iff every one of its k=5 distinct bit positions is lit by
-            -- some corpus key (m = 2^20; same md5-derived positions)
-            WITH keyed AS (
-              SELECT doc_id,
-                     md5(substring(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), 1, 80)) AS fp
-              FROM documents
-            ),
-            cpos AS (
-              SELECT DISTINCT
-                     CAST('0x' || substring(md5('bloom:' || CAST(i AS VARCHAR) || ':' || fp), 1, 8) AS BIGINT) % 1048576 AS pos
-              FROM (SELECT DISTINCT fp FROM keyed WHERE doc_id % 10 < 8), range(5) r(i)
-            ),
-            ipos AS (
-              SELECT DISTINCT doc_id, fp,
-                     CAST('0x' || substring(md5('bloom:' || CAST(i AS VARCHAR) || ':' || fp), 1, 8) AS BIGINT) % 1048576 AS pos
-              FROM keyed, range(5) r(i) WHERE doc_id % 10 >= 8
-            )
-            SELECT i.doc_id, i.fp,
-                   (count(*) = count(c.pos)) AS maybe_dup
-            FROM ipos i LEFT JOIN cpos c ON i.pos = c.pos
-            GROUP BY i.doc_id, i.fp
-        """,
-        "text_corpus_stats": """
-            -- mixture report: counts + exact-integer ppm shares
-            WITH per AS (
-              SELECT lang, source,
-                     count(*)::BIGINT AS n_docs,
-                     sum(len(regexp_split_to_array(trim(text), '\\s+')))::BIGINT AS n_tokens,
-                     sum(length(text))::BIGINT AS n_chars
-              FROM documents GROUP BY lang, source
-            ), tot AS (
-              SELECT sum(n_docs) AS td, sum(n_tokens) AS tt FROM per
-            )
-            SELECT lang, source, n_docs, n_tokens, n_chars,
-                   ((n_docs * 1000000) // td)::BIGINT AS docs_ppm,
-                   ((n_tokens * 1000000) // tt)::BIGINT AS tokens_ppm
-            FROM per, tot
-        """,
-        "text_pack_token_ids": """
-            -- per-token twin of the streaming chunker: global order within
-            -- shard = (doc_id, word ordinal); sequences = (rn-1)//32 groups;
-            -- trailing partials dropped (HAVING = seq_len)
-            WITH split AS (
-              SELECT (doc_id % 8)::INT AS shard, doc_id,
-                     regexp_split_to_array(lower(trim(text)), '\\s+') AS arr
-              FROM documents
-            ),
-            toks AS (
-              SELECT shard, doc_id,
-                     unnest(arr) AS w, generate_subscripts(arr, 1) AS ord
-              FROM split
-            ),
-            ranked AS (
-              SELECT shard,
-                     CAST(CAST('0x' || substring(md5(w), 1, 7) AS BIGINT) AS INT) AS tid,
-                     row_number() OVER (PARTITION BY shard ORDER BY doc_id, ord) AS rn
-              FROM toks
-            )
-            SELECT shard, ((rn - 1) // 32)::BIGINT AS seq_idx,
-                   array_to_string(list(tid ORDER BY rn), ',') AS token_ids
-            FROM ranked
-            GROUP BY shard, ((rn - 1) // 32)
-            HAVING count(*) = 32
-        """,
-        "dedup_lsh_pairs": """
-            WITH sigs AS (
-              SELECT doc_id,
-                     list_transform(range(0, 16), i ->
-                       list_min(list_transform(
-                         list_distinct(regexp_split_to_array(lower(trim(text)), '\\s+')),
-                         w -> md5(i::VARCHAR || ':' || w)))) AS sig
-              FROM documents
-            ), bands AS (
-              SELECT doc_id, b AS band,
-                     md5(array_to_string(list_slice(sig, b*4+1, b*4+4), '|')) AS band_key
-              FROM sigs, unnest(range(0, 4)) AS t(b)
-            )
-            SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM bands a JOIN bands b
-              ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-        """,
-        "dedup_lsh_incremental": """
-            -- batch (doc_id % 4 = 0) vs corpus (rest): drop on any corpus
-            -- bucket collision OR smaller-id batch bucket-mate; dup_of =
-            -- smallest colliding doc, NULL when kept
-            WITH sigs AS (
-              SELECT doc_id,
-                     list_transform(range(0, 16), i ->
-                       list_min(list_transform(
-                         list_distinct(regexp_split_to_array(lower(trim(text)), '\\s+')),
-                         w -> md5(i::VARCHAR || ':' || w)))) AS sig
-              FROM documents
-            ), bands AS (
-              SELECT doc_id, b AS band,
-                     md5(array_to_string(list_slice(sig, b*4+1, b*4+4), '|')) AS band_key
-              FROM sigs, unnest(range(0, 4)) AS t(b)
-            ), batchb AS (
-              SELECT * FROM bands WHERE doc_id % 4 = 0
-            ), cmin AS (
-              SELECT band, band_key, min(doc_id) AS cmin
-              FROM bands WHERE doc_id % 4 <> 0 GROUP BY 1, 2
-            ), bmin AS (
-              SELECT band, band_key, min(doc_id) AS bmin
-              FROM batchb GROUP BY 1, 2
-            ), per AS (
-              SELECT b.doc_id,
-                     min(c.cmin) AS corpus_dup, min(m.bmin) AS batch_rep
-              FROM batchb b
-              LEFT JOIN cmin c ON b.band = c.band AND b.band_key = c.band_key
-              JOIN bmin m ON b.band = m.band AND b.band_key = m.band_key
-              GROUP BY 1
-            )
-            SELECT doc_id,
-                   (corpus_dup IS NULL AND batch_rep = doc_id) AS keep,
-                   CASE
-                     WHEN corpus_dup IS NOT NULL AND batch_rep <> doc_id
-                       THEN least(corpus_dup, batch_rep)
-                     WHEN corpus_dup IS NOT NULL THEN corpus_dup
-                     WHEN batch_rep <> doc_id THEN batch_rep
-                   END AS dup_of
-            FROM per
-        """,
-        "dedup_verified_pairs": """
-            -- LSH candidates refined by estimated Jaccard: fraction of
-            -- equal minhash slots; n_eq >= 8 == est_jaccard >= 0.5 (exact)
-            WITH sigs AS (
-              SELECT doc_id,
-                     list_transform(range(0, 16), i ->
-                       list_min(list_transform(
-                         list_distinct(regexp_split_to_array(lower(trim(text)), '\\s+')),
-                         w -> md5(i::VARCHAR || ':' || w)))) AS sig
-              FROM documents
-            ), bands AS (
-              SELECT doc_id, b AS band,
-                     md5(array_to_string(list_slice(sig, b*4+1, b*4+4), '|')) AS band_key
-              FROM sigs, unnest(range(0, 4)) AS t(b)
-            ), pairs AS (
-              SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-              FROM bands a JOIN bands b
-                ON a.band = b.band AND a.band_key = b.band_key
-               AND a.doc_id < b.doc_id
-            ), scored AS (
-              SELECT p.doc_a, p.doc_b,
-                     CAST(len(list_filter(range(1, 17),
-                           i -> sa.sig[i] = sb.sig[i])) AS INTEGER) AS n_eq
-              FROM pairs p
-              JOIN sigs sa ON sa.doc_id = p.doc_a
-              JOIN sigs sb ON sb.doc_id = p.doc_b
-            )
-            SELECT doc_a, doc_b, n_eq,
-                   CAST(n_eq AS DOUBLE) / 16 AS est_jaccard
-            FROM scored
-            WHERE n_eq >= 8
-        """,
-        "dedup_lsh_keep": """
-            WITH sigs AS (
-              SELECT doc_id,
-                     list_transform(range(0, 16), i ->
-                       list_min(list_transform(
-                         list_distinct(regexp_split_to_array(lower(trim(text)), '\\s+')),
-                         w -> md5(i::VARCHAR || ':' || w)))) AS sig
-              FROM documents
-            ), bands AS (
-              SELECT doc_id, b AS band,
-                     md5(array_to_string(list_slice(sig, b*4+1, b*4+4), '|')) AS band_key
-              FROM sigs, unnest(range(0, 4)) AS t(b)
-            ), bmin AS (
-              SELECT band, band_key, min(doc_id) AS bmin
-              FROM bands GROUP BY 1, 2
-            )
-            SELECT b.doc_id, min(m.bmin) AS cluster_rep,
-                   (b.doc_id = min(m.bmin)) AS keep
-            FROM bands b JOIN bmin m ON b.band = m.band AND b.band_key = m.band_key
-            GROUP BY b.doc_id
-        """,
-        "text_leakage_split": """
-            -- cluster-aware split: component = min doc_id of the
-            -- normalized-prefix exact-dup family (singletons: own doc_id),
-            -- md5 bucket into cumulative 96/2/2 ranges
-            WITH fp AS (
-              SELECT doc_id,
-                     md5(substring(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), 1, 80)) AS fp
-              FROM documents
-            ), groups AS (
-              SELECT fp, min(doc_id) AS component
-              FROM fp GROUP BY 1 HAVING count(*) > 1
-            ), keyed AS (
-              SELECT f.doc_id, COALESCE(g.component, f.doc_id) AS split_key
-              FROM fp f LEFT JOIN groups g ON g.fp = f.fp
-            )
-            SELECT doc_id, split_key,
-                   CASE WHEN bucket < 960000 THEN 'train'
-                        WHEN bucket < 980000 THEN 'val'
-                        ELSE 'test' END AS split
-            FROM (
-              SELECT doc_id, split_key,
-                     CAST('0x' || substring(md5('split:v1:' || split_key), 1, 8)
-                          AS BIGINT) % 1000000 AS bucket
-              FROM keyed
-            )
-        """,
-        "dedup_clusters": """
-            WITH RECURSIVE sigs AS (
-              SELECT doc_id,
-                     list_transform(range(0, 16), i ->
-                       list_min(list_transform(
-                         list_distinct(regexp_split_to_array(lower(trim(text)), '\\s+')),
-                         w -> md5(i::VARCHAR || ':' || w)))) AS sig
-              FROM documents
-            ), bands AS (
-              SELECT doc_id, b AS band,
-                     md5(array_to_string(list_slice(sig, b*4+1, b*4+4), '|')) AS band_key
-              FROM sigs, unnest(range(0, 4)) AS t(b)
-            ), pairs AS (
-              SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-              FROM bands a JOIN bands b
-                ON a.band = b.band AND a.band_key = b.band_key
-               AND a.doc_id < b.doc_id
-            ), edges AS (
-              SELECT doc_a AS src, doc_b AS dst FROM pairs
-              UNION
-              SELECT doc_b AS src, doc_a AS dst FROM pairs
-            ), reach(node, lbl) AS (
-              SELECT src, src FROM edges
-              UNION
-              SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node
-            )
-            SELECT node AS doc_id, MIN(lbl) AS component
-            FROM reach GROUP BY node
-        """,
-        "dedup_ngram_jaccard": """
-            WITH toks AS (
-              SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS ws
-              FROM documents
-            ), sh AS (
-              SELECT doc_id, unnest(
-                CASE WHEN len(ws) >= 2
-                     THEN list_distinct(list_transform(range(0, len(ws)-1),
-                              i -> array_to_string(list_slice(ws, i+1, i+2), ' ')))
-                     ELSE list_distinct(ws) END) AS shingle
-              FROM toks
-            ), sizes AS (
-              SELECT doc_id, count(*)::BIGINT AS n_sh FROM sh GROUP BY doc_id
-            ), inter AS (
-              SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*)::BIGINT AS n_inter
-              FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-              GROUP BY 1, 2
-            )
-            SELECT doc_a, doc_b,
-                   round(n_inter::DOUBLE / (sa.n_sh + sb.n_sh - n_inter), 4) AS jaccard
-            FROM inter
-            JOIN sizes sa ON sa.doc_id = doc_a
-            JOIN sizes sb ON sb.doc_id = doc_b
-            WHERE n_inter::DOUBLE / (sa.n_sh + sb.n_sh - n_inter) >= 0.5
-        """,
-        "text_decontaminate": """
-            -- benchmark = deterministic corpus slice (doc_id % 97 = 0);
-            -- trigram fallback to distinct words for docs shorter than n
-            -- mirrors ngram_shingles
-            WITH toks AS (
-              SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS ws
-              FROM documents
-            ), sh AS (
-              SELECT doc_id, unnest(
-                CASE WHEN len(ws) >= 3
-                     THEN list_distinct(list_transform(range(0, len(ws)-2),
-                              i -> array_to_string(list_slice(ws, i+1, i+3), ' ')))
-                     ELSE list_distinct(ws) END) AS ngram
-              FROM toks
-            ), bench AS (
-              SELECT DISTINCT ngram FROM sh WHERE doc_id % 97 = 0
-            )
-            SELECT doc_id, count(*)::BIGINT AS n_hit_ngrams
-            FROM sh JOIN bench USING (ngram)
-            GROUP BY doc_id
-        """,
-        "text_span_dedup": """
-            -- C4-style duplicate-span removal, 3-word non-overlapping
-            -- chunks, df counted over distinct docs; empty spans never
-            -- count and are always kept; string_agg of zero kept rows is
-            -- NULL in DuckDB vs '' in Spark -> coalesce
-            WITH toks AS (
-              SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS ws
-              FROM documents
-            ), spans AS (
-              SELECT doc_id,
-                     unnest(range(0, (len(ws)+2)//3)) AS pos,
-                     unnest(list_transform(range(0, (len(ws)+2)//3),
-                         i -> array_to_string(list_slice(ws, i*3+1, i*3+3), ' '))) AS span
-              FROM toks
-            ), dup AS (
-              SELECT span AS k FROM spans WHERE trim(span) <> ''
-              GROUP BY span HAVING count(DISTINCT doc_id) >= 2
-            )
-            SELECT doc_id,
-                   coalesce(string_agg(CASE WHEN d.k IS NULL THEN span END,
-                                       ' ' ORDER BY pos), '') AS clean_text,
-                   count(*)::BIGINT AS n_spans,
-                   sum(CASE WHEN d.k IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-                       AS n_spans_dropped
-            FROM spans LEFT JOIN dup d ON d.k = span
-            GROUP BY doc_id
-        """,
-        "dedup_simhash_pairs": """
-            -- portable simhash twin: same md5-derived 64-bit token hash
-            -- (hi = first 8 hex chars, lo = next 8), same bit-majority,
-            -- same 4x16-bit band blocking as functions/dedup.py:simhash64
-            WITH toks AS (
-              SELECT doc_id,
-                     unnest(list_distinct(
-                       regexp_split_to_array(lower(trim(text)), '\\s+'))) AS w
-              FROM documents
-            ), h AS (
-              SELECT doc_id,
-                     CAST('0x' || substring(md5(w), 1, 8) AS BIGINT) AS hi,
-                     CAST('0x' || substring(md5(w), 9, 8) AS BIGINT) AS lo
-              FROM toks
-            ), votes AS (
-              SELECT doc_id, b,
-                     sum(CASE WHEN ((CASE WHEN b < 32 THEN lo >> b
-                                         ELSE hi >> (b - 32) END) & 1) = 1
-                              THEN 1 ELSE -1 END) AS v
-              FROM h, unnest(range(0, 64)) AS t(b)
-              GROUP BY 1, 2
-            ), bands AS (
-              SELECT doc_id, b // 16 AS band,
-                     sum(CASE WHEN v > 0 THEN 1 ELSE 0 END << (b % 16)) AS band_val
-              FROM votes GROUP BY 1, 2
-            )
-            SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM bands a JOIN bands b
-              ON a.band = b.band AND a.band_val = b.band_val AND a.doc_id < b.doc_id
-        """,
-        "sim_lsh_ann": """
-            -- hyperplane components are md5-derived (similarity.py:_plane_component)
-            -- so the oracle recomputes identical sign-bit buckets
-            WITH sig AS (
-              SELECT vec_id, embedding,
-                array_to_string(list_transform(range(0, 8), p ->
-                  CASE WHEN list_dot_product(embedding::DOUBLE[],
-                    list_transform(range(0, len(embedding)), i ->
-                      (CAST('0x' || substring(md5('plane' || p || ':' || i), 1, 8)
-                            AS BIGINT)::DOUBLE / 4294967295.0) - 0.5)) > 0
-                  THEN '1' ELSE '0' END), '') AS bucket
-              FROM embeddings
-            ), q AS (
-              SELECT vec_id AS query_id, embedding AS q_emb, bucket
-              FROM sig WHERE vec_id < 10
-            ), scored AS (
-              SELECT q.query_id, e.vec_id AS neighbor_id,
-                     list_dot_product(q.q_emb::DOUBLE[], e.embedding::DOUBLE[])
-                       / (sqrt(list_dot_product(q.q_emb::DOUBLE[], q.q_emb::DOUBLE[]))
-                          * sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[]))) AS score
-              FROM q JOIN sig e ON e.bucket = q.bucket AND e.vec_id <> q.query_id
-            )
-            SELECT query_id, rank, neighbor_id FROM (
-              SELECT query_id, neighbor_id,
-                     row_number() OVER (PARTITION BY query_id
-                                        ORDER BY score DESC, neighbor_id ASC)::BIGINT AS rank
-              FROM scored)
-            WHERE rank <= 5
-        """,
-        "text_pack_sequences": """
-            -- contiguous token-budget packing: shard = doc_id % 16,
-            -- bin = floor(shard-local running token count before this doc / 64)
-            WITH d AS (
-              SELECT doc_id, CAST(doc_id % 16 AS INTEGER) AS shard,
-                     len(regexp_split_to_array(trim(text), '\\s+'))::BIGINT AS n_tokens
-              FROM documents
-            )
-            SELECT doc_id, shard,
-                   CAST(floor(coalesce(sum(n_tokens) OVER (
-                        PARTITION BY shard ORDER BY doc_id
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                        / 64) AS BIGINT) AS bin_id,
-                   n_tokens
-            FROM d
-        """,
-        "text_normalize": """
-            -- NFC + control strip; dedup key = md5 of the folded form
-            -- (lower, accents stripped, digits->0, punct dropped, ws
-            -- collapsed) — explicit ws classes match the Java regex side
-            WITH n AS (
-              SELECT doc_id,
-                     nfc_normalize(text) AS nt,
-                     regexp_replace(nfc_normalize(text),
-                                    '[\\x00-\\x08\\x0b-\\x1f\\x7f]', '', 'g') AS clean,
-                     strip_accents(lower(nfc_normalize(text))) AS folded
-              FROM documents
-            )
-            SELECT doc_id,
-                   clean AS norm_text,
-                   md5(trim(regexp_replace(regexp_replace(regexp_replace(
-                       folded, '[0-9]', '0', 'g'),
-                       '[^a-z0-9 \t\n\r]', '', 'g'),
-                       '[ \t\n\r]+', ' ', 'g'))) AS dedup_key,
-                   (clean <> nt) AS had_control_chars
-            FROM n
-        """,
-        "text_lm_score": """
-            -- corpus-empirical unigram LM: avg ln(count(w)/total) per doc,
-            -- floor-scaled to an integer bucket (portable double->int)
-            WITH tf AS (
-              SELECT doc_id,
-                     unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS w
-              FROM documents
-            ), toks AS (
-              SELECT doc_id, w FROM tf WHERE w <> ''
-            ), counts AS (
-              SELECT w, count(*)::DOUBLE AS c FROM toks GROUP BY w
-            ), tot AS (
-              SELECT sum(c) AS tot FROM counts
-            )
-            SELECT doc_id, count(*)::BIGINT AS n_words,
-                   CAST(floor(avg(ln(c / tot)) * 100) AS BIGINT) AS lm_bucket
-            FROM toks JOIN counts USING (w), tot
-            GROUP BY doc_id
-        """,
-        "text_top_ngrams": """
-            -- heavy-hitter bigrams: document frequency >= 5% of docs;
-            -- parallel unnests zip (word_i, position_i) so the self-join
-            -- on i+1 rebuilds in-order bigrams
-            WITH arr AS (
-              SELECT doc_id,
-                     list_filter(regexp_split_to_array(lower(trim(coalesce(text, ''))),
-                                 '\\s+'), x -> x <> '') AS ws
-              FROM documents
-            ), tok AS (
-              SELECT doc_id, unnest(ws) AS w,
-                     unnest(range(1, len(ws) + 1)) AS i
-              FROM arr
-            ), dg AS (
-              SELECT DISTINCT a.doc_id, a.w || ' ' || b.w AS gram
-              FROM tok a JOIN tok b ON b.doc_id = a.doc_id AND b.i = a.i + 1
-            ), n AS (SELECT count(*)::DOUBLE AS n_docs FROM documents)
-            SELECT gram, count(*)::BIGINT AS df
-            FROM dg, n GROUP BY gram, n.n_docs
-            HAVING count(*) >= ceil(0.05 * n_docs)
-        """,
-        "text_tfidf": """
-            -- top-5 terms per doc by tf*ln(N/df); score integerized to
-            -- micro units on BOTH engines so ranking and hashing agree
-            WITH toks AS (
-              SELECT doc_id,
-                     unnest(regexp_split_to_array(lower(trim(coalesce(text, ''))),
-                            '\\s+')) AS term
-              FROM documents
-            ), tf AS (
-              SELECT doc_id, term, count(*)::BIGINT AS tf
-              FROM toks WHERE term <> '' GROUP BY doc_id, term
-            ), dfx AS (
-              SELECT term, count(*)::BIGINT AS df FROM tf GROUP BY term
-            ), n AS (
-              SELECT count(DISTINCT doc_id)::DOUBLE AS n_docs FROM tf
-            ), scored AS (
-              SELECT tf.doc_id, tf.term, tf.tf, dfx.df,
-                     CAST(round(tf.tf * ln(n.n_docs / dfx.df) * 1e6, 0)
-                          AS BIGINT) AS score_micro
-              FROM tf JOIN dfx USING (term), n
-            )
-            SELECT doc_id, term, tf, df, score_micro, rank FROM (
-              SELECT *, row_number() OVER (
-                       PARTITION BY doc_id
-                       ORDER BY score_micro DESC, term ASC)::BIGINT AS rank
-              FROM scored
-            ) WHERE rank <= 5
-        """,
-        "text_source_cap": """
-            -- per-source quota: hash-rank within source, first 10 survive
-            SELECT doc_id, source, src_rank FROM (
-              SELECT doc_id, source,
-                     row_number() OVER (
-                       PARTITION BY source
-                       ORDER BY md5('cap:' || CAST(doc_id AS VARCHAR)) ASC,
-                                doc_id ASC)::INT AS src_rank
-              FROM documents
-            ) WHERE src_rank <= 10
-        """,
-        "text_hash_sample": """
-            -- deterministic corpus-mixing sample: bucket = first 8 md5 hex
-            -- chars of 'mix:<doc_id>' mod 1e6; full copies from the weight's
-            -- integer part, one more when bucket < frac(weight)*1e6
-            WITH w AS (
-              SELECT doc_id, lang,
-                     CAST('0x' || substring(md5('mix:' || doc_id), 1, 8)
-                          AS BIGINT) % 1000000 AS bucket,
-                     CASE lang WHEN 'en' THEN 0.5 WHEN 'es' THEN 2.25
-                               WHEN 'de' THEN 1.0 END AS wt
-              FROM documents
-            ), n AS (
-              SELECT doc_id, lang,
-                     CAST(floor(wt) AS INTEGER)
-                     + CASE WHEN bucket < CAST((wt - floor(wt)) * 1000000 AS BIGINT)
-                            THEN 1 ELSE 0 END AS n_copies
-              FROM w WHERE wt IS NOT NULL
-            )
-            SELECT doc_id, lang, CAST(unnest(range(0, n_copies)) AS INTEGER) AS n_copy
-            FROM n WHERE n_copies > 0
-        """,
-        "text_temperature_mix": """
-            -- α=0.5 temperature rebalance: w_l = sqrt(n_max/n_l), micro-
-            -- integerized; copy decision = hash_sample mechanism with
-            -- salt 'tmix'.  Every arithmetic step is IEEE-correctly-
-            -- rounded (max, divide, sqrt, floor) so the micro weight is
-            -- bit-identical across engines.
-            WITH c AS (
-              SELECT lang, count(*) AS n FROM documents GROUP BY lang
-            ), w AS (
-              SELECT lang,
-                     CAST(floor(sqrt(CAST((SELECT max(n) FROM c) AS DOUBLE)
-                                     / CAST(n AS DOUBLE)) * 1000000) AS BIGINT)
-                       AS weight_micro
-              FROM c
-            ), d AS (
-              SELECT doc_id, documents.lang, weight_micro,
-                     CAST('0x' || substring(md5('tmix:' || doc_id), 1, 8)
-                          AS BIGINT) % 1000000 AS bucket
-              FROM documents JOIN w ON w.lang = documents.lang
-            ), n AS (
-              SELECT doc_id, lang, weight_micro,
-                     CAST(floor(weight_micro / 1000000.0) AS BIGINT)
-                     + CASE WHEN bucket < weight_micro % 1000000
-                            THEN 1 ELSE 0 END AS n_copies
-              FROM d
-            )
-            SELECT doc_id, lang, weight_micro,
-                   CAST(unnest(range(0, n_copies)) AS INTEGER) AS n_copy
-            FROM n WHERE n_copies > 0
-        """,
-        "text_epoch_shards": """
-            -- epoch e, doc d -> shard = first-8-hex(md5('epoch:e:d')) mod 64
-            SELECT CAST(e AS INTEGER) AS epoch,
-                   CAST('0x' || substring(md5('epoch:' || e || ':' || doc_id), 1, 8)
-                        AS BIGINT) % 64 AS shard,
-                   md5('epoch:' || e || ':' || doc_id) AS sort_key,
-                   doc_id
-            FROM documents CROSS JOIN (SELECT unnest(range(0, 3)) AS e) t
-        """,
-        "sim_semantic_dedup": """
-            -- SemDeDup keep/drop: same md5-derived hyperplane buckets as
-            -- sim_lsh_ann (4 planes), cosine rounded 4 vs 0.4, drop when a
-            -- smaller-id near-dup shares the bucket
-            WITH sig AS (
-              SELECT vec_id, embedding,
-                array_to_string(list_transform(range(0, 4), p ->
-                  CASE WHEN list_dot_product(embedding::DOUBLE[],
-                    list_transform(range(0, len(embedding)), i ->
-                      (CAST('0x' || substring(md5('plane' || p || ':' || i), 1, 8)
-                            AS BIGINT)::DOUBLE / 4294967295.0) - 0.5)) > 0
-                  THEN '1' ELSE '0' END), '') AS bucket
-              FROM embeddings
-            ), pairs AS (
-              SELECT a.vec_id AS va, b.vec_id AS vb
-              FROM sig a JOIN sig b
-                ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
-              WHERE round(
-                list_dot_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[])
-                  / (sqrt(list_dot_product(a.embedding::DOUBLE[], a.embedding::DOUBLE[]))
-                     * sqrt(list_dot_product(b.embedding::DOUBLE[], b.embedding::DOUBLE[]))),
-                4) >= 0.4
-            ), stats AS (
-              SELECT va, count(*)::BIGINT AS n_near_dups,
-                     max(CASE WHEN vb < va THEN 1 ELSE 0 END) AS smaller
-              FROM pairs GROUP BY va
-            )
-            SELECT e.vec_id,
-                   (CASE WHEN coalesce(s.smaller, 0) = 1 THEN 0 ELSE 1 END)::INTEGER
-                       AS keep,
-                   coalesce(s.n_near_dups, 0)::BIGINT AS n_near_dups
-            FROM embeddings e LEFT JOIN stats s ON s.va = e.vec_id
-        """,
-        "sim_cosine_topk": """
-            WITH scored AS (
-              SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-                     list_dot_product(q.embedding::DOUBLE[], e.embedding::DOUBLE[])
-                       / (sqrt(list_dot_product(q.embedding::DOUBLE[], q.embedding::DOUBLE[]))
-                          * sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[]))) AS score
-              FROM embeddings q JOIN embeddings e ON e.vec_id <> q.vec_id
-              WHERE q.vec_id < 10
-            )
-            SELECT query_id, rank, neighbor_id FROM (
-              SELECT query_id, neighbor_id,
-                     row_number() OVER (PARTITION BY query_id
-                                        ORDER BY score DESC, neighbor_id ASC)::BIGINT AS rank
-              FROM scored)
-            WHERE rank <= 5
-        """,
-        "sim_embedding_near_dups": """
-            SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
-            FROM embeddings a JOIN embeddings b
-              ON a.label = b.label AND a.vec_id < b.vec_id
-            WHERE round(
-              list_dot_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[])
-                / (sqrt(list_dot_product(a.embedding::DOUBLE[], a.embedding::DOUBLE[]))
-                   * sqrt(list_dot_product(b.embedding::DOUBLE[], b.embedding::DOUBLE[]))), 4) >= 0.4
-        """,
-        "mm_payload_meta": """
-            -- DuckDB md5 takes VARCHAR; hashing the text hashes the same
-            -- utf-8 bytes Spark's md5(encode(text,'utf-8')) hashes
-            SELECT doc_id, octet_length(encode(text))::BIGINT AS n_bytes,
-                   md5(text) AS payload_md5
-            FROM documents
-        """,
-        "mm_features": """
-            -- byte-histogram counts mod 8 over the utf-8 payload; byte k of
-            -- the blob = hex chars (2k+1, 2k+2) — exact integers, no floats
-            WITH idx AS (
-              SELECT doc_id, hex(encode(text)) AS hx,
-                     unnest(range(0, octet_length(encode(text)))) AS i
-              FROM documents
-            ), bytes AS (
-              SELECT doc_id,
-                     CAST('0x' || substring(hx, i * 2 + 1, 2) AS INTEGER) % 8 AS bucket
-              FROM idx
-            ), hist AS (
-              SELECT doc_id, bucket, count(*)::BIGINT AS c FROM bytes GROUP BY 1, 2
-            )
-            SELECT d.doc_id,
-                   coalesce(max(CASE WHEN bucket = 0 THEN c END), 0)::BIGINT AS f0,
-                   coalesce(max(CASE WHEN bucket = 1 THEN c END), 0)::BIGINT AS f1,
-                   coalesce(max(CASE WHEN bucket = 2 THEN c END), 0)::BIGINT AS f2,
-                   coalesce(max(CASE WHEN bucket = 3 THEN c END), 0)::BIGINT AS f3,
-                   coalesce(max(CASE WHEN bucket = 4 THEN c END), 0)::BIGINT AS f4,
-                   coalesce(max(CASE WHEN bucket = 5 THEN c END), 0)::BIGINT AS f5,
-                   coalesce(max(CASE WHEN bucket = 6 THEN c END), 0)::BIGINT AS f6,
-                   coalesce(max(CASE WHEN bucket = 7 THEN c END), 0)::BIGINT AS f7
-            FROM documents d LEFT JOIN hist h USING (doc_id)
-            GROUP BY d.doc_id
-        """,
-        "mm_frame_samples": """
-            -- sampled byte at offsets 0, 64, 128, ... of the payload
-            WITH idx AS (
-              SELECT doc_id, hex(encode(text)) AS hx,
-                     unnest(range(0, (octet_length(encode(text)) + 63) // 64)) AS k
-              FROM documents WHERE doc_id < 100
-            )
-            SELECT doc_id, (k * 64)::BIGINT AS frame_offset,
-                   CAST('0x' || substring(hx, k * 128 + 1, 2) AS INTEGER)::BIGINT AS sample_value
-            FROM idx
-        """,
-        "mm_audio_features": """
-            -- fake-PCM path: payload bytes as unsigned 8-bit samples
-            -- recentred at 128; energy and zero crossings are integer-
-            -- exact (sum of squares / sign products), so the contract is
-            -- float-free.  Byte extraction via hex() as in mm_frame_samples.
-            WITH b AS (
-              SELECT doc_id, hex(encode(text)) AS hx,
-                     octet_length(encode(text)) AS n
-              FROM documents WHERE doc_id < 100
-            ), v0 AS (
-              SELECT doc_id, hx, unnest(range(0, n)) AS i FROM b
-            ), v AS (
-              SELECT doc_id, i,
-                     CAST('0x' || substring(hx, i * 2 + 1, 2) AS INTEGER) - 128 AS v
-              FROM v0
-            ), agg AS (
-              SELECT doc_id, count(*)::BIGINT AS n_samples,
-                     sum(v * v)::BIGINT AS energy_ssq
-              FROM v GROUP BY doc_id
-            ), zc AS (
-              SELECT a.doc_id,
-                     sum(CASE WHEN a.v * c.v < 0 THEN 1 ELSE 0 END)::BIGINT AS z
-              FROM v a JOIN v c ON c.doc_id = a.doc_id AND c.i = a.i + 1
-              GROUP BY a.doc_id
-            )
-            SELECT agg.doc_id, n_samples, 1::BIGINT AS n_channels,
-                   8000::BIGINT AS sample_rate, energy_ssq,
-                   coalesce(z, 0)::BIGINT AS zero_crossings
-            FROM agg LEFT JOIN zc ON zc.doc_id = agg.doc_id
-        """,
-        "events_hourly": """
-            SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:00:00') AS hour,
-                   event_type, count(*)::BIGINT AS n_events,
-                   round(sum(value), 4) AS sum_value
-            FROM events GROUP BY 1, 2
-        """,
-        "docs_stream_dedup": """
-            -- one availableNow batch + min-sha representative == batch GROUP BY
-            SELECT md5(text) AS fp,
-                   min(CAST(doc_id AS VARCHAR)) AS doc_sha256,
-                   count(*) AS n_seen
-            FROM documents GROUP BY md5(text)
-        """,
-        "events_windowed_stream": """
-            SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:00:00') AS hour,
-                   event_type, count(*)::BIGINT AS n_events,
-                   round(sum(value), 4) AS sum_value
-            FROM events GROUP BY 1, 2
-        """,
-        "events_sessions": """
-            SELECT user_id, event_id,
-                   row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)::BIGINT AS seq
-            FROM events
-        """,
-        "events_sessionize_gap": """
-            WITH b AS (
-              SELECT user_id, event_id, ts,
-                     CASE WHEN lag(ts) OVER w IS NULL
-                            OR epoch(ts) - epoch(lag(ts) OVER w) > 1800
-                          THEN 1 ELSE 0 END AS boundary
-              FROM events
-              WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-            )
-            SELECT user_id, event_id,
-                   sum(boundary) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                       ROWS UNBOUNDED PRECEDING)::BIGINT AS session_id
-            FROM b
-        """,
         "social_shacl_member_prop": f"""
             -- sh:property on sh:or members: each knows-value must have
             -- >=1 email OR >=1 phone (anonymous member shapes evaluated
@@ -4427,157 +2780,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT node, count(*)::BIGINT AS n_tri
             FROM (SELECT unnest([a, b, c]) AS node FROM tri)
             GROUP BY 1
-        """,
-        "code_winnow_fp": f"""
-            -- winnowing fingerprints (Schleimer et al. 2003): k-gram md5
-            -- hashes (portable 60-bit ints), min per w-window, distinct
-            WITH d AS (SELECT repo, path, content FROM {_D}),
-            kg AS (
-              SELECT repo, path,
-                CASE WHEN length(content) >= 8
-                  THEN [CAST('0x'||substr(md5(substr(content, i, 8)),1,15) AS BIGINT)
-                        FOR i IN range(1, length(content)-8+2)]
-                  ELSE [CAST('0x'||substr(md5(content),1,15) AS BIGINT)] END AS hs
-              FROM d
-            ),
-            fps AS (
-              SELECT repo, path,
-                CASE WHEN len(hs) >= 4
-                  THEN list_distinct([list_min(hs[j:j+4-1]) FOR j IN range(1, len(hs)-4+2)])
-                  ELSE [list_min(hs)] END AS fp
-              FROM kg
-            )
-            SELECT repo, path, unnest(fp) AS fingerprint FROM fps
-        """,
-        "code_winnow_clones": f"""
-            -- intra-repo clone pairs: winnow fingerprint Jaccard >= 0.35
-            -- over the head sketch (first 400 chars), org0/org1 repos
-            WITH d AS (
-              SELECT repo, repo || ':' || path AS file_id,
-                     substr(content, 1, 400) AS content
-              FROM {_D}
-              WHERE repo LIKE 'org0/%' OR repo LIKE 'org1/%'
-            ),
-            kg AS (
-              SELECT repo, file_id,
-                CASE WHEN length(content) >= 8
-                  THEN [CAST('0x'||substr(md5(substr(content, i, 8)),1,15) AS BIGINT)
-                        FOR i IN range(1, length(content)-8+2)]
-                  ELSE [CAST('0x'||substr(md5(content),1,15) AS BIGINT)] END AS hs
-              FROM d
-            ),
-            fps AS (
-              SELECT repo, file_id,
-                CASE WHEN len(hs) >= 4
-                  THEN list_distinct([list_min(hs[j:j+4-1]) FOR j IN range(1, len(hs)-4+2)])
-                  ELSE [list_min(hs)] END AS fp
-              FROM kg
-            ),
-            sizes AS (SELECT file_id, len(fp) AS n_fp FROM fps),
-            ex AS (SELECT repo, file_id, unnest(fp) AS fingerprint FROM fps),
-            inter AS (
-              SELECT a.file_id AS file_a, b.file_id AS file_b, count(*) AS n_inter
-              FROM ex a JOIN ex b
-                ON a.repo = b.repo AND a.fingerprint = b.fingerprint
-               AND a.file_id < b.file_id
-              GROUP BY 1, 2
-            )
-            SELECT i.file_a, i.file_b,
-                   round(CAST(i.n_inter AS DOUBLE)
-                         / (sa.n_fp + sb.n_fp - i.n_inter), 4) AS jaccard
-            FROM inter i JOIN sizes sa ON i.file_a = sa.file_id
-                         JOIN sizes sb ON i.file_b = sb.file_id
-            WHERE round(CAST(i.n_inter AS DOUBLE)
-                        / (sa.n_fp + sb.n_fp - i.n_inter), 4) >= 0.35
-        """,
-        "code_winnow_lsh": f"""
-            -- winnow sketch -> 16-hash MinHash -> 2 bands of 8 -> bucket join
-            WITH d AS (
-              SELECT repo, repo || ':' || path AS file_id, content
-              FROM {_D}
-              WHERE repo LIKE 'org0/%'
-            ),
-            kg AS (
-              SELECT file_id,
-                CASE WHEN length(content) >= 8
-                  THEN [CAST('0x'||substr(md5(substr(content, i, 8)),1,15) AS BIGINT)
-                        FOR i IN range(1, length(content)-8+2)]
-                  ELSE [CAST('0x'||substr(md5(content),1,15) AS BIGINT)] END AS hs
-              FROM d
-            ),
-            fps AS (
-              SELECT file_id,
-                CASE WHEN len(hs) >= 4
-                  THEN list_distinct([list_min(hs[j:j+4-1]) FOR j IN range(1, len(hs)-4+2)])
-                  ELSE [list_min(hs)] END AS fp
-              FROM kg
-            ),
-            sig AS (
-              SELECT file_id,
-                [list_min([CAST('0x'||substr(md5(i || ':' || f),1,15) AS BIGINT)
-                           FOR f IN fp])
-                 FOR i IN range(0, 16)] AS s
-              FROM fps
-            ),
-            bk AS (
-              SELECT file_id, b AS band,
-                     array_to_string(s[b*8+1 : b*8+8], ',') AS band_key
-              FROM sig, unnest(range(0, 2)) AS t(b)
-            )
-            SELECT DISTINCT a.file_id AS file_a, b.file_id AS file_b
-            FROM bk a JOIN bk b
-              ON a.band = b.band AND a.band_key = b.band_key
-             AND a.file_id < b.file_id
-        """,
-        "code_repo_stats": f"""
-            SELECT repo,
-                   count(*)::BIGINT AS n_files,
-                   count(DISTINCT lang)::BIGINT AS n_langs,
-                   count(DISTINCT "commit")::BIGINT AS n_commits,
-                   sum(length(content))::BIGINT AS total_bytes,
-                   count(DISTINCT content_sha256)::BIGINT AS distinct_contents
-            FROM {_D}
-            GROUP BY repo
-        """,
-        "code_license_profile": f"""
-            -- deterministic augmentation (same rule as the Spark entry):
-            -- residue of length(content) decides which license header each
-            -- file gets; expected families derive from the construction
-            WITH d AS (
-              SELECT repo,
-                     CASE length(content) % 7
-                       WHEN 0 THEN 'MIT'
-                       WHEN 1 THEN 'Apache-2.0'
-                       WHEN 2 THEN 'GPL'
-                       WHEN 3 THEN 'BSD'
-                       ELSE 'unknown' END AS family
-              FROM {_D}
-            ),
-            per AS (
-              SELECT repo, family, count(*)::BIGINT AS n_files
-              FROM d GROUP BY 1, 2
-            ),
-            t AS (SELECT repo, sum(n_files)::BIGINT AS repo_files FROM per GROUP BY 1)
-            SELECT per.repo, per.family, per.n_files, t.repo_files,
-                   round(per.n_files / t.repo_files::DOUBLE, 6) AS frac
-            FROM per JOIN t ON t.repo = per.repo
-        """,
-        "code_ident_top": f"""
-            -- top-10 identifiers per language (ties break lexicographically)
-            WITH toks AS (
-              SELECT lang,
-                     unnest(regexp_extract_all(content,
-                            '[A-Za-z_][A-Za-z0-9_]{{2,}}')) AS identifier
-              FROM {_D}
-            ),
-            c AS (SELECT lang, identifier, count(*)::BIGINT AS n
-                  FROM toks GROUP BY 1, 2)
-            SELECT lang, identifier, n, rank FROM (
-              SELECT lang, identifier, n,
-                     row_number() OVER (PARTITION BY lang
-                                        ORDER BY n DESC, identifier ASC)::BIGINT AS rank
-              FROM c)
-            WHERE rank <= 10
         """,
     }
     # Syntax-twin entries run the SAME semantics through a different schema

@@ -41,11 +41,7 @@ XSD = "http://www.w3.org/2001/XMLSchema#"
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 GENERATOR_VERSION = "v2"  # bump to invalidate cached fixture dirs
 
-SF_DOCS = {"sf0.001": 1_000, "sf0.01": 10_000, "sf0.1": 100_000, "sf1": 1_000_000}
-
-# tiers where golden triples/verdicts are skipped (scaling benchmarks only —
-# goldens at 1M docs would be ~13M rows of pure-python tuple building)
-DOCS_ONLY = {"sf1"}
+SF_DOCS = {"sf0.001": 1_000, "sf0.01": 10_000, "sf0.1": 100_000}
 
 STATUSES = ["OK", "RUNNING", "BROKEN"]
 
@@ -297,19 +293,6 @@ def _gen_one_doc(j: int):
 _DOC_COLS = ("repo", "path", "commit", "lang", "content", "content_sha256")
 
 
-def _generate_docs_only(n_docs: int, docs_path: str) -> None:
-    """Streaming docs-table writer for the big scaling tiers: fixed-size
-    batches straight into one parquet file, no goldens, bounded memory."""
-    schema = pa.schema([(c, pa.string()) for c in _DOC_COLS])
-    batch = 50_000
-    with pq.ParquetWriter(docs_path, schema) as w:
-        for lo in range(0, n_docs, batch):
-            rows = [_gen_one_doc(j)[0] for j in range(lo, min(lo + batch, n_docs))]
-            cols = {c: [r[i] for r in rows] for i, c in enumerate(_DOC_COLS)}
-            tbl = pa.table(cols, schema=schema)
-            w.write_table(tbl, row_group_size=4096)
-
-
 def generate(sf_tag: str, out_dir: str) -> dict[str, str]:
     """Generate the docs table + goldens for one scale tier. Idempotent."""
     n_docs = SF_DOCS[sf_tag]
@@ -319,19 +302,9 @@ def generate(sf_tag: str, out_dir: str) -> dict[str, str]:
         "triples": os.path.join(out_dir, "expected_triples.parquet"),
         "verdicts": os.path.join(out_dir, "expected_verdicts.parquet"),
     }
-    if sf_tag in DOCS_ONLY:
-        # same return contract whether cached or freshly generated: DOCS_ONLY
-        # tiers never have golden paths
-        paths.pop("triples"), paths.pop("verdicts")
     if os.path.exists(marker):
         return paths
     os.makedirs(out_dir, exist_ok=True)
-
-    if sf_tag in DOCS_ONLY:
-        _generate_docs_only(n_docs, paths["docs"])
-        with open(marker, "w") as f:
-            f.write("ok\n")
-        return paths
 
     docs_rows = {k: [] for k in ("repo", "path", "commit", "lang", "content", "content_sha256")}
     triple_rows: list[tuple] = []

@@ -1,8 +1,5 @@
-"""Large-scale training-data pipeline operators (driver brief §extras).
+"""Corpus-side operators kept outside the KG engine.
 
-Not part of the reference surface — these are the first-class data-prep
-operators a 100 TB corpus pipeline needs: dedup (exact / MinHash-LSH /
-SimHash / n-gram Jaccard / embedding), similarity search, text analysis,
-multimodal column plumbing. All built on the driver's ``documents`` /
-``embeddings`` tables.
+Text analysis (``textops``), code-corpus ops (``codeops``) and image/audio
+decoding (``multimodal``). No build or serve path imports this package.
 """

@@ -27,8 +27,7 @@ striding.
   Σ df(fp)² over fingerprints, never files².  ``max_df`` drops
   boilerplate fingerprints (license headers, prefix declarations shared
   by every file in the corpus) from the JOIN side only — set sizes keep
-  them, so Jaccard loses only the uninformative hot mass.  Same guard
-  role as ``max_bucket``/``max_df`` in functions/dedup.py.
+  them, so Jaccard loses only the uninformative hot mass.
 * Hashes are the portable md5-prefix 60-bit ints used across this
   package (``CAST('0x'||substr(md5(x),1,15) AS BIGINT)`` in DuckDB ↔
   ``conv(substring(md5(x),1,15),16,10)`` in Spark), so every operator
@@ -134,8 +133,8 @@ def winnow_near_dup_pairs(
       JOIN side only for the cross-repo form — set sizes keep every
       fingerprint, so Jaccard loses only the boilerplate intersection
       mass.  For exhaustive cross-repo dedup at full scale, band the
-      winnow sketches through the MinHash/LSH path (functions/dedup.py)
-      instead of joining raw fingerprints.
+      winnow sketches with ``winnow_lsh_pairs`` instead of joining raw
+      fingerprints.
     """
     file_id = F.concat_ws(":", F.col("repo"), F.col("path")).alias("file_id")
     sets = winnow_fingerprint_sets(docs, k=k, w=w, content_col=content_col)
@@ -255,8 +254,7 @@ def winnow_lsh_pairs(
     raw fingerprint join is Σ df(fp)² and corpus-hot boilerplate makes df
     unbounded, while banding bounds join fan-out to Σ bucket² with bucket
     sizes concentrated near true duplicate-family sizes.  ``max_bucket``
-    guards template families exactly like ``lsh_candidate_pairs``
-    (functions/dedup.py): over-limit buckets are dropped from the join —
+    guards template families: over-limit buckets are dropped from the join —
     at 10^12 files those families are handled by the O(n) keep-decision
     path, not pair enumeration.
     """

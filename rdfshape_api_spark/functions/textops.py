@@ -2,8 +2,7 @@
 scoring, language ID, fingerprinting.
 
 Every function is pure Column logic (JVM-side, codegen) — deliberately
-expressible in ANSI SQL too, so each has an exact DuckDB oracle in
-``__spark_entry__.oracle_sql``.  At 100 TB these run as map-only stages:
+expressible in ANSI SQL too.  At 100 TB these run as map-only stages:
 no shuffle, full predicate/column pushdown to the parquet scan.
 """
 
@@ -84,34 +83,6 @@ def fingerprint(text: Column) -> Column:
     """Document fingerprint: md5 of the whitespace-normalized, lowercased
     text (rolling-hash stand-in that is portable to the SQL oracle)."""
     return F.md5(F.regexp_replace(F.lower(F.trim(text)), r"\s+", " "))
-
-
-def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
-    """Gap-based sessionization of the events table: a new session starts
-    when a user's inter-event gap exceeds ``gap_minutes``.
-
-    Classic two-window construction (lag → boundary flag → running sum),
-    fully SQL-expressible (exact DuckDB oracle) and shuffle-efficient: both
-    windows partition by ``user_id``, so there is exactly ONE shuffle and
-    the session ids are dense integers per user."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    prev_ts = F.lag("ts").over(w)
-    new_session = (
-        prev_ts.isNull()
-        | ((F.unix_timestamp("ts") - F.unix_timestamp(prev_ts)) > gap_minutes * 60)
-    ).cast("bigint")
-    return (
-        events.select("user_id", "event_id", "ts", new_session.alias("_boundary"))
-        .withColumn(
-            "session_id",
-            F.sum("_boundary").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-        )
-        .select(
-            "user_id", "event_id", F.col("session_id").cast("bigint").alias("session_id")
-        )
-    )
 
 
 def text_features(docs: DataFrame) -> DataFrame:

@@ -143,6 +143,68 @@ def entity_degree(df: DataFrame, salt_buckets: int = 32) -> DataFrame:
 OWL_SAMEAS = "http://www.w3.org/2002/07/owl#sameAs"
 
 
+def connected_components(
+    pairs: DataFrame, max_iters: int = 25, a: str = "doc_a", b: str = "doc_b"
+) -> DataFrame:
+    """Identity clusters from identity edges: connected components by
+    iterative min-label propagation.
+
+    Returns ``(doc_id, component)`` for every vertex appearing in
+    ``pairs``, where ``component`` is the lexicographic-min vertex of its
+    component — the canonical representative (``doc_id == component`` ⇔
+    the vertex is its cluster's representative).  The ``a``/``b`` column
+    names select the edge endpoints; edges are treated as undirected.
+
+    Scale design: each round is one join (edge ⨝ labels, key-partitioned)
+    + one min-aggregation (map-side combine), converging in
+    O(graph diameter) rounds — ``owl:sameAs`` and identifier-sharing
+    clusters are stars or near-cliques, so 2-3 rounds in practice.
+    ``localCheckpoint`` per round keeps the plan flat (same protocol as
+    the SPARQL ``knows+`` fixpoint, plans/sparql.py).  This is the
+    standard label-propagation formulation of CC-in-MapReduce (Kiveris
+    et al. 2014).  Raises ``ValueError`` if ``max_iters`` rounds do not
+    reach a fixpoint.
+    """
+    # symmetric edge list; vertices = every endpoint
+    fwd = pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
+    edges = fwd.union(
+        pairs.select(F.col(b).alias("src"), F.col(a).alias("dst"))
+    ).distinct().localCheckpoint()
+    labels = (
+        edges.select(F.col("src").alias("doc_id"))
+        .distinct()
+        .withColumn("component", F.col("doc_id"))
+        .localCheckpoint()
+    )
+    for _ in range(max_iters):
+        # neighbor messages: each vertex offers its label to its neighbors
+        msgs = edges.join(
+            labels, on=edges["src"] == labels["doc_id"]
+        ).select(F.col("dst").alias("doc_id"), "component")
+        # fold old label + best neighbor offer in ONE frame: the next labels
+        # and the convergence check both derive from it, saving a second
+        # label-vs-label join per round
+        mins = msgs.groupBy("doc_id").agg(F.min("component").alias("_offer"))
+        joined = (
+            labels.join(mins, on="doc_id", how="left")
+            .select(
+                "doc_id",
+                F.col("component").alias("_old"),
+                F.least(
+                    F.col("component"), F.coalesce(F.col("_offer"), F.col("component"))
+                ).alias("component"),
+            )
+            .localCheckpoint()
+        )
+        changed = (
+            joined.filter(F.col("component") != F.col("_old")).limit(1).count()
+        )
+        labels = joined.select("doc_id", "component")
+        if changed == 0:
+            return labels
+    raise ValueError(f"connected_components did not converge in {max_iters} rounds")
+
+
 def link_entities(
     triples: DataFrame,
     edges: DataFrame | None = None,
@@ -160,15 +222,13 @@ def link_entities(
     document-independent, so the rewrite applies across documents.
 
     100 TB design: components via distributed min-label propagation
-    (``functions.dedup.connected_components`` — one key join + one
+    (:func:`connected_components` — one key join + one
     map-side-combined min-agg per round, O(component diameter) rounds;
     sameAs clusters are near-cliques so 2-3 rounds), then two left joins
     of the triple set against the (entity → canon) mapping, both on the
     join key Catalyst already shuffles for the store layout.  No
     driver-side state, no collect.
     """
-    from rdfshape_api_spark.functions.dedup import connected_components
-
     if edges is None:
         ident = (F.col("pred") == OWL_SAMEAS) & (F.col("obj_kind") != "literal")
         edges = triples.filter(ident).select(
@@ -221,11 +281,10 @@ def propose_identity_edges(
 
     Scale design: one distinct + one groupBy per identifying value —
     each value group is contracted to a STAR around its min entity
-    (O(group) edges, never the O(group²) pair enumeration), the same
-    clique-contraction argument as ``lsh_duplicate_clusters``.
+    (O(group) edges, never the O(group²) pair enumeration); the star has
+    the same connected components as the clique.
     ``max_group`` drops degenerate hot values (empty strings, placeholder
-    emails like ``n/a@example.com`` pair everyone — the ER analog of the
-    LSH ``max_bucket`` guard).
+    emails like ``n/a@example.com`` pair everyone).
 
     Returns ``(a, b, evidence_pred)`` with ``a`` = group-min entity,
     ``a != b``; feed ``edges=result.select("a", "b")`` to

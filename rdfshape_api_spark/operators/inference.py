@@ -28,6 +28,7 @@ from rdfshape_api_spark.model import (
     RDFS_SUBCLASSOF,
     RDFS_SUBPROPERTYOF,
 )
+from rdfshape_api_spark.operators.canonicalize import connected_components
 
 
 def _transitive_pairs(edges: list[tuple[str, str]]) -> list[tuple[str, str]]:
@@ -151,18 +152,19 @@ def owl_sameas_closure(df: DataFrame, spark=None, max_iters: int = 25) -> DataFr
 
     The full clique remains derivable (member →sameAs→ canon →triples),
     while output grows by O(|rewritten rows| + |sameAs rows|) only.
+    This is weaker than Jena's full materialization: a query addressed to
+    a non-canonical member sees none of the merged triples, and
+    transitive ``a sameAs c`` links are not emitted as explicit triples.
     Reflexive ``x sameAs x`` rows are not emitted (spec-entailed but pure
     noise in a triple store).
 
     Scale design: components via distributed min-label propagation
-    (``functions.dedup.connected_components``, O(diameter) rounds —
+    (``canonicalize.connected_components``, O(diameter) rounds —
     sameAs clusters are near-cliques so 2-3 rounds), then two hash joins
     of the triple set against the (member → canon) mapping.  No
     driver-side state; composes with :func:`rdfs_closure` /
     :func:`owl_lite_closure` (an existing ``origin`` column is
     preserved)."""
-    from rdfshape_api_spark.functions.dedup import connected_components
-
     spark = spark or df.sparkSession
     if "origin" not in df.columns:
         df = df.withColumn("origin", F.lit("asserted"))
@@ -370,7 +372,13 @@ def owl_lite_closure(df: DataFrame, spark=None, max_transitive_iters: int = 10) 
 def apply_inference(df: DataFrame, engine: str = "NONE") -> DataFrame:
     """The reference's applyInference dispatch (NONE default,
     ApiDefaults.scala:60; engines from InferenceEngine.availableInferenceEngines,
-    ApiDefinitions.scala:59-60)."""
+    ApiDefinitions.scala:59-60).
+
+    OWL mode's ``owl:sameAs`` semantics are a representative-form rewrite
+    (:func:`owl_sameas_closure`), weaker than the full eq-rep
+    materialization of the reference's Jena OWL reasoner: merged triples
+    are entailed only for each identity cluster's canonical (lexicographic
+    min) member, not copied onto every member."""
     eng = (engine or "NONE").upper()
     if eng == "NONE":
         return df

@@ -11,11 +11,7 @@ nodes) into standalone SVG with a deterministic layered layout
 Scope and cost model: presentation-only, driver-side, per document — the
 same KB-sized collect as :func:`operators.serialize.assemble_dot` (the
 reference renders per HTTP request; the distributed artifact is the DOT
-statement table).  PNG is rendered too (r5): the same layout rasterized
-into an RGB buffer with a 5x7 bitmap font and encoded with a stdlib
-zlib PNG writer — the inverse of the subset
-``functions/multimodal.decode_png`` reads, which the tests use to verify
-the bytes.  PS stays out of scope.
+statement table).  Only SVG is rendered; PNG and PS stay out of scope.
 
 The parser reads the fixed grammar this package emits — quoted node ids
 with ``[shape=…, label="…"]`` attribute lists and quoted ``->`` edges —
@@ -29,10 +25,7 @@ import html
 import re
 from dataclasses import dataclass
 
-__all__ = [
-    "parse_dot", "layout_layers", "dot_to_svg", "render_svg",
-    "dot_to_png", "render_png",
-]
+__all__ = ["parse_dot", "layout_layers", "dot_to_svg", "render_svg"]
 
 
 @dataclass
@@ -177,8 +170,7 @@ def _node_width(label: str) -> float:
 def _pixel_coords(
     nodes: list[_Node], edges: list[tuple[str, str, str]]
 ) -> tuple[dict[str, tuple[float, float]], float, float]:
-    """Layered layout → pixel center per node + canvas (width, height).
-    Shared by the SVG and PNG renderers so both draw the same picture."""
+    """Layered layout → pixel center per node + canvas (width, height)."""
     coords = layout_layers(nodes, edges)
     by_id = {n.node_id: n for n in nodes}
 
@@ -276,163 +268,3 @@ def render_svg(lines_df, doc_sha256: str, name: str = "rdf") -> str:
 
     return dot_to_svg(assemble_dot(lines_df, doc_sha256, name), title=name)
 
-
-# ---------------------------------------------------------------------------
-# DOT → PNG rasterization (GraphicFormat parity: the reference pipes DOT
-# through `dot -Tpng`, DataConvert.scala:83-120).  Pure stdlib: the layout
-# is _pixel_coords (identical picture to the SVG), drawing is numpy, and
-# the encoder writes IHDR/IDAT/IEND with zlib — the exact inverse of the
-# subset functions/multimodal.decode_png reads, which the tests use to
-# verify the bytes round-trip.
-
-# 5x7 bitmap font, column-major LSB-top — the classic public-domain LCD
-# glyph set for the characters RDF labels actually contain; anything else
-# renders as a hollow box (deterministic, never raises).
-_FONT_5X7 = {
-    " ": "0000000000", "!": "00005f0000", '"': "0007000700", "#": "147f147f14",
-    "'": "0005030000", "(": "001c224100", ")": "0041221c00", "*": "2a1c7f1c2a",
-    "+": "08083e0808", ",": "0050300000", "-": "0808080808", ".": "0060600000",
-    "/": "2010080402", "0": "3e51494536", "1": "00427f4000", "2": "4261514946",
-    "3": "2141454b31", "4": "1814127f10", "5": "2745454539", "6": "3c4a494930",
-    "7": "0171090503", "8": "3649494936", "9": "064949291e", ":": "0036360000",
-    ";": "0056360000", "<": "0814224100", "=": "1414141414", ">": "0041221408",
-    "?": "0201510906", "@": "324979413e", "A": "7e1111117e", "B": "7f49494936",
-    "C": "3e41414122", "D": "7f4141221c", "E": "7f49494941", "F": "7f09090901",
-    "G": "3e41495a68", "H": "7f0808087f", "I": "00417f4100", "J": "2040413f01",
-    "K": "7f08142241", "L": "7f40404040", "M": "7f020c027f", "N": "7f0408107f",
-    "O": "3e4141413e", "P": "7f09090906", "Q": "3e4151215e", "R": "7f09192946",
-    "S": "4649494931", "T": "01017f0101", "U": "3f4040403f", "V": "1f2040201f",
-    "W": "3f4038403f", "X": "6314081463", "Y": "0708700807", "Z": "6151494543",
-    "[": "007f414100", "\\": "0204081020", "]": "0041417f00", "^": "0402010204",
-    "_": "4040404040", "a": "2054545478", "b": "7f48444438", "c": "3844444420",
-    "d": "384444487f", "e": "3854545418", "f": "087e090102", "g": "0c5252523e",
-    "h": "7f08040478", "i": "00447d4000", "j": "2040443d00", "k": "7f10284400",
-    "l": "00417f4000", "m": "7c04180478", "n": "7c08040478", "o": "3844444438",
-    "p": "7c14141408", "q": "081414187c", "r": "7c08040408", "s": "4854545420",
-    "t": "043f444020", "u": "3c4040207c", "v": "1c2040201c", "w": "3c4030403c",
-    "x": "4428102844", "y": "0c5050503c", "z": "4464544c44", "{": "0008364100",
-    "|": "00007f0000", "}": "0041360800", "~": "0804080408",
-}
-
-
-def _draw_text(img, x0: int, y0: int, s: str, color) -> None:
-    """Blit a string at (x0, y0) top-left, 6 px advance per character."""
-    import numpy as np
-
-    h, w, _ = img.shape
-    for k, ch in enumerate(s):
-        cols = _FONT_5X7.get(ch)
-        if cols is None:
-            cols = "7f41414141"  # hollow box for any unmapped character
-        for cx in range(5):
-            bits = int(cols[cx * 2 : cx * 2 + 2], 16)
-            for cy in range(7):
-                if bits >> cy & 1:
-                    px, py = x0 + k * 6 + cx, y0 + cy
-                    if 0 <= px < w and 0 <= py < h:
-                        img[py, px] = color
-
-
-def _draw_line(img, x1: float, y1: float, x2: float, y2: float, color) -> None:
-    import numpy as np
-
-    n = max(2, int(max(abs(x2 - x1), abs(y2 - y1))) + 1)
-    xs = np.clip(np.linspace(x1, x2, n).round().astype(int), 0, img.shape[1] - 1)
-    ys = np.clip(np.linspace(y1, y2, n).round().astype(int), 0, img.shape[0] - 1)
-    img[ys, xs] = color
-
-
-def _png_encode(img) -> bytes:
-    """Minimal PNG writer: 8-bit RGB, no filtering (type 0 rows) — the
-    subset decode_png round-trips byte-exactly."""
-    import struct
-    import zlib
-
-    h, w, _ = img.shape
-
-    def chunk(tag: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data)) + tag + data
-            + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF)
-        )
-
-    raw = b"".join(b"\x00" + img[y].tobytes() for y in range(h))
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0))
-        + chunk(b"IDAT", zlib.compress(raw, 6))
-        + chunk(b"IEND", b"")
-    )
-
-
-def dot_to_png(text: str) -> bytes:
-    """Rasterize DOT statements to PNG bytes — the same layered layout as
-    :func:`dot_to_svg` drawn into an RGB buffer (white background, filled
-    node shapes with outlines, straight edges, 5x7 bitmap labels).
-    Deterministic byte output; decodable by
-    :func:`functions.multimodal.decode_png` (tested round-trip)."""
-    import numpy as np
-
-    nodes, edges = parse_dot(text)
-    centers, width, height = _pixel_coords(nodes, edges)
-    W, H = max(int(width), 16), max(int(height), 16)
-    img = np.full((H, W, 3), 255, dtype=np.uint8)
-    ink = np.array([51, 51, 51], dtype=np.uint8)
-    for src, dst, label in edges:
-        (x1, y1), (x2, y2) = centers[src], centers[dst]
-        dy = y2 - y1
-        if dy:
-            sign = 1 if dy > 0 else -1
-            y1 += sign * _NODE_H / 2
-            y2 -= sign * _NODE_H / 2
-        _draw_line(img, x1, y1, x2, y2, ink)
-        # arrowhead: two short strokes back from the tip
-        import math
-
-        ang = math.atan2(y2 - y1, x2 - x1)
-        for da in (math.radians(25), -math.radians(25)):
-            _draw_line(
-                img, x2, y2,
-                x2 - 8 * math.cos(ang + da), y2 - 8 * math.sin(ang + da), ink,
-            )
-        if label:
-            mx, my = (x1 + x2) / 2, (y1 + y2) / 2 - 10
-            _draw_text(img, int(mx - len(label) * 3), int(my), label,
-                       np.array([85, 85, 85], dtype=np.uint8))
-    for n in nodes:
-        cx, cy = centers[n.node_id]
-        w = _node_width(n.label)
-        x0, x1 = int(cx - w / 2), int(cx + w / 2)
-        y0, y1 = int(cy - _NODE_H / 2), int(cy + _NODE_H / 2)
-        x0c, x1c = max(x0, 0), min(x1, W - 1)
-        y0c, y1c = max(y0, 0), min(y1, H - 1)
-        if n.shape in ("ellipse", "circle"):
-            fill = np.array([238, 238, 255], dtype=np.uint8)
-            border = np.array([51, 51, 102], dtype=np.uint8)
-            rx = w / 2 if n.shape == "ellipse" else _NODE_H / 2
-            ry = _NODE_H / 2
-            ys, xs = np.mgrid[y0c : y1c + 1, x0c : x1c + 1]
-            d = ((xs - cx) / rx) ** 2 + ((ys - cy) / ry) ** 2
-            img[y0c : y1c + 1, x0c : x1c + 1][d <= 1.0] = fill
-            img[y0c : y1c + 1, x0c : x1c + 1][(d <= 1.0) & (d >= 0.82)] = border
-        else:  # record / box
-            fill = np.array([255, 255, 238], dtype=np.uint8)
-            border = np.array([102, 102, 51], dtype=np.uint8)
-            img[y0c : y1c + 1, x0c : x1c + 1] = fill
-            img[y0c, x0c : x1c + 1] = border
-            img[y1c, x0c : x1c + 1] = border
-            img[y0c : y1c + 1, x0c] = border
-            img[y0c : y1c + 1, x1c] = border
-        lines = n.label.split("\n")
-        for k, line in enumerate(lines):
-            ty = int(cy - 3 + (k - (len(lines) - 1) / 2) * 10)
-            _draw_text(img, int(cx - len(line) * 3), ty, line, ink)
-    return _png_encode(img)
-
-
-def render_png(lines_df, doc_sha256: str, name: str = "rdf") -> bytes:
-    """PNG for ONE document's visual graph from the distributed DOT
-    statement table — same collect contract as :func:`render_svg`."""
-    from rdfshape_api_spark.operators.serialize import assemble_dot
-
-    return dot_to_png(assemble_dot(lines_df, doc_sha256, name))

@@ -66,18 +66,6 @@ def get_spark(
         # the canonical slow path)
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
     )
-    # Shuffle/spill files on tmpfs — OPT-IN via SPARK_GRAFT_SHM_SHUFFLE=1
-    # (the bench harness sets it).  Rationale for the bench: every executor
-    # in a real fleet has its OWN local NVMe (aggregate bandwidth scales
-    # with N); a single shared ext4 disk is the one-box artifact.  NOT the
-    # default because tmpfs spill consumes RAM: a job that previously
-    # spilled safely to disk could exhaust memory instead.
-    if (
-        master.startswith("local")
-        and os.environ.get("SPARK_GRAFT_SHM_SHUFFLE") == "1"
-        and os.access("/dev/shm", os.W_OK)
-    ):
-        builder = builder.config("spark.local.dir", "/dev/shm/spark-local")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

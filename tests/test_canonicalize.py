@@ -195,3 +195,77 @@ def test_propose_label_edges_jaccard_and_block_guard(spark):
         propose_label_edges(tri, "http://e/label", threshold=0.5, max_block=1).count()
         == 0
     )
+
+
+def test_connected_components_chain(spark):
+    """A 4-vertex chain needs multiple propagation rounds (diameter 3);
+    two separate components keep distinct representatives."""
+    from rdfshape_api_spark.operators.canonicalize import connected_components
+
+    pairs = spark.createDataFrame(
+        [("b", "c"), ("a", "b"), ("c", "d"), ("x", "y")],
+        "doc_a string, doc_b string",
+    )
+    got = {r["doc_id"]: r["component"] for r in connected_components(pairs).collect()}
+    assert got == {"a": "a", "b": "a", "c": "a", "d": "a", "x": "x", "y": "x"}
+
+
+def test_connected_components_star_and_singleton_free(spark):
+    from rdfshape_api_spark.operators.canonicalize import connected_components
+
+    pairs = spark.createDataFrame(
+        [("hub", f"leaf{i}") for i in range(5)], "doc_a string, doc_b string"
+    )
+    out = connected_components(pairs)
+    comps = {r["component"] for r in out.collect()}
+    assert comps == {"hub"}
+    # only vertices that appear in pairs are emitted (no singleton rows)
+    assert out.count() == 6
+
+
+def test_connected_components_random_graphs_vs_union_find(spark):
+    """Property check: the distributed min-label propagation agrees with a
+    driver-side union-find on deterministic pseudo-random graphs (chains,
+    cliques, forests, cross-links)."""
+    import hashlib
+
+    from rdfshape_api_spark.operators.canonicalize import connected_components
+
+    def rnd(seed: str, mod: int) -> int:
+        return int(hashlib.sha256(seed.encode()).hexdigest(), 16) % mod
+
+    for trial in range(4):
+        n = 30 + trial * 17
+        edges = []
+        for i in range(n):
+            a = f"v{rnd(f'{trial}:{i}:a', n):03d}"
+            b = f"v{rnd(f'{trial}:{i}:b', n):03d}"
+            if a != b:
+                edges.append((a, b))
+        parent: dict[str, str] = {}
+
+        def find(x: str) -> str:
+            parent.setdefault(x, x)
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
+
+        for a, b in edges:
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[ra] = rb
+        expected: dict[str, str] = {}
+        comp_min: dict[str, str] = {}
+        for v in parent:
+            r = find(v)
+            comp_min[r] = min(comp_min.get(r, v), v)
+        for v in parent:
+            expected[v] = comp_min[find(v)]
+
+        pairs = spark.createDataFrame(edges, "doc_a string, doc_b string")
+        got = {
+            r["doc_id"]: r["component"]
+            for r in connected_components(pairs).collect()
+        }
+        assert got == expected, f"trial {trial} mismatch"

@@ -1,4 +1,4 @@
-"""Training-data ops: dedup family, similarity, text analysis, multimodal."""
+"""Text analysis and multimodal decoding operators."""
 
 from __future__ import annotations
 
@@ -21,18 +21,6 @@ def docs(spark):
     )
 
 
-@pytest.fixture(scope="module")
-def emb(spark):
-    rows = [
-        (0, [1.0, 0.0, 0.0], 0),
-        (1, [0.99, 0.1, 0.0], 0),  # near 0
-        (2, [0.0, 1.0, 0.0], 0),
-        (3, [0.0, 0.0, 1.0], 1),
-        (4, [0.0, 0.01, 0.99], 1),  # near 3
-    ]
-    return spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
-
-
 def test_text_features(docs):
     from rdfshape_api_spark.functions.textops import text_features
 
@@ -43,57 +31,6 @@ def test_text_features(docs):
     assert rows[0]["fp"] == rows[1]["fp"]
     assert rows[0]["fp"] != rows[2]["fp"]
     assert 0.0 <= rows[3]["quality"] <= 1.0
-
-
-def test_exact_duplicates(docs):
-    from rdfshape_api_spark.functions.dedup import exact_duplicates
-
-    groups = exact_duplicates(docs).collect()
-    assert len(groups) == 1
-    assert groups[0]["n_docs"] == 2 and groups[0]["min_doc_id"] == 0
-
-
-def test_lsh_candidates(docs):
-    from rdfshape_api_spark.functions.dedup import lsh_candidate_pairs
-
-    pairs = {(r["doc_a"], r["doc_b"]) for r in lsh_candidate_pairs(docs).collect()}
-    assert (0, 1) in pairs  # exact dups always collide
-    assert (0, 3) not in pairs  # unrelated docs don't
-
-
-def test_ngram_jaccard(docs):
-    from rdfshape_api_spark.functions.dedup import ngram_jaccard_pairs
-
-    pairs = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in ngram_jaccard_pairs(docs, 0.5).collect()}
-    assert pairs[(0, 1)] == 1.0
-    assert (0, 3) not in pairs
-
-
-def test_decontaminate(docs, spark):
-    from rdfshape_api_spark.functions.dedup import decontaminate
-
-    # benchmark = doc 2 ("the quick brown fox jumps over a lazy dog"):
-    # docs 0/1 share trigrams with it, doc 3/4 share none
-    bench = docs.filter(F.col("doc_id") == 2)
-    hits = {r["doc_id"]: r["n_hit_ngrams"] for r in decontaminate(docs, bench, n=3).collect()}
-    assert hits[2] == 7  # self-match: all 7 trigrams of a 9-word doc
-    assert hits[0] == hits[1] > 0  # exact dups hit identically
-    assert 3 not in hits and 4 not in hits
-    # the broadcast side must be the benchmark: plan has no shuffle of docs
-    plan = decontaminate(docs, bench, n=3)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-
-
-def test_pack_sequences(docs):
-    from rdfshape_api_spark.functions.sampling import pack_sequences
-
-    out = {r["doc_id"]: r for r in pack_sequences(docs, max_tokens=10, n_shards=2).collect()}
-    # shard 0 = even ids (9, 9, 6 tokens): cum_before 0/9/18 -> bins 0/0/1
-    assert [out[i]["shard"] for i in (0, 2, 4)] == [0, 0, 0]
-    assert [out[i]["bin_id"] for i in (0, 2, 4)] == [0, 0, 1]
-    # shard 1 = odd ids (9, 6, 1): cum_before 0/9/15 -> bins 0/0/1
-    assert [out[i]["bin_id"] for i in (1, 3, 5)] == [0, 0, 1]
-    assert out[5]["n_tokens"] == 1  # empty text counts 1 (ws_token_count)
 
 
 def test_lm_score(docs):
@@ -126,207 +63,6 @@ def test_lm_score(docs):
     assert got[3][1] < got[0][1]  # rare-token doc scores lower
 
 
-def test_hash_sample(docs):
-    import hashlib
-
-    from rdfshape_api_spark.functions.sampling import hash_sample
-
-    def bucket(i):
-        return int(hashlib.md5(f"mix:{i}".encode()).hexdigest()[:8], 16) % 1_000_000
-
-    # en: fractional keep; es: 2 full copies + fractional third; others dropped
-    out = hash_sample(docs, {"en": 0.5, "es": 2.25}).collect()
-    copies = {}
-    for r in out:
-        copies.setdefault(r["doc_id"], []).append(r["n_copy"])
-    for i in (0, 1, 2, 3, 5):  # en docs
-        expect = 1 if bucket(i) < 500_000 else 0
-        assert len(copies.get(i, [])) == expect, i
-    es_expect = 2 + (1 if bucket(4) < 250_000 else 0)
-    assert sorted(copies[4]) == list(range(es_expect))
-    # deterministic: same call, same sample
-    again = {(r["doc_id"], r["n_copy"]) for r in hash_sample(docs, {"en": 0.5, "es": 2.25}).collect()}
-    assert again == {(r["doc_id"], r["n_copy"]) for r in out}
-    import pytest
-
-    with pytest.raises(ValueError):
-        hash_sample(docs, {})
-
-
-def test_temperature_mix(docs):
-    import hashlib
-    import math
-
-    from rdfshape_api_spark.functions.sampling import temperature_mix
-
-    out = temperature_mix(docs, alpha=0.5, stratum_col="lang").collect()
-    # strata: en n=5 (max), es n=1 → w_en = 1.0, w_es = sqrt(5)
-    w = {r["lang"]: r["weight_micro"] for r in out}
-    assert w["en"] == 1_000_000
-    assert w["es"] == math.floor(math.sqrt(5.0) * 1_000_000)
-
-    def bucket(i):
-        return int(hashlib.md5(f"tmix:{i}".encode()).hexdigest()[:8], 16) % 1_000_000
-
-    copies = {}
-    for r in out:
-        copies.setdefault(r["doc_id"], []).append(r["n_copy"])
-    for i in (0, 1, 2, 3, 5):  # en: weight exactly 1 → exactly one copy
-        assert copies[i] == [0]
-    es_expect = 2 + (1 if bucket(4) < w["es"] % 1_000_000 else 0)
-    assert sorted(copies[4]) == list(range(es_expect))
-    # deterministic across reruns
-    again = {(r["doc_id"], r["n_copy"]) for r in
-             temperature_mix(docs, alpha=0.5, stratum_col="lang").collect()}
-    assert again == {(r["doc_id"], r["n_copy"]) for r in out}
-
-
-def test_epoch_shards(docs):
-    import hashlib
-
-    from rdfshape_api_spark.functions.sampling import epoch_shards
-
-    out = epoch_shards(docs, epochs=3, n_shards=64).collect()
-    assert len(out) == 18  # 6 docs × 3 epochs
-    for r in out:
-        key = hashlib.md5(f"epoch:{r['epoch']}:{r['doc_id']}".encode()).hexdigest()
-        assert r["sort_key"] == key
-        assert r["shard"] == int(key[:8], 16) % 64
-    # different epochs give independent assignments (not all identical)
-    by_epoch = {}
-    for r in out:
-        by_epoch.setdefault(r["epoch"], {})[r["doc_id"]] = r["shard"]
-    assert by_epoch[0] != by_epoch[1] or by_epoch[1] != by_epoch[2]
-
-
-def test_semantic_dedup(emb):
-    from rdfshape_api_spark.functions.similarity import semantic_dedup
-
-    rows = {r["vec_id"]: r for r in semantic_dedup(emb, threshold=0.9, n_planes=2).collect()}
-    assert len(rows) == 5  # one row per vector
-    # (0,1) and (3,4) are near-dup pairs: min id kept, other dropped
-    assert rows[0]["keep"] == 1 and rows[1]["keep"] == 0
-    assert rows[3]["keep"] == 1 and rows[4]["keep"] == 0
-    assert rows[2]["keep"] == 1 and rows[2]["n_near_dups"] == 0
-    assert rows[0]["n_near_dups"] == rows[1]["n_near_dups"] == 1
-
-
-def test_semantic_dedup_max_bucket_guard(spark, emb):
-    """Corpus-scale guard (VERDICT r4 #3): buckets over ``max_bucket``
-    skip the pair join and resolve as a dense family (min-id kept,
-    n_near_dups = b-1).  For an exact-duplicate family the guarded result
-    must EQUAL the unguarded one — same keeps, same counts — while the
-    pair-join input provably carries no over-cap bucket."""
-    from rdfshape_api_spark.functions.similarity import rp_bucket, semantic_dedup
-    from pyspark.sql import functions as F
-
-    # 12 identical vectors (one hot bucket) + 3 spread ones
-    rows = [(i, [1.0, 0.0, 0.0]) for i in range(12)]
-    rows += [(100, [0.0, 1.0, 0.0]), (101, [0.0, 0.95, 0.31]), (102, [0.0, 0.0, 1.0])]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-    base = {r["vec_id"]: r for r in semantic_dedup(df, 0.9, n_planes=2).collect()}
-    capped = {
-        r["vec_id"]: r
-        for r in semantic_dedup(df, 0.9, n_planes=2, max_bucket=4).collect()
-    }
-    dense = {r["vec_id"] for r in capped.values() if r["vec_id"] < 100}
-    assert len(dense) == 12
-    for vid in dense:
-        assert capped[vid]["keep"] == (1 if vid == 0 else 0)
-        assert capped[vid]["n_near_dups"] == 11
-        assert (capped[vid]["keep"], capped[vid]["n_near_dups"]) == (
-            base[vid]["keep"],
-            base[vid]["n_near_dups"],
-        )
-    # a cap no bucket exceeds must be a no-op vs the default
-    loose = {
-        r["vec_id"]: (r["keep"], r["n_near_dups"])
-        for r in semantic_dedup(df, 0.9, n_planes=2, max_bucket=1000).collect()
-    }
-    assert loose == {k: (r["keep"], r["n_near_dups"]) for k, r in base.items()}
-    # property: after exclusion, every surviving bucket is <= max_bucket,
-    # so per-bucket pair work is bounded by max_bucket^2 at any cell budget
-    sizes = (
-        df.withColumn("bucket", rp_bucket(F.col("embedding"), 2))
-        .groupBy("bucket").count()
-        .filter(F.col("count") <= 4)
-        .collect()
-    )
-    assert all(r["count"] ** 2 <= 16 for r in sizes)
-
-
-def test_embedding_near_dups_max_cell(spark, emb):
-    from rdfshape_api_spark.functions.similarity import embedding_near_dups
-
-    # label 0 holds 3 vectors; cap at 2 -> its pairs are excluded entirely
-    pairs = {
-        (r["vec_a"], r["vec_b"])
-        for r in embedding_near_dups(emb, 0.9, max_cell=2).collect()
-    }
-    assert pairs == {(3, 4)}
-    # cap above every cell size -> identical to the unguarded default
-    full = {
-        (r["vec_a"], r["vec_b"])
-        for r in embedding_near_dups(emb, 0.9, max_cell=100).collect()
-    }
-    assert full == {(0, 1), (3, 4)}
-
-
-def test_span_dedup(docs, spark):
-    from rdfshape_api_spark.functions.dedup import span_dedup
-
-    rows = {r["doc_id"]: r for r in span_dedup(docs, span_words=3).collect()}
-    assert len(rows) == 6  # one row per input doc, even all-dropped / empty
-    # docs 0/1/2 share "the quick brown" + "fox jumps over"; 0/1 share "the lazy dog"
-    assert rows[0]["clean_text"] == "" and rows[0]["n_spans_dropped"] == 3
-    assert rows[1]["clean_text"] == ""
-    assert rows[2]["clean_text"] == "a lazy dog" and rows[2]["n_spans_dropped"] == 2
-    assert rows[3]["clean_text"] == "completely different content about spark engines"
-    assert rows[5]["n_spans"] == 1 and rows[5]["n_spans_dropped"] == 0  # empty doc kept
-
-    # line mode: shared boilerplate line drops, unique lines survive in order
-    ml = spark.createDataFrame(
-        [(0, "keep me\ncookie banner\nlast line"), (1, "cookie banner\nother text")],
-        "doc_id long, text string",
-    )
-    out = {r["doc_id"]: r for r in span_dedup(ml, span_words=None).collect()}
-    assert out[0]["clean_text"] == "keep me\nlast line"
-    assert out[1]["clean_text"] == "other text" and out[1]["n_spans_dropped"] == 1
-
-
-def test_simhash(docs):
-    from rdfshape_api_spark.functions.dedup import simhash64, simhash_bucket_pairs
-
-    sh = {r["doc_id"]: r["simhash"] for r in simhash64(docs).collect()}
-    assert sh[0] == sh[1]  # identical text → identical simhash
-    pairs = {(r["doc_a"], r["doc_b"]) for r in simhash_bucket_pairs(docs).collect()}
-    assert (0, 1) in pairs
-
-
-def test_cosine_topk(emb):
-    from rdfshape_api_spark.functions.similarity import cosine_topk
-
-    top = cosine_topk(emb, k=1, n_queries=1).collect()
-    assert len(top) == 1
-    assert top[0]["neighbor_id"] == 1  # nearest to vec 0
-
-
-def test_embedding_near_dups(emb):
-    from rdfshape_api_spark.functions.similarity import embedding_near_dups
-
-    pairs = {(r["vec_a"], r["vec_b"]) for r in embedding_near_dups(emb, 0.9).collect()}
-    assert pairs == {(0, 1), (3, 4)}
-
-
-def test_lsh_ann_subset_of_bruteforce(emb):
-    from rdfshape_api_spark.functions.similarity import lsh_ann_topk
-
-    approx = {(r["query_id"], r["neighbor_id"]) for r in lsh_ann_topk(emb, k=2, n_queries=1).collect()}
-    # LSH may lose recall but must only return same-bucket candidates with ranks
-    assert all(q == 0 for q, _ in approx)
-
-
 def test_multimodal_plumbing(docs):
     from rdfshape_api_spark.functions.multimodal import (
         attach_binary,
@@ -351,34 +87,6 @@ def test_real_decoder_stub_raises(docs):
 
     with pytest.raises(Exception, match="(?i)decode|NotImplemented"):
         extract_features(attach_binary(docs), use_real_decoder=True).collect()
-
-
-def test_lsh_ann_recall_vs_bruteforce(spark):
-    """Recall@k gate: LSH-ANN must recover most of the exact top-k on a
-    clustered corpus (same-cluster vectors should land in one bucket)."""
-    import math
-    import random
-
-    from rdfshape_api_spark.functions.similarity import cosine_topk, lsh_ann_topk
-
-    rng = random.Random(7)
-    centers = [[rng.uniform(-1, 1) for _ in range(8)] for _ in range(4)]
-    rows = []
-    for vid in range(80):
-        c = centers[vid % 4]
-        vec = [x + rng.uniform(-0.05, 0.05) for x in c]
-        rows.append((vid, [float(v) for v in vec], vid % 4))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
-    exact = {
-        (r["query_id"], r["neighbor_id"])
-        for r in cosine_topk(emb, k=5, n_queries=8).collect()
-    }
-    approx = {
-        (r["query_id"], r["neighbor_id"])
-        for r in lsh_ann_topk(emb, k=5, n_queries=8).collect()
-    }
-    recall = len(exact & approx) / len(exact)
-    assert recall >= 0.8, f"recall@5 = {recall:.2f}"
 
 
 def test_extract_features_counts_mode(docs):
@@ -408,32 +116,6 @@ def test_redact_pii(spark):
     assert out[1]["clean_text"] == "server at <IP> responded"
     assert out[1]["n_redactions"] == 1
     assert out[2]["n_redactions"] == 0 and out[2]["clean_text"] == rows[2][1]
-
-
-def test_ivf_ann_recall_vs_bruteforce(spark):
-    """IVF (k-means cells + n_probe search) recall@5 gate on a clustered
-    corpus — same harness as the LSH gate above."""
-    import random
-
-    from rdfshape_api_spark.functions.similarity import cosine_topk, ivf_ann_topk
-
-    rng = random.Random(11)
-    centers = [[rng.uniform(-1, 1) for _ in range(8)] for _ in range(4)]
-    rows = []
-    for vid in range(80):
-        c = centers[vid % 4]
-        rows.append((vid, [float(x + rng.uniform(-0.05, 0.05)) for x in c], vid % 4))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
-    exact = {
-        (r["query_id"], r["neighbor_id"])
-        for r in cosine_topk(emb, k=5, n_queries=8).collect()
-    }
-    approx = {
-        (r["query_id"], r["neighbor_id"])
-        for r in ivf_ann_topk(emb, k=5, n_queries=8, n_cells=4, n_probe=2).collect()
-    }
-    recall = len(exact & approx) / len(exact)
-    assert recall >= 0.8, f"recall@5 = {recall:.2f}"
 
 
 def test_repetition_signals(spark):
@@ -722,127 +404,6 @@ def test_normalize_text(spark):
     assert out["d1"]["had_control_chars"] is False
 
 
-def test_pca_fit_project_matches_numpy(spark):
-    """Distributed moment-pass PCA == numpy PCA on the collected data:
-    same eigenvalues, same components (up to fixed sign), and the map-only
-    projection reproduces the numpy projection within 1 integer unit."""
-    import numpy as np
-
-    from rdfshape_api_spark.functions.similarity import pca_fit, pca_project
-
-    rng = np.random.RandomState(7)
-    # anisotropic cloud: two dominant directions in 8-d
-    base = rng.randn(300, 8) * np.array([10.0, 5.0, 1, 1, 0.5, 0.5, 0.1, 0.1])
-    rot, _ = np.linalg.qr(rng.randn(8, 8))
-    X = base @ rot + 3.0
-    emb = spark.createDataFrame(
-        [(f"v{i}", row.tolist()) for i, row in enumerate(X)],
-        "vec_id string, embedding array<double>",
-    ).repartition(5)
-
-    mean, comps, explained = pca_fit(emb, k=3)
-    assert np.allclose(mean, X.mean(axis=0), atol=1e-9)
-    cov = np.cov(X, rowvar=False)
-    vals = np.sort(np.linalg.eigvalsh(cov))[::-1]
-    assert np.allclose(explained, vals[:3], rtol=1e-9)
-    # components match numpy's (sign-fixed) eigenvectors
-    _, vecs = np.linalg.eigh(cov)
-    for j, comp in enumerate(comps):
-        v = vecs[:, np.argsort(np.linalg.eigvalsh(cov))[::-1][j]]
-        if v[np.argmax(np.abs(v))] < 0:
-            v = -v
-        assert np.allclose(comp, v, atol=1e-8)
-    # projection: exact integerized dot products
-    got = {r["vec_id"]: r["proj"] for r in pca_project(emb, mean, comps).collect()}
-    P = (X - X.mean(axis=0)) @ np.array(comps).T * 1000
-    for i in range(300):
-        assert all(abs(g - e) <= 1 for g, e in zip(got[f"v{i}"], np.floor(P[i])))
-
-
-def test_leakage_safe_split(spark, docs):
-    """Cluster-aware split: duplicate-family members share a split,
-    singletons key on themselves, assignment is deterministic and
-    ratio-driven."""
-    from rdfshape_api_spark.functions.sampling import leakage_safe_split
-
-    out = leakage_safe_split(
-        docs, {"train": 0.5, "val": 0.25, "test": 0.25}
-    ).collect()
-    assert len(out) == 6
-    by_id = {r["doc_id"]: r for r in out}
-    # docs 0/1/2 are one LSH duplicate family → same key, same split
-    fam = {by_id[i]["split_key"] for i in (0, 1, 2)}
-    assert len(fam) == 1
-    assert len({by_id[i]["split"] for i in (0, 1, 2)}) == 1
-    # singleton keys on itself
-    assert by_id[3]["split_key"] == 3
-    assert all(r["split"] in ("train", "val", "test") for r in out)
-    # deterministic across reruns
-    again = {
-        (r["doc_id"], r["split"])
-        for r in leakage_safe_split(
-            docs, {"train": 0.5, "val": 0.25, "test": 0.25}
-        ).collect()
-    }
-    assert again == {(r["doc_id"], r["split"]) for r in out}
-    with pytest.raises(ValueError, match="sum to 1"):
-        leakage_safe_split(docs, {"train": 0.5, "val": 0.1})
-
-
-def test_per_source_cap(spark):
-    import hashlib
-
-    from rdfshape_api_spark.functions.sampling import per_source_cap
-
-    rows = [(i, f"t{i}", "en", "A" if i < 7 else "B", 2) for i in range(10)]
-    docs = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    out = per_source_cap(docs, cap=3).collect()
-    # at most 3 per source; B has exactly 3 members so all survive
-    by_src = {}
-    for r in out:
-        by_src.setdefault(r["source"], []).append(r)
-    assert len(by_src["A"]) == 3 and len(by_src["B"]) == 3
-    assert all(1 <= r["src_rank"] <= 3 for r in out)
-    # selection = hash order, reproducible driver-side
-    expect_a = sorted(
-        range(7), key=lambda i: (hashlib.md5(f"cap:{i}".encode()).hexdigest(), i)
-    )[:3]
-    assert sorted(r["doc_id"] for r in by_src["A"]) == sorted(expect_a)
-    # rerun-stable
-    again = {(r["doc_id"], r["src_rank"]) for r in per_source_cap(docs, cap=3).collect()}
-    assert again == {(r["doc_id"], r["src_rank"]) for r in out}
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="cap"):
-        per_source_cap(docs, cap=0)
-
-
-def test_bloom_dedup_incremental(spark):
-    from rdfshape_api_spark.functions.dedup import (
-        bloom_build,
-        bloom_dedup_incremental,
-    )
-
-    corpus = spark.createDataFrame(
-        [(i, f"key{i % 5}") for i in range(20)], "doc_id long, fp string"
-    )
-    incoming = spark.createDataFrame(
-        [(100, "key0"), (101, "key3"), (102, "fresh-a"), (103, "fresh-b")],
-        "doc_id long, fp string",
-    )
-    bloom = bloom_build(corpus, "fp", k=5, m=1 << 16)
-    out = {r["doc_id"]: r["maybe_dup"] for r in
-           bloom_dedup_incremental(incoming, bloom, "fp", k=5, m=1 << 16).collect()}
-    # no false negatives ever: the two corpus keys MUST flag
-    assert out[100] is True and out[101] is True
-    # at 5 distinct corpus keys in a 64k-bit filter, FPs are ~(25/65536)^5
-    assert out[102] is False and out[103] is False
-    # bloom set is bounded by k * n_distinct_keys
-    assert bloom.count() <= 5 * 5
-
-
 def test_corpus_stats(spark):
     from rdfshape_api_spark.functions.textops import corpus_stats
 
@@ -863,123 +424,6 @@ def test_corpus_stats(spark):
     # ppm shares are integral and sum to <= 1e6
     assert sum(r["tokens_ppm"] for r in out.values()) <= 1_000_000
     assert out[("en", "s1")]["tokens_ppm"] == (5 * 1_000_000) // 12
-
-
-def test_bpe_train_and_encode(spark):
-    from rdfshape_api_spark.functions.tokenize import (
-        END,
-        _encode_word,
-        bpe_decode,
-        bpe_encode,
-        build_vocab,
-        train_bpe,
-        word_frequencies,
-    )
-
-    # hand-checkable corpus: 'low' x5, 'lowest' x2
-    wf = [("low", 5), ("lowest", 2)]
-    merges = train_bpe(wf, num_merges=4)
-    # pair counts round 1: (l,o)=7 (o,w)=7 ... tie broken lexicographically
-    assert merges[0] == ("l", "o")
-    assert merges[1] == ("lo", "w")
-    vocab = build_vocab(merges, wf)
-    assert END in vocab and ("low" + END) in vocab
-
-    ids_low = [vocab.get(t, -1) for t in _encode_word("low", {p: i for i, p in enumerate(merges)})]
-    assert -1 not in ids_low
-
-    docs = spark.createDataFrame(
-        [(0, "low low lowest"), (1, "newword low")], "doc_id long, text string"
-    )
-    out = {r["doc_id"]: r for r in bpe_encode(docs, merges, vocab).collect()}
-    assert out[0]["n_tokens"] == len(out[0]["token_ids"])
-    # decode round-trips (OOV chars of 'newword' not in training chars? l/o/w/e/s/t + n... 'n' unseen => -1)
-    assert bpe_decode(out[0]["token_ids"], vocab) == "low low lowest"
-    # rerun-stable
-    again = {r["doc_id"]: list(r["token_ids"]) for r in bpe_encode(docs, merges, vocab).collect()}
-    assert again[0] == list(out[0]["token_ids"])
-
-
-def test_bpe_word_frequencies_deterministic(spark):
-    from rdfshape_api_spark.functions.tokenize import train_bpe, word_frequencies
-
-    docs = spark.createDataFrame(
-        [(i, "alpha beta beta gamma") for i in range(3)], "doc_id long, text string"
-    )
-    wf = [(r["word"], r["n"]) for r in word_frequencies(docs, top_k=10).collect()]
-    assert wf[0] == ("beta", 6)
-    # full determinism end-to-end: same merges twice
-    assert train_bpe(wf, 5) == train_bpe(wf, 5)
-
-
-def test_pack_token_ids(spark):
-    import pytest as _pytest
-
-    from rdfshape_api_spark.functions.sampling import pack_token_ids
-
-    # 2 shards (doc_id % 2); shard 0: docs 0,2 -> 7 tokens; shard 1: docs 1,3 -> 6
-    rows = [
-        (0, [1, 2, 3]),
-        (1, [10, 11]),
-        (2, [4, 5, 6, 7]),
-        (3, [12, 13, 14, 15]),
-    ]
-    enc = spark.createDataFrame(rows, "doc_id long, token_ids array<int>")
-    out = {(r["shard"], r["seq_idx"]): list(r["token_ids"])
-           for r in pack_token_ids(enc, seq_len=3, n_shards=2).collect()}
-    # shard 0 stream: 1 2 3 4 5 6 7 -> [1,2,3],[4,5,6], remainder [7] dropped
-    assert out[(0, 0)] == [1, 2, 3]
-    assert out[(0, 1)] == [4, 5, 6]
-    # shard 1 stream: 10 11 12 13 14 15 -> two full sequences
-    assert out[(1, 0)] == [10, 11, 12]
-    assert out[(1, 1)] == [13, 14, 15]
-    assert len(out) == 4
-    # partition-layout independence: different parallelism, same result
-    again = {(r["shard"], r["seq_idx"]): list(r["token_ids"])
-             for r in pack_token_ids(enc.repartition(7), seq_len=3, n_shards=2).collect()}
-    assert again == out
-    with _pytest.raises(ValueError, match="seq_len"):
-        pack_token_ids(enc, seq_len=0)
-
-
-def test_pq_ann_recall_vs_bruteforce(spark):
-    """PQ-ADC + exact re-rank must recover most of the exact top-k on a
-    clustered corpus; codes stay in range and encoding is deterministic."""
-    import random
-
-    from rdfshape_api_spark.functions.similarity import (
-        cosine_topk,
-        pq_ann_topk,
-        pq_encode,
-        pq_fit,
-    )
-
-    rng = random.Random(11)
-    centers = [[rng.uniform(-1, 1) for _ in range(8)] for _ in range(4)]
-    rows = []
-    for vid in range(80):
-        c = centers[vid % 4]
-        vec = [x + rng.uniform(-0.05, 0.05) for x in c]
-        rows.append((vid, [float(v) for v in vec], vid % 4))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
-
-    books = pq_fit(emb, m=4, n_codes=8)
-    assert len(books) == 4 and all(len(b) == 8 for b in books)
-    enc1 = sorted((r.vec_id, tuple(r.codes)) for r in pq_encode(emb, books).collect())
-    enc2 = sorted((r.vec_id, tuple(r.codes)) for r in pq_encode(emb, books).collect())
-    assert enc1 == enc2  # deterministic
-    assert all(0 <= c < 8 for _, codes in enc1 for c in codes)
-
-    exact = {
-        (r["query_id"], r["neighbor_id"])
-        for r in cosine_topk(emb, k=5, n_queries=8).collect()
-    }
-    approx = {
-        (r["query_id"], r["neighbor_id"])
-        for r in pq_ann_topk(emb, k=5, n_queries=8, m=4, n_codes=8, rerank=20).collect()
-    }
-    recall = len(exact & approx) / len(exact)
-    assert recall >= 0.8, f"recall@5 = {recall:.2f}"
 
 
 def _make_bmp(img, bpp=24, bottom_up=True):
@@ -1198,27 +642,3 @@ def test_decode_image_real_dispatches_gif():
     idx = np.array([[0, 1], [1, 0]], dtype=np.uint8)
     img = _decode_image_real(_make_gif(idx, [(5, 5, 5), (7, 7, 7)]))
     assert img.shape == (2, 2, 3) and img[0, 1, 0] == 7
-
-
-def test_semantic_dedup_kmeans_blocking(spark):
-    """k-means-cell blocking (the cells-scale-with-N path): same keep
-    semantics as the hyperplane form on well-separated clusters, and the
-    max_bucket fall-through composes."""
-    from rdfshape_api_spark.functions.similarity import semantic_dedup_kmeans
-
-    rows = [(i, [1.0, 0.0 + i * 1e-4, 0.0]) for i in range(4)]       # cluster A
-    rows += [(10 + i, [0.0, 1.0, 0.0 + i * 1e-4]) for i in range(3)]  # cluster B
-    rows += [(100, [0.0, 0.0, 1.0])]                                  # singleton
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = {r["vec_id"]: r for r in semantic_dedup_kmeans(df, 0.99, n_cells=3).collect()}
-    assert len(out) == 8
-    assert out[0]["keep"] == 1 and all(out[i]["keep"] == 0 for i in (1, 2, 3))
-    assert out[10]["keep"] == 1 and out[11]["keep"] == 0 and out[12]["keep"] == 0
-    assert out[100]["keep"] == 1 and out[100]["n_near_dups"] == 0
-    # dense-family fall-through inside a cell
-    capped = {
-        r["vec_id"]: r
-        for r in semantic_dedup_kmeans(df, 0.99, n_cells=3, max_bucket=2).collect()
-    }
-    assert capped[0]["keep"] == 1 and capped[3]["keep"] == 0
-    assert capped[3]["n_near_dups"] == 3  # bucket size - 1

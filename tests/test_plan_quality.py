@@ -128,86 +128,6 @@ def test_text_features_is_map_only(spark):
     assert "Exchange" not in plan
 
 
-def test_hash_sample_is_map_only(spark):
-    """Corpus mixing must be a pure map: filter + explode, no Exchange —
-    the sampler runs as part of the scan at 100 TB."""
-    from rdfshape_api_spark.functions.sampling import hash_sample
-
-    docs = spark.createDataFrame(
-        [(1, "a", "en"), (2, "b", "es")], "doc_id bigint, text string, lang string"
-    )
-    plan = _plan(hash_sample(docs, {"en": 0.5, "es": 2.25}))
-    assert "Exchange" not in plan
-
-
-def test_temperature_mix_broadcasts_weights(spark):
-    """The per-stratum weight table (languages/sources — tiny) must be
-    the broadcast side: the corpus scan itself never shuffles."""
-    from rdfshape_api_spark.functions.sampling import temperature_mix
-
-    docs = spark.createDataFrame(
-        [(1, "a", "en"), (2, "b", "es")], "doc_id bigint, text string, lang string"
-    )
-    plan = _plan(temperature_mix(docs, alpha=0.5, stratum_col="lang"))
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-    # corpus side reaches the join scan-direct: no SortMergeJoin anywhere
-    assert "SortMergeJoin" not in plan
-
-
-def test_epoch_shards_is_map_only(spark):
-    """Per-epoch resharding is a pure map (explode + md5): the only
-    exchange in a real pipeline is the partitioned write itself."""
-    from rdfshape_api_spark.functions.sampling import epoch_shards
-
-    docs = spark.createDataFrame([(1,), (2,)], "doc_id bigint")
-    plan = _plan(epoch_shards(docs, epochs=2, n_shards=8))
-    assert "Exchange" not in plan
-
-
-def test_pack_sequences_single_exchange(spark):
-    """Packing shuffles once (on the shard key for the window); the
-    window sort is shard-local — no global sort, no second Exchange."""
-    from rdfshape_api_spark.functions.sampling import pack_sequences
-
-    docs = spark.createDataFrame(
-        [(i, "w " * (i + 1)) for i in range(8)], "doc_id bigint, text string"
-    )
-    plan = _plan(pack_sequences(docs, max_tokens=4, n_shards=2))
-    assert plan.count("Exchange") == 1
-    assert "rangepartitioning" not in plan.lower()  # no global sort
-
-
-def test_decontaminate_broadcasts_benchmark(spark):
-    """The eval set must be the broadcast side: no shuffle of the
-    training-corpus n-grams before the semi-join."""
-    from rdfshape_api_spark.functions.dedup import decontaminate
-
-    docs = spark.createDataFrame(
-        [(1, "a b c d"), (2, "x y z w")], "doc_id bigint, text string"
-    )
-    bench = docs.filter("doc_id = 1")
-    plan = _plan(decontaminate(docs, bench, n=2))
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-
-
-def test_lsh_incremental_probe_uses_broadcast(spark):
-    """The corpus band table must be probed via a BROADCAST of the batch's
-    band keys (semi-join) and never self-joined or cross-joined."""
-    from rdfshape_api_spark.functions.dedup import lsh_incremental_keep, minhash_bands
-
-    corpus = spark.createDataFrame(
-        [(i, f"corpus doc number {i} text") for i in range(20)],
-        "doc_id long, text string",
-    )
-    batch = spark.createDataFrame(
-        [(100 + i, f"batch doc number {i} text") for i in range(5)],
-        "doc_id long, text string",
-    )
-    plan = _plan(lsh_incremental_keep(minhash_bands(corpus), batch))
-    assert "BroadcastExchange" in plan
-    assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
-
-
 def test_identity_edges_plan_is_star_not_pairs(spark):
     """propose_identity_edges: one equi-join of keyed rows against the
     aggregated group table — no self-join pair enumeration, no cartesian."""
@@ -223,6 +143,24 @@ def test_identity_edges_plan_is_star_not_pairs(spark):
     import re as _re
     joins = _re.findall(r"(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)", plan)
     assert len(joins) == 1, plan
+
+
+def test_owl_sameas_closure_no_cartesian(spark):
+    """sameAs merge: the member→canon rewrite is two hash joins on the
+    mapping — no cartesian products, no per-row Python stages."""
+    from rdfshape_api_spark.operators.inference import OWL_SAMEAS, owl_sameas_closure
+
+    tri = spark.createDataFrame(
+        [
+            ("d", "http://e/b", OWL_SAMEAS, "iri", "http://e/a", None, None),
+            ("d", "http://e/b", "http://e/p", "iri", "http://e/c", None, None),
+        ],
+        "doc_sha256 string, subj string, pred string, obj_kind string, "
+        "obj_value string, obj_lang string, obj_datatype string",
+    )
+    plan = _plan(owl_sameas_closure(tri))
+    assert "CartesianProduct" not in plan
+    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
 def test_winnow_sets_is_map_only(spark):
@@ -259,57 +197,6 @@ def test_repo_stats_single_exchange(spark):
     # count(distinct ...) expands to a two-level agg over ONE shuffle key
     assert plan.count("Exchange") <= 2
     assert "HashAggregate" in plan
-
-
-def test_pq_encode_is_map_only(spark):
-    """PQ encoding must be pure JVM map work: codebooks inline as
-    literals, no Exchange, no Python stage."""
-    from rdfshape_api_spark.functions.similarity import pq_encode
-
-    emb = spark.createDataFrame(
-        [(0, [float(i) for i in range(8)]), (1, [float(8 - i) for i in range(8)])],
-        "vec_id long, embedding array<float>",
-    )
-    books = [
-        [[0.0, 0.0], [1.0, 1.0]],
-        [[0.0, 1.0], [1.0, 0.0]],
-        [[0.5, 0.5], [0.1, 0.9]],
-        [[0.2, 0.8], [0.9, 0.1]],
-    ]
-    plan = _plan(pq_encode(emb, books))
-    assert "Exchange" not in plan
-    assert "Python" not in plan and "ArrowEval" not in plan
-
-
-def test_semantic_dedup_guard_broadcasts_overcap_buckets(spark):
-    """The max_bucket dense-family path must resolve over-cap buckets with
-    a BROADCAST of the (tiny) over-cap bucket list on both the family join
-    and the anti-join — never a shuffle of the vector table against it."""
-    from rdfshape_api_spark.functions.similarity import semantic_dedup
-
-    rows = [(i, [1.0, float(i % 3) / 10, 0.0]) for i in range(30)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    plan = _plan(semantic_dedup(emb, 0.9, n_planes=2, max_bucket=4))
-    assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
-    assert "CartesianProduct" not in plan
-
-
-def test_owl_sameas_closure_no_cartesian(spark):
-    """sameAs merge: the member→canon rewrite is two hash joins on the
-    mapping — no cartesian products, no per-row Python stages."""
-    from rdfshape_api_spark.operators.inference import OWL_SAMEAS, owl_sameas_closure
-
-    tri = spark.createDataFrame(
-        [
-            ("d", "http://e/b", OWL_SAMEAS, "iri", "http://e/a", None, None),
-            ("d", "http://e/b", "http://e/p", "iri", "http://e/c", None, None),
-        ],
-        "doc_sha256 string, subj string, pred string, obj_kind string, "
-        "obj_value string, obj_lang string, obj_datatype string",
-    )
-    plan = _plan(owl_sameas_closure(tri))
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
 def test_w3c_batch_simple_jobs_share_one_aggregate(spark):

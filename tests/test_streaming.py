@@ -215,120 +215,3 @@ def test_kafka_source_integration(spark, tmp_path):
     )
     status = stream_validate(spark, str(tmp_path / "in"), str(tmp_path / "out"), cfg)
     assert status["code"] in (3000, 3003, 3005)
-
-
-def test_windowed_event_counts_watermark_drops_late_rows(spark, tmp_path):
-    """Tumbling windows + watermark over a file stream: a row older than
-    the watermark is dropped; finalized windows emit exactly once
-    (append mode)."""
-    import os
-    import time
-
-    from rdfshape_api_spark.streaming.windowed_events import windowed_event_counts
-
-    src = tmp_path / "events_in"
-    src.mkdir()
-    schema = "event_id bigint, ts timestamp, user_id bigint, event_type string, value double"
-
-    def write_batch(name, rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / "stage" / name))
-        import glob
-        import shutil
-
-        part = glob.glob(str(tmp_path / "stage" / name / "part-*.parquet"))[0]
-        shutil.copy(part, str(src / f"{name}.parquet"))
-
-    from datetime import datetime
-
-    t = datetime(2024, 1, 1, 10, 0, 0)
-
-    def at(h, m):
-        return datetime(2024, 1, 1, h, m, 0)
-
-    write_batch(
-        "b1",
-        [
-            (1, at(10, 5), 1, "click", 1.0),
-            (2, at(10, 40), 1, "click", 2.0),
-            # advances the watermark to 13:00 - 2h = 11:00 → the 10:00
-            # window is finalized
-            (3, at(13, 0), 2, "view", 3.0),
-        ],
-    )
-    stream = spark.readStream.schema(schema).parquet(str(src))
-    agg = windowed_event_counts(stream, window_minutes=60, watermark_minutes=120)
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("win_counts")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # late row for the CLOSED 10:00 window (watermark 11:00) + a row
-        # at 16:00 that pushes the watermark to 14:00, finalizing 13:00
-        write_batch(
-            "b2",
-            [
-                (4, at(10, 50), 1, "click", 9.0),  # late → dropped
-                (5, at(16, 0), 2, "view", 4.0),
-            ],
-        )
-        q.processAllAvailable()
-        rows = {
-            (r["window_start"].hour, r["event_type"]): r["n_events"]
-            for r in spark.sql("SELECT * FROM win_counts").collect()
-        }
-        # 10:00 window emitted once with the ON-TIME rows only
-        assert rows[(10, "click")] == 2
-        assert rows[(13, "view")] == 1
-    finally:
-        q.stop()
-
-
-def test_sessionize_stream_matches_batch_sessions(spark, tmp_path):
-    """session_window sessions over a (bounded) stream agree with the
-    batch gap-sessionization session count per user."""
-    from rdfshape_api_spark.streaming.windowed_events import sessionize_stream
-
-    src = tmp_path / "sess_in"
-    src.mkdir()
-    schema = "event_id bigint, ts timestamp, user_id bigint, event_type string, value double"
-    from datetime import datetime
-
-    rows = [
-        (1, datetime(2024, 1, 1, 9, 0), 1, "a", 0.0),
-        (2, datetime(2024, 1, 1, 9, 10), 1, "a", 0.0),   # same session
-        (3, datetime(2024, 1, 1, 11, 0), 1, "a", 0.0),   # new session
-        (4, datetime(2024, 1, 1, 9, 5), 2, "a", 0.0),
-    ]
-    df = spark.createDataFrame(rows, schema).coalesce(1)
-    df.write.mode("overwrite").parquet(str(tmp_path / "stage_s"))
-    import glob
-    import shutil
-
-    for i, part in enumerate(
-        glob.glob(str(tmp_path / "stage_s" / "part-*.parquet"))
-    ):
-        shutil.copy(part, str(src / f"s{i}.parquet"))
-
-    stream = spark.readStream.schema(schema).parquet(str(src))
-    q = (
-        sessionize_stream(stream, gap_minutes=30)
-        .writeStream.format("memory")
-        .queryName("sess")
-        .outputMode("complete")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        out = spark.sql("SELECT * FROM sess").collect()
-        per_user = {}
-        for r in out:
-            per_user.setdefault(r["user_id"], []).append(r["n_events"])
-        assert sorted(per_user[1]) == [1, 2]  # two sessions: 2 events + 1
-        assert per_user[2] == [1]
-    finally:
-        q.stop()

@@ -121,49 +121,3 @@ def test_render_svg_from_to_dot(spark):
     assert {"ex:alice", "ex:bob", "ex:knows", "ex:age", 'Bob@en'} <= texts
     # two subjects + one IRI object shared node + 2 literal leaves
     assert len(root.findall(f".//{ns}line")) == t.count()
-
-
-def test_dot_to_png_roundtrips_through_own_decoder():
-    """dot_to_png emits valid PNG (verified by the engine's own subset
-    decoder), deterministic bytes, with node fills / borders / ink drawn."""
-    import numpy as np
-
-    from rdfshape_api_spark.functions.multimodal import decode_png
-    from rdfshape_api_spark.operators.visualize import dot_to_png
-
-    dot = (
-        'digraph "g" {\n'
-        '  "a" [shape=ellipse, label="http://e/a"] ;\n'
-        '  "b" [shape=box, label="lit: 21.5"] ;\n'
-        '  "a" -> "b" [label="p"] ;\n'
-        "}"
-    )
-    png = dot_to_png(dot)
-    assert png[:8] == b"\x89PNG\r\n\x1a\n"
-    assert png == dot_to_png(dot)  # deterministic
-    img = decode_png(png)
-    assert img.ndim == 3 and img.shape[2] == 3 and img.shape[0] > 50
-    # box fill, ellipse fill, border and text ink all present
-    assert (img == np.array([255, 255, 238])).all(axis=2).any()
-    assert (img == np.array([238, 238, 255])).all(axis=2).any()
-    assert (img == np.array([51, 51, 51])).all(axis=2).any()
-    # background stays white at the corners
-    assert (img[0, 0] == 255).all()
-
-
-def test_render_png_from_to_dot(spark):
-    from rdfshape_api_spark.functions.multimodal import decode_png
-    from rdfshape_api_spark.operators.serialize import to_dot
-    from rdfshape_api_spark.operators.visualize import render_png
-    from rdfshape_api_spark.sources.extract import extract_triples
-
-    docs = spark.createDataFrame(
-        [("r", "p", "c", "ttl",
-          "@prefix ex: <http://ex.org/> .\nex:a ex:p ex:b .")],
-        "repo string, path string, commit string, lang string, content string",
-    )
-    t = extract_triples(docs)
-    sha = t.select("doc_sha256").first()[0]
-    png = render_png(to_dot(t, [("ex", "http://ex.org/")]), sha, name="g")
-    img = decode_png(png)
-    assert img.shape[2] == 3 and img.shape[0] >= 100  # two layers drawn

@@ -50,11 +50,9 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from rdfshape_api_spark.session import get_spark
 
-    spark = get_spark(master="local[16]")
+    spark = get_spark()
 
     con = duckdb.connect()
-    for t in "region nation customer supplier part orders lineitem events documents embeddings".split():
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     failures = 0
