@@ -4,14 +4,16 @@ North rule: "resumable from checkpoint with per-partition lineage +
 metrics".  The reference is stateless per request (SURVEY §4: no
 checkpoint/resume), so this design is Spark-native:
 
-* every stage writes its output to a stage directory (parquet `_SUCCESS`
-  marks stage completion — the coarse checkpoint);
+* every stage writes its output to a stage directory, and parquet's
+  `_SUCCESS` marks the stage complete (the checkpoint);
 * a **lineage table** per stage records one row per work partition (we key
   by ``repo`` — the ingest range-partitioning key): input docs, emitted
-  triples, parse errors, sha-invariant violations, wall time;
-* resume = skip stages whose `_SUCCESS` exists; within the extraction
-  stage, an **anti-join on completed repos** (from the lineage table)
-  restricts re-work to unfinished partitions.
+  triples, parse errors, sha-invariant violations; stage wall times go to
+  the run's metrics dict (:class:`StageTimer`), not to lineage rows;
+* resume = skip stage directories whose `_SUCCESS` exists; a bucketed
+  extraction (``run_pipeline(extract_buckets=B)``) also skips each
+  ``bucket=<b>`` directory that has one, so a crashed run re-does only the
+  unfinished buckets.
 """
 
 from __future__ import annotations
@@ -19,7 +21,7 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
 def sha_invariant_violations(docs: DataFrame) -> DataFrame:
@@ -104,14 +106,6 @@ def triple_precision_recall(got: DataFrame, expected: DataFrame) -> dict:
 
 def stage_complete(stage_dir: str) -> bool:
     return os.path.exists(os.path.join(stage_dir, "_SUCCESS"))
-
-
-def completed_repos(spark: SparkSession, lineage_dir: str) -> DataFrame | None:
-    """Repos already finished in a previous (partial) run — the anti-join
-    side of resume. None if no lineage exists yet."""
-    if not stage_complete(lineage_dir):
-        return None
-    return spark.read.parquet(lineage_dir).select("repo").distinct()
 
 
 class StageTimer:

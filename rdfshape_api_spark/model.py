@@ -17,7 +17,7 @@ parquet column pruning, predicate pushdown):
 
 Scale note: the canonical store is written partitioned by ``pred`` (north
 rule) with a ``bucket`` sub-key = ``pmod(hash(subj), k)`` so hot predicates
-(``rdf:type``) do not become single giant partitions.
+(``rdf:type``) do not become single giant partitions (``STORE_SCHEMA``).
 """
 
 from __future__ import annotations
@@ -96,6 +96,18 @@ TRIPLE_COLUMNS = [
     "obj_lang",
     "obj_datatype",
 ]
+TRIPLE_SCHEMA = T.StructType([f for f in RAW_TRIPLE_FIELDS if f.name in TRIPLE_COLUMNS])
+
+# --- canonical store: triples + the two layout (partition) columns ----------
+# Every store read pins this schema: no footer-inference job at plan time,
+# and a missing store directory raises instead of reading as empty.
+STORE_SCHEMA = T.StructType(
+    TRIPLE_SCHEMA.fields
+    + [
+        T.StructField("pred_part", T.StringType(), True),
+        T.StructField("bucket", T.IntegerType(), True),
+    ]
+)
 
 # --- prefix table (SURVEY §2.3 P8) ------------------------------------------
 PREFIX_SCHEMA = T.StructType(

@@ -50,7 +50,9 @@ def triples_with_subject(df: DataFrame, node: str) -> DataFrame:
 
 
 def triples_with_predicate(df: DataFrame, pred: str) -> DataFrame:
-    # on the canonical store this is a partition-pruned scan (pred_part key)
+    # a data filter: parquet skips row groups by `pred` statistics but opens
+    # every file; for a directory-pruned read of the canonical store use
+    # canonicalize.read_store(spark, path, preds=[pred])
     return df.filter(F.col("pred") == pred)
 
 

@@ -22,7 +22,7 @@ distributed-friendly rules:
 * **Canonical store** — parquet partitioned by predicate (north rule) with
   a ``bucket = pmod(xxhash64(subj), k)`` sub-key so hot predicates
   (``rdf:type``) split into k files instead of one giant partition
-  (SURVEY §7.3).
+  (SURVEY §7.3).  ``read_store`` is its one reader.
 """
 
 from __future__ import annotations
@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, functions as F
 from rdfshape_api_spark.model import (
     KIND_BNODE,
     SKOLEM_PREFIX,
-    TRIPLE_COLUMNS,
+    STORE_SCHEMA,
     XSD_DECIMAL,
     XSD_INTEGER,
 )
@@ -444,12 +444,6 @@ def write_canonical_store(
     )
 
 
-def read_canonical_store(spark, path: str) -> DataFrame:
-    df = spark.read.parquet(path)
-    keep = [c for c in TRIPLE_COLUMNS if c in df.columns]
-    return df.select(*keep)
-
-
 def pred_partition_value(pred: str) -> str:
     """Driver-side twin of :func:`pred_partition_key` for a literal
     predicate — needed to push a predicate filter down to the store's
@@ -462,14 +456,19 @@ def pred_partition_value(pred: str) -> str:
     return f"{local}_{hashlib.md5(pred.encode()).hexdigest()[:8]}"
 
 
-def read_store_predicate(spark, path: str, pred: str) -> DataFrame:
-    """Partition-pruned scan of one predicate (SURVEY §2.3 P3: predicate
-    selection on the canonical store is a pruned directory read — the
-    `pred_part=` filter reaches Catalyst as a partition filter, so only
-    that predicate's files are listed/read)."""
-    df = spark.read.parquet(path)
-    out = df.filter(
-        (F.col("pred_part") == pred_partition_value(pred)) & (F.col("pred") == pred)
-    )
-    keep = [c for c in TRIPLE_COLUMNS if c in out.columns]
-    return out.select(*keep)
+def read_store(spark, path: str, preds=None) -> DataFrame:
+    """Read a store written by :func:`write_canonical_store`, with the
+    pinned ``STORE_SCHEMA`` columns (triples + ``pred_part``, ``bucket``).
+
+    The schema is never inferred: planning runs no footer-reading job, a
+    store written from zero rows (only ``_SUCCESS``) reads as empty, and a
+    missing directory raises ``AnalysisException``.  ``preds`` restricts
+    the scan to those predicates (SURVEY §2.3 P3): the ``pred_part``
+    literals reach the scan as partition filters, so only their
+    directories are listed and read."""
+    df = spark.read.schema(STORE_SCHEMA).parquet(path)
+    if preds is None:
+        return df
+    preds = sorted(set(preds))
+    parts = sorted({pred_partition_value(p) for p in preds})
+    return df.filter(F.col("pred_part").isin(parts) & F.col("pred").isin(preds))

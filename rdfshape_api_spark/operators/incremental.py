@@ -39,7 +39,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from rdfshape_api_spark.model import TRIPLE_COLUMNS
+from rdfshape_api_spark.model import TRIPLE_COLUMNS, TRIPLE_SCHEMA
 
 
 def _extract_canonical(docs: DataFrame) -> DataFrame:
@@ -101,6 +101,7 @@ def incremental_merge_verdicts(
 # ---------------------------------------------------------------------------
 
 _VERSION_FILE = "_SNAPSHOT_VERSION"
+_RETRACT_SCHEMA = "repo string, path string"
 
 
 def _log_dir(store_dir: str, kind: str, version: int) -> str:
@@ -191,37 +192,26 @@ def read_snapshot(spark: SparkSession, store_dir: str) -> DataFrame:
     One broadcast left join: rows (base at version 0, adds at their merge
     version) survive iff no retract of their ``(repo, path)`` happened at
     a LATER version — ``max(retract_v) <= row_v`` per key, aggregated on
-    the broadcast (delta-sized) side.  The base scan itself is untouched:
-    predicate-directory pruning and column pruning still apply before the
-    probe.
-    """
-    from pyspark.errors import AnalysisException
+    the broadcast (delta-sized) side.  Column pruning and pushed-down
+    data filters still apply to the base scan before the probe; the
+    result drops ``pred_part``, so there is no directory pruning.
 
-    from rdfshape_api_spark.model import RAW_TRIPLE_FIELDS
-    from rdfshape_api_spark.operators.canonicalize import read_canonical_store
+    Base and logs are read with pinned schemas, so building the frame runs
+    no Spark job.  A base written over zero documents reads as empty; a
+    missing ``base/`` or log directory raises Spark's path-not-found error.
+    """
+    from rdfshape_api_spark.operators.canonicalize import read_store
 
     v = snapshot_version(store_dir)
-    try:
-        base = read_canonical_store(spark, os.path.join(store_dir, "base"))
-    except AnalysisException:
-        # an empty base (store initialized before any documents existed)
-        # writes no parquet files to infer from — start from zero triples
-        import pyspark.sql.types as T
-
-        schema = T.StructType(
-            [f for f in RAW_TRIPLE_FIELDS if f.name in TRIPLE_COLUMNS]
-        )
-        base = spark.createDataFrame([], schema)
+    base = read_store(spark, os.path.join(store_dir, "base")).select(*TRIPLE_COLUMNS)
     tri = base.withColumn("_v", F.lit(0))
     retracts = None
     for i in range(1, v + 1):
-        adds = spark.read.parquet(_log_dir(store_dir, "adds", i)).select(
-            *[c for c in TRIPLE_COLUMNS]
-        )
+        adds = spark.read.schema(TRIPLE_SCHEMA).parquet(_log_dir(store_dir, "adds", i))
         tri = tri.unionByName(adds.withColumn("_v", F.lit(i)))
-        r = spark.read.parquet(_log_dir(store_dir, "retracts", i)).withColumn(
-            "_rv", F.lit(i)
-        )
+        r = spark.read.schema(_RETRACT_SCHEMA).parquet(
+            _log_dir(store_dir, "retracts", i)
+        ).withColumn("_rv", F.lit(i))
         retracts = r if retracts is None else retracts.unionByName(r)
     if retracts is None:
         return tri.drop("_v")
@@ -231,7 +221,7 @@ def read_snapshot(spark: SparkSession, store_dir: str) -> DataFrame:
         .filter(F.col("_max_rv").isNull() | (F.col("_max_rv") <= F.col("_v")))
         .drop("_v", "_max_rv")
     )
-    return out.select(*[c for c in TRIPLE_COLUMNS if c in out.columns])
+    return out.select(*TRIPLE_COLUMNS)
 
 
 def stream_merge_snapshots(

@@ -25,6 +25,7 @@ from rdfshape_api_spark.lineage import (
 from rdfshape_api_spark.model import TRIPLE_COLUMNS
 from rdfshape_api_spark.operators.canonicalize import (
     canonicalize,
+    read_store,
     write_canonical_store,
 )
 from rdfshape_api_spark.plans import parse_shacl, parse_shexc
@@ -37,14 +38,18 @@ def _store_pruned_for_schemas(spark, store_dir: str, schemas) -> DataFrame:
     predicate — the north rule's payoff: a validation job over a 100 TB
     store reads only its schemas' predicate directories).  CLOSED shapes
     must see every predicate → no pruning."""
+    return read_store(spark, store_dir, _schema_preds(schemas)).select(*TRIPLE_COLUMNS)
+
+
+def _schema_preds(schemas) -> set[str] | None:
+    """Every predicate the schemas can observe; None if a shape is CLOSED."""
     from rdfshape_api_spark.model import RDF_TYPE
-    from rdfshape_api_spark.operators.canonicalize import pred_partition_value
 
     preds: set[str] = {RDF_TYPE}  # shapemap selectors / sh:targetClass
     for schema in schemas:
         for sh in schema.shapes.values():
             if sh.closed:
-                return spark.read.parquet(store_dir).select(*TRIPLE_COLUMNS)
+                return None
             for tc in list(sh.constraints) + [
                 t for grp in (sh.alternatives or []) for t in grp
             ]:
@@ -64,12 +69,7 @@ def _store_pruned_for_schemas(spark, store_dir: str, schemas) -> DataFrame:
                         preds.add(p)
             preds.update(sh.target_subjects_of)
             preds.update(sh.target_objects_of)
-    parts = sorted({pred_partition_value(p) for p in preds})
-    return (
-        spark.read.parquet(store_dir)
-        .filter(F.col("pred_part").isin(parts))
-        .select(*TRIPLE_COLUMNS)
-    )
+    return preds
 
 
 def run_pipeline(
@@ -183,7 +183,8 @@ def run_pipeline(
             write_canonical_store(
                 canon, store_dir, subj_buckets=store_subj_buckets, dedup=True
             )
-    triples = spark.read.parquet(store_dir).select(*TRIPLE_COLUMNS)
+    store = read_store(spark, store_dir)
+    triples = store.select(*TRIPLE_COLUMNS)
 
     # -- stage 3: validation (all schemas in ONE pass over the store) --------
     if not (resume and stage_complete(verdict_dir)):
@@ -211,7 +212,7 @@ def run_pipeline(
     if full_lineage:
         from rdfshape_api_spark.lineage import store_lineage, verdict_lineage
 
-        store_lineage(spark.read.parquet(store_dir)).write.mode(
+        store_lineage(store).write.mode(
             "overwrite"
         ).parquet(os.path.join(out_dir, "lineage_store"))
         if os.path.exists(verdict_dir):

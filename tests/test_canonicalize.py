@@ -3,7 +3,7 @@ salted dedup equivalence, store partitioning."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import re
 
 from rdfshape_api_spark.operators import canonicalize as C
 
@@ -71,14 +71,14 @@ def test_store_partitioned_by_predicate(spark, tmp_path):
 
     parts = [p for p in os.listdir(path) if p.startswith("pred_part=")]
     assert len(parts) == 2  # one directory per predicate
-    back = C.read_canonical_store(spark, path)
-    assert back.count() == 2
-    # predicate filter must prune partitions (PartitionFilters in the scan)
-    plan = (
-        back.filter(F.col("pred") == "http://e/ns#type")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "pred_part" in plan
+    assert C.read_store(spark, path).count() == 2
+    # a predicate read must prune partitions: the pred_part literal sits in
+    # the scan's PartitionFilters, not just in its column list
+    pruned = C.read_store(spark, path, ["http://e/ns#type"])
+    plan = pruned._jdf.queryExecution().executedPlan().toString()
+    filters = re.search(r"PartitionFilters: \[([^\]]*)", plan).group(1)
+    assert C.pred_partition_value("http://e/ns#type") in filters
+    assert pruned.count() == 1
 
 
 def test_entity_degree_skew_agg(spark):

@@ -211,3 +211,64 @@ def test_incremental_merge_verdicts_matches_full(spark, split_docs):
     # ...and none survive the merge
     assert merged.join(stale_shas, on="doc_sha256", how="semi").count() == 0
     base_v.unpersist()
+
+
+def _nt_docs(spark, rows):
+    return spark.createDataFrame(
+        [("r1", path, commit, "ntriples", content) for path, commit, content in rows],
+        "repo string, path string, commit string, lang string, content string",
+    )
+
+
+def test_read_snapshot_missing_base_raises(spark, tmp_path):
+    """A snapshot whose base directory is gone fails loudly; it is never
+    read as an empty store."""
+    import os
+    import shutil
+
+    from pyspark.errors import AnalysisException
+
+    store_dir = str(tmp_path / "snap")
+    init_snapshot(
+        _nt_docs(spark, [("a.nt", "c1", '<http://e/s> <http://e/p> "one" .\n')]),
+        store_dir,
+    )
+    assert read_snapshot(spark, store_dir).count() == 1
+    shutil.rmtree(os.path.join(store_dir, "base"))
+    with pytest.raises(AnalysisException):
+        read_snapshot(spark, store_dir)
+
+
+def test_read_snapshot_plans_without_spark_jobs(spark, tmp_path):
+    """Base and log reads use pinned schemas, so building the reconciled
+    frame after a merge runs no schema-inference job."""
+    store_dir = str(tmp_path / "snap")
+    init_snapshot(
+        _nt_docs(
+            spark,
+            [
+                ("a.nt", "c1", '<http://e/s> <http://e/p> "one" .\n'),
+                ("b.nt", "c1", '<http://e/s> <http://e/p> "two" .\n'),
+            ],
+        ),
+        store_dir,
+    )
+    merge_snapshot(
+        spark,
+        store_dir,
+        _nt_docs(spark, [("a.nt", "c2", '<http://e/s> <http://e/p> "new" .\n')]),
+    )
+    sc = spark.sparkContext
+    group = "test_read_snapshot_plan"
+    sc.setJobGroup(group, group)
+    try:
+        got = read_snapshot(spark, store_dir)
+        planned = list(sc.statusTracker().getJobIdsForGroup(group))
+        # the group does capture this thread's jobs once an action runs
+        vals = {r["obj_value"] for r in got.collect()}
+        ran = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert planned == []
+    assert ran and vals == {"new", "two"}

@@ -7,6 +7,8 @@ codegen fails here even though results stay right.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -14,7 +16,7 @@ from rdfshape_api_spark.fixtures.generator import SHAPEMAP_QUERY, SHEX_SENSOR
 from rdfshape_api_spark.operators.canonicalize import (
     canonicalize,
     pred_partition_value,
-    read_store_predicate,
+    read_store,
     write_canonical_store,
 )
 from rdfshape_api_spark.model import TRIPLE_COLUMNS
@@ -38,23 +40,26 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _partition_filters(plan: str) -> str:
+    """The ``PartitionFilters: [...]`` segment of the scan node."""
+    return re.search(r"PartitionFilters: \[([^\]]*)", plan).group(1)
+
+
 def test_predicate_read_is_partition_pruned(spark, store):
-    df = read_store_predicate(spark, store, EX + "status")
-    plan = _plan(df)
+    df = read_store(spark, store, [EX + "status"])
     # the pred_part literal must appear as a partition filter on the scan
-    assert "PartitionFilters" in plan
-    assert pred_partition_value(EX + "status") in plan
+    assert pred_partition_value(EX + "status") in _partition_filters(_plan(df))
     # and it returns exactly the pred's rows
-    full = spark.read.parquet(store)
+    full = read_store(spark, store)
     assert df.count() == full.filter(F.col("pred") == EX + "status").count() > 0
 
 
 def test_column_projection_prunes_read_schema(spark, store):
-    df = read_store_predicate(spark, store, EX + "status").select("subj", "obj_value")
-    plan = _plan(df)
-    # ReadSchema must not include the unused literal-metadata columns
-    rs = plan[plan.index("ReadSchema") :].split("\n")[0] if "ReadSchema" in plan else ""
-    assert "obj_lang" not in rs and "doc_sha256" in rs or "subj" in rs
+    df = read_store(spark, store, [EX + "status"]).select("subj", "obj_value")
+    rs = re.search(r"ReadSchema: (\S+)", _plan(df)).group(1)
+    # only the projected columns plus `pred` for the row filter; partition
+    # columns come from the directory names, not the files
+    assert rs == "struct<subj:string,pred:string,obj_value:string>"
 
 
 def test_extraction_fast_path_is_whole_stage_codegen(spark, fixtures_001):
@@ -72,10 +77,9 @@ def test_extraction_fast_path_is_whole_stage_codegen(spark, fixtures_001):
 def test_validation_plan_has_no_python_stages(spark, store):
     """Validation over the store (the pipeline's stage-3 shape) is pure
     Spark SQL — Python appears only in the extraction stage upstream."""
-    from rdfshape_api_spark.operators.canonicalize import read_canonical_store
     from rdfshape_api_spark.plans import parse_shexc, validate
 
-    tri = read_canonical_store(spark, store)
+    tri = read_store(spark, store).select(*TRIPLE_COLUMNS)
     v = validate(
         tri, parse_shexc(SHEX_SENSOR), shapemap=SHAPEMAP_QUERY, shape_label="s"
     )
@@ -85,12 +89,9 @@ def test_validation_plan_has_no_python_stages(spark, store):
 
 
 def test_fused_store_write_single_exchange(spark, store):
-    from rdfshape_api_spark.operators.canonicalize import (
-        pred_partition_key,
-        read_canonical_store,
-    )
+    from rdfshape_api_spark.operators.canonicalize import pred_partition_key
 
-    out = read_canonical_store(spark, store).select(*TRIPLE_COLUMNS).withColumn(
+    out = read_store(spark, store).select(*TRIPLE_COLUMNS).withColumn(
         "pred_part", pred_partition_key()
     ).withColumn("bucket", F.pmod(F.xxhash64("subj"), F.lit(4)))
     key = ["doc_sha256", "subj", "pred", "obj_kind", "obj_value", "obj_lang", "obj_datatype"]
@@ -101,31 +102,6 @@ def test_fused_store_write_single_exchange(spark, store):
     )
     plan = _plan(fused)
     assert plan.count("Exchange") == 1
-
-
-def test_repetition_signals_is_map_only(spark):
-    """text_repetition must stay a single map-only stage: no Exchange in
-    the physical plan — per-row array expressions, shuffle-free at any
-    scale.  (Higher-order array lambdas opt out of whole-stage codegen by
-    design; the interpreted Project is still JVM-side and vectorizable.)"""
-    from rdfshape_api_spark.functions.textops import repetition_signals
-
-    docs = spark.createDataFrame(
-        [(1, "a b a"), (2, "x y")], "doc_id bigint, text string"
-    )
-    plan = _plan(repetition_signals(docs))
-    assert "Exchange" not in plan
-    assert "Project" in plan
-
-
-def test_text_features_is_map_only(spark):
-    from rdfshape_api_spark.functions.textops import text_features
-
-    docs = spark.createDataFrame(
-        [(1, "the cat", 7)], "doc_id bigint, text string, n_chars bigint"
-    )
-    plan = _plan(text_features(docs))
-    assert "Exchange" not in plan
 
 
 def test_identity_edges_plan_is_star_not_pairs(spark):
@@ -161,42 +137,6 @@ def test_owl_sameas_closure_no_cartesian(spark):
     plan = _plan(owl_sameas_closure(tri))
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
-def test_winnow_sets_is_map_only(spark):
-    """Winnow sketching must stay map-only (no Exchange) and the explode
-    must not re-introduce the InferFiltersFromGenerate blowup (no Filter
-    carrying the nested transform below the Generate)."""
-    from rdfshape_api_spark.functions.codeops import (
-        winnow_fingerprint_sets,
-        winnow_fingerprints,
-    )
-
-    docs = spark.createDataFrame(
-        [("r", "p", "c", "py", "some content here", "h")],
-        "repo string, path string, commit string, lang string, "
-        "content string, content_sha256 string",
-    )
-    assert "Exchange" not in _plan(winnow_fingerprint_sets(docs))
-    plan = _plan(winnow_fingerprints(docs))
-    assert "Exchange" not in plan
-    assert "Filter" not in plan
-
-
-def test_repo_stats_single_exchange(spark):
-    """The rollup is one hash-aggregate: exactly one Exchange (the
-    group-by), partial aggregation map-side."""
-    from rdfshape_api_spark.functions.codeops import repo_stats
-
-    docs = spark.createDataFrame(
-        [("r", "p", "c", "py", "x", "h")],
-        "repo string, path string, commit string, lang string, "
-        "content string, content_sha256 string",
-    )
-    plan = _plan(repo_stats(docs))
-    # count(distinct ...) expands to a two-level agg over ONE shuffle key
-    assert plan.count("Exchange") <= 2
-    assert "HashAggregate" in plan
 
 
 def test_w3c_batch_simple_jobs_share_one_aggregate(spark):
