@@ -78,7 +78,7 @@ def _catalog_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     if tag not in _catalog_cache:
         paths = ensure_catalog(tag)
         docs = spark.read.parquet(paths["docs"])
-        tri = dedup_triples(canonicalize(extract_triples(docs)), scope_doc=True)
+        tri = dedup_triples(canonicalize(extract_triples(docs)))
         _catalog_cache[tag] = tri.persist()
     return _catalog_cache[tag]
 
@@ -92,7 +92,7 @@ def _social_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     if tag not in _social_cache:
         paths = ensure_social(tag)
         docs = spark.read.parquet(paths["docs"])
-        tri = dedup_triples(canonicalize(extract_triples(docs)), scope_doc=True)
+        tri = dedup_triples(canonicalize(extract_triples(docs)))
         _social_cache[tag] = tri.persist()
     return _social_cache[tag]
 
@@ -107,7 +107,7 @@ def _rdf_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     if tag not in _triples_cache:
         paths = ensure_fixtures(tag)
         docs = spark.read.parquet(paths["docs"])
-        tri = dedup_triples(canonicalize(extract_triples(docs)), scope_doc=True)
+        tri = dedup_triples(canonicalize(extract_triples(docs)))
         _triples_cache[tag] = tri.persist()
     return _triples_cache[tag]
 
@@ -169,7 +169,7 @@ def _q_incremental_merge(spark, sf_dir):
         .withColumn("content_sha256", F.sha2(F.col("content"), 256))
     )
     base = docs.filter(~is_delta).unionByName(stale)
-    store = dedup_triples(canonicalize(extract_triples(base)), scope_doc=True)
+    store = dedup_triples(canonicalize(extract_triples(base)))
     return incremental_merge(store, delta).select(
         "doc_sha256", "subj", "pred", "obj_kind", "obj_value", "obj_lang", "obj_datatype"
     ).distinct()
@@ -204,8 +204,7 @@ def _q_incremental_verdicts(spark, sf_dir):
         .withColumn("content_sha256", F.sha2(F.col("content"), 256))
     )
     base_tri = dedup_triples(
-        canonicalize(extract_triples(docs.filter(~is_delta).unionByName(stale))),
-        scope_doc=True,
+        canonicalize(extract_triples(docs.filter(~is_delta).unionByName(stale)))
     )
     jobs = [
         (parse_shexc(SHEX_SENSOR), SHAPEMAP_QUERY, "shex_sensor"),
@@ -486,7 +485,7 @@ def _roundtrip_q(spark, sf_dir, fn_name: str, text_col: str, lang: str):
         F.lit(lang).alias("lang"),
         F.col(text_col).alias("content"),
     )
-    return dedup_triples(canonicalize(extract_triples(redocs)), scope_doc=True).select(
+    return dedup_triples(canonicalize(extract_triples(redocs))).select(
         "doc_sha256", "subj", "pred", "obj_kind", "obj_value", "obj_lang", "obj_datatype"
     )
 
@@ -856,7 +855,7 @@ def _q_html_extract(spark, sf_dir):
 
     paths = ensure_webdocs(_tagof(sf_dir))
     docs = spark.read.parquet(paths["docs"])
-    tri = dedup_triples(canonicalize(extract_triples(docs)), scope_doc=True)
+    tri = dedup_triples(canonicalize(extract_triples(docs)))
     return tri.select(
         "doc_sha256", "subj", "pred", "obj_kind", "obj_value", "obj_lang", "obj_datatype"
     ).distinct()

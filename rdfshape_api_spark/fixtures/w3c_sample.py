@@ -622,9 +622,7 @@ def run_sample(spark: SparkSession) -> DataFrame:
     # materialize the (tiny) corpus extraction once: the complex-case
     # fallback jobs each build their own plan — without this they would
     # all re-run parse+canonicalize from scratch (~40 redundant extractions)
-    tri = dedup_triples(
-        canonicalize(extract_triples(corpus_df(spark))), scope_doc=True
-    ).localCheckpoint()
+    tri = dedup_triples(canonicalize(extract_triples(corpus_df(spark)))).localCheckpoint()
     jobs = []
     for c in all_cases:
         if c["kind"] == "shex":

@@ -10,10 +10,12 @@ checkpoint/resume), so this design is Spark-native:
   by ``repo`` — the ingest range-partitioning key): input docs, emitted
   triples, parse errors, sha-invariant violations; stage wall times go to
   the run's metrics dict (:class:`StageTimer`), not to lineage rows;
-* resume = skip stage directories whose `_SUCCESS` exists; a bucketed
-  extraction (``run_pipeline(extract_buckets=B)``) also skips each
-  ``bucket=<b>`` directory that has one, so a crashed run re-does only the
-  unfinished buckets.
+* resume = skip stage directories whose `_SUCCESS` exists.  Extraction
+  runs as ``run_pipeline(extract_buckets=B)`` bucket jobs (B defaults to
+  1), each writing ``raw_triples/bucket=<b>`` with its own `_SUCCESS`; the
+  stage marker ``raw_triples/_SUCCESS`` is written last, after this
+  lineage table and the error channel, so a crash anywhere in the stage
+  resumes into the unfinished buckets and redoes the lineage and errors.
 """
 
 from __future__ import annotations

@@ -108,6 +108,10 @@ STORE_SCHEMA = T.StructType(
         T.StructField("bucket", T.IntegerType(), True),
     ]
 )
+# bucket = pmod(xxhash64(subj), STORE_SUBJ_BUCKETS): the one subject-bucket
+# count every store writer uses, so a snapshot's base keeps one layout
+# across init and compaction, and readers can derive a subject's bucket.
+STORE_SUBJ_BUCKETS = 16
 
 # --- prefix table (SURVEY §2.3 P8) ------------------------------------------
 PREFIX_SCHEMA = T.StructType(

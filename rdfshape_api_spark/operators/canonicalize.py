@@ -14,15 +14,22 @@ distributed-friendly rules:
   flags lexical-form drift as the main P/R risk): lang tags lowercased
   (done at parse), canonical ``xsd:decimal``/``xsd:integer`` forms (strip
   leading '+', strip trailing fraction zeros, drop trailing '.', "-0"→"0").
-* **Dedup** — exact duplicate elimination of canonical triples. The hot-key
-  risk (popular objects like ``ex:hub``, ``rdf:type``) is absorbed by a
-  two-phase salted aggregation: partial distinct on (key, salt) then final
-  distinct — map-side combine keeps the skewed key from landing on one
-  reducer. AQE skew handling stays on as the backstop.
+* **Term invariant** — a literal carries a language tag or a datatype,
+  never both: a typed literal drops its language (RDF/XML §7.2.16 ignores
+  ``xml:lang`` under ``rdf:datatype``), and a language-tagged literal
+  keeps no ``rdf:langString`` datatype.  The serializers rely on it.
+* **Dedup** — exact duplicate elimination of canonical triples, keyed on
+  ``doc_sha256`` + the triple (one graph per document).  In the store
+  write it is fused into the layout shuffle: map-side partial
+  aggregation folds exact duplicates before the wire, and the layout key
+  (predicate, subject bucket) splits a hot predicate such as ``rdf:type``
+  while a hot object (``ex:hub``) is not part of it.  The one aggregation
+  whose key skews is :func:`entity_degree` (the entity alone); its
+  partial aggregation is the combiner.
 * **Canonical store** — parquet partitioned by predicate (north rule) with
-  a ``bucket = pmod(xxhash64(subj), k)`` sub-key so hot predicates
-  (``rdf:type``) split into k files instead of one giant partition
-  (SURVEY §7.3).  ``read_store`` is its one reader.
+  a ``bucket = pmod(xxhash64(subj), STORE_SUBJ_BUCKETS)`` sub-key so hot
+  predicates (``rdf:type``) split into that many files instead of one
+  giant partition (SURVEY §7.3).  ``read_store`` is its one reader.
 """
 
 from __future__ import annotations
@@ -31,8 +38,10 @@ from pyspark.sql import DataFrame, functions as F
 
 from rdfshape_api_spark.model import (
     KIND_BNODE,
+    RDF_LANGSTRING,
     SKOLEM_PREFIX,
     STORE_SCHEMA,
+    STORE_SUBJ_BUCKETS,
     XSD_DECIMAL,
     XSD_INTEGER,
 )
@@ -87,57 +96,42 @@ def normalize_literals(df: DataFrame) -> DataFrame:
     return df.withColumn("obj_value", F.when(is_num, canon).otherwise(v))
 
 
-def expand_prefixed(df: DataFrame) -> DataFrame:
-    """No-op by contract: parsers already emit absolute IRIs (prefix
-    expansion happens at parse, using each document's own prefix map), so
-    cross-document prefix aliasing (``ex:`` vs ``sensor:`` for one
-    namespace) is already resolved. Kept as an explicit stage marker."""
-    return df
-
-
 def canonicalize(df: DataFrame) -> DataFrame:
-    """skolemize → normalize literals (the once-only canonical form)."""
-    return normalize_literals(skolemize(df))
-
-
-def dedup_triples(
-    df: DataFrame, scope_doc: bool = False, salt_buckets: int = 0
-) -> DataFrame:
-    """Distinct canonical triples (graph-merge semantics,
-    MergedModels.scala:182-191: union of models unifies identical triples).
-
-    ``scope_doc=True`` keeps per-document multiplicity (one graph per doc).
-    ``salt_buckets>0`` forces the two-phase salted distinct; with 0 we rely
-    on Spark's partial-aggregation + AQE, which is already two-phase for
-    plain ``distinct`` — the explicit salt is for the *join/agg-by-entity*
-    cases where the grouping key alone is skewed.
-    """
-    key = (["doc_sha256"] if scope_doc else []) + TRIPLE_KEY
-    if salt_buckets > 0:
-        salted = df.withColumn(
-            "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in TRIPLE_KEY]), F.lit(salt_buckets))
+    """skolemize → normalize literals → lang/datatype exclusivity (the
+    once-only canonical form)."""
+    typed = F.col("obj_datatype").isNotNull() & (F.col("obj_datatype") != RDF_LANGSTRING)
+    tagged = F.col("obj_lang").isNotNull() & (F.col("obj_datatype") == RDF_LANGSTRING)
+    return (
+        normalize_literals(skolemize(df))
+        .withColumn("obj_lang", F.when(typed, F.lit(None)).otherwise(F.col("obj_lang")))
+        .withColumn(
+            "obj_datatype", F.when(tagged, F.lit(None)).otherwise(F.col("obj_datatype"))
         )
-        partial = salted.dropDuplicates(key + ["_salt"]).drop("_salt")
-        return partial.dropDuplicates(key)
-    return df.dropDuplicates(key)
+    )
 
 
-def entity_degree(df: DataFrame, salt_buckets: int = 32) -> DataFrame:
+def dedup_triples(df: DataFrame) -> DataFrame:
+    """Distinct canonical triples per document, keyed on ``doc_sha256`` +
+    ``TRIPLE_KEY`` (graph-merge semantics within a document,
+    MergedModels.scala:182-191).  Spark's distinct is already two-phase
+    (map-side partial aggregation, then the final one), which folds exact
+    duplicates before the shuffle."""
+    return df.dropDuplicates(["doc_sha256"] + TRIPLE_KEY)
+
+
+def entity_degree(df: DataFrame) -> DataFrame:
     """Per-entity mention count — the skewed aggregation of SURVEY §2.5 J5
-    (popular entities like ``ex:hub``).  Two-phase salted sum: partial
-    count on (entity, salt), final sum on entity. Returns
-    ``(entity, degree)``.
+    (popular entities like ``ex:hub``).  Returns ``(entity, degree)``.
+
+    The count is two-phase without a salt: map-side partial aggregation
+    sends one ``(entity, partial count)`` row per map task, so a hot
+    entity costs its reducer one row per task, not one per mention.
     """
     subj = df.select(F.col("subj").alias("entity"))
     obj = df.filter(F.col("obj_kind") != "literal").select(
         F.col("obj_value").alias("entity")
     )
-    mentions = subj.unionAll(obj)
-    salted = mentions.withColumn(
-        "_salt", F.pmod(F.xxhash64("entity"), F.lit(salt_buckets))
-    )
-    partial = salted.groupBy("entity", "_salt").agg(F.count("*").alias("_c"))
-    return partial.groupBy("entity").agg(F.sum("_c").alias("degree"))
+    return subj.unionAll(obj).groupBy("entity").agg(F.count("*").alias("degree"))
 
 
 OWL_SAMEAS = "http://www.w3.org/2002/07/owl#sameAs"
@@ -380,27 +374,27 @@ def pred_partition_key(pred=None):
 def write_canonical_store(
     df: DataFrame,
     path: str,
-    subj_buckets: int = 16,
-    mode: str = "overwrite",
+    subj_buckets: int = STORE_SUBJ_BUCKETS,
     dedup: bool = False,
-    scope_doc: bool = True,
-    layout_partitions: int | None = 512,
 ) -> None:
-    """Write the canonical triple store: parquet partitioned by predicate
-    (north rule), sub-bucketed by subject hash so hot predicates split.
+    """Overwrite ``path`` with the canonical triple store: parquet
+    partitioned by predicate (north rule), sub-bucketed by subject hash so
+    hot predicates split.
 
     The pre-write ``repartition(pred_part, bucket)`` lines file boundaries
-    up with partition directories (one shuffle, no small-files explosion);
-    readers filtering on predicate get directory-level partition pruning,
+    up with partition directories (one shuffle, one file per directory);
+    AQE coalesces the shuffle partitions to the data, so the task count
+    follows the ``(pred_part, bucket)`` key count instead of a constant.
+    Readers filtering on predicate get directory-level partition pruning,
     and the 2-col projection prunes parquet columns.
 
-    ``dedup=True`` fuses exact-duplicate elimination INTO the layout
-    shuffle: the dedup key determines (pred_part, bucket), so grouping by
+    ``dedup=True`` fuses exact-duplicate elimination (the
+    :func:`dedup_triples` key, ``doc_sha256`` + ``TRIPLE_KEY``) INTO the
+    layout shuffle: the key determines (pred_part, bucket), so grouping by
     (pred_part, bucket, *key) over the repartitioned child satisfies the
     aggregation's required distribution and Catalyst elides the second
-    exchange — one shuffle total instead of dedup-shuffle + layout-shuffle
-    (verified: executedPlan has a single Exchange), with map-side partial
-    aggregation absorbing duplicates before the wire.
+    exchange — one shuffle total, with map-side partial aggregation
+    absorbing duplicates before the wire.
     """
     # pred_part via a BROADCAST DICTIONARY join, not a per-row expression:
     # distinct predicates are few (10²-10⁴ even at web scale) while rows are
@@ -415,33 +409,15 @@ def write_canonical_store(
     out = df.join(pred_map, "pred").withColumn(
         "bucket", F.pmod(F.xxhash64("subj"), F.lit(subj_buckets))
     )
-    out = out.select(*df.columns, "pred_part", "bucket")
-    # More layout partitions than (pred × bucket) keys: hashing ~100 keys
-    # into the session's 32-64 shuffle partitions collides 2-3 hot keys
-    # onto one reducer and the straggler pins the stage wall at high
-    # parallelism — with ≥ keys partitions, each (pred_part, bucket) group
-    # is its own task (still 1 file per directory), and per-task hash-agg
-    # maps shrink accordingly.
-    if layout_partitions:
-        out = out.repartition(layout_partitions, "pred_part", "bucket")
-    else:
-        out = out.repartition("pred_part", "bucket")
+    out = out.select(*df.columns, "pred_part", "bucket").repartition("pred_part", "bucket")
     if dedup:
-        key = (["doc_sha256"] if scope_doc and "doc_sha256" in df.columns else []) + [
-            c for c in TRIPLE_KEY if c in df.columns
-        ]
+        key = ["doc_sha256"] + TRIPLE_KEY
         extras = [c for c in df.columns if c not in key]
         aggs = [F.first(c).alias(c) for c in extras] or [F.count(F.lit(1)).alias("_n")]
         out = out.groupBy("pred_part", "bucket", *key).agg(*aggs)
-        if not extras:
-            out = out.drop("_n")
         # restore the writer-side column order (partition cols last)
-        out = out.select(*[c for c in df.columns], "pred_part", "bucket")
-    (
-        out.write.mode(mode)
-        .partitionBy("pred_part", "bucket")
-        .parquet(path)
-    )
+        out = out.select(*df.columns, "pred_part", "bucket")
+    out.write.mode("overwrite").partitionBy("pred_part", "bucket").parquet(path)
 
 
 def pred_partition_value(pred: str) -> str:

@@ -46,7 +46,7 @@ def _extract_canonical(docs: DataFrame) -> DataFrame:
     from rdfshape_api_spark.operators.canonicalize import canonicalize, dedup_triples
     from rdfshape_api_spark.sources.extract import extract_triples
 
-    return dedup_triples(canonicalize(extract_triples(docs)), scope_doc=True)
+    return dedup_triples(canonicalize(extract_triples(docs)))
 
 
 def incremental_merge(store_triples: DataFrame, delta_docs: DataFrame) -> DataFrame:
@@ -125,9 +125,7 @@ def _write_version(store_dir: str, version: int) -> None:
     os.replace(tmp, vf)  # atomic pointer swap = the commit point
 
 
-def init_snapshot(
-    docs: DataFrame, store_dir: str, subj_buckets: int = 16
-) -> None:
+def init_snapshot(docs: DataFrame, store_dir: str) -> None:
     """Write the base store (version 0) in the canonical predicate-
     partitioned layout, with the dedup fused into the layout shuffle."""
     from rdfshape_api_spark.operators.canonicalize import (
@@ -137,14 +135,7 @@ def init_snapshot(
     from rdfshape_api_spark.sources.extract import extract_triples
 
     tri = canonicalize(extract_triples(docs))
-    write_canonical_store(
-        tri,
-        os.path.join(store_dir, "base"),
-        subj_buckets=subj_buckets,
-        dedup=True,
-        scope_doc=True,
-        layout_partitions=None,
-    )
+    write_canonical_store(tri, os.path.join(store_dir, "base"), dedup=True)
     _write_version(store_dir, 0)
 
 
@@ -260,9 +251,7 @@ def stream_merge_snapshots(
     )
 
 
-def compact_snapshot(
-    spark: SparkSession, store_dir: str, subj_buckets: int = 16
-) -> None:
+def compact_snapshot(spark: SparkSession, store_dir: str) -> None:
     """Fold the merge log into a fresh base (Iceberg rewrite_data_files
     analog): materialize the reconciled snapshot, rewrite the canonical
     layout, reset the log.  Run when the accumulated log size makes the
@@ -273,13 +262,7 @@ def compact_snapshot(
 
     cur = read_snapshot(spark, store_dir)
     new_base = os.path.join(store_dir, "base_compacting")
-    write_canonical_store(
-        cur,
-        new_base,
-        subj_buckets=subj_buckets,
-        dedup=False,
-        layout_partitions=None,
-    )
+    write_canonical_store(cur, new_base)
     old_base = os.path.join(store_dir, "base")
     shutil.rmtree(old_base)
     os.replace(new_base, old_base)

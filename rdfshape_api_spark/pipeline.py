@@ -15,6 +15,7 @@ from __future__ import annotations
 import json
 import os
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from rdfshape_api_spark.lineage import (
@@ -22,14 +23,14 @@ from rdfshape_api_spark.lineage import (
     extraction_lineage,
     stage_complete,
 )
-from rdfshape_api_spark.model import TRIPLE_COLUMNS
+from rdfshape_api_spark.model import RAW_TRIPLE_SCHEMA, TRIPLE_COLUMNS
 from rdfshape_api_spark.operators.canonicalize import (
     canonicalize,
     read_store,
     write_canonical_store,
 )
 from rdfshape_api_spark.plans import parse_shacl, parse_shexc
-from rdfshape_api_spark.sources.extract import extract_triples_raw
+from rdfshape_api_spark.sources.extract import extract_triples_raw, with_doc_sha
 
 
 def _store_pruned_for_schemas(spark, store_dir: str, schemas) -> DataFrame:
@@ -81,14 +82,18 @@ def run_pipeline(
     shacl_schema: str | None = None,
     repartition_by_repo: int | None = None,
     resume: bool = True,
-    store_subj_buckets: int = 16,
-    golden_triples: str | None = None,
-    extract_buckets: int = 0,
+    extract_buckets: int = 1,
     full_lineage: bool = False,
 ) -> dict:
     """Run all stages; returns a metrics dict (also written to
     ``out_dir/metrics.json``). Stages with existing `_SUCCESS` are skipped
     when ``resume=True``.
+
+    Extraction runs as ``extract_buckets`` independent bucket jobs keyed by
+    a deterministic hash of (repo, path), each under ``raw_triples/bucket=<b>``
+    with its own ``_SUCCESS``; a resumed run re-does only the unfinished
+    buckets.  ``repartition_by_repo`` range-partitions the docs by (repo,
+    path) into that many partitions on ingest.
 
     ``full_lineage=True`` additionally writes the store's per-partition
     statistics table (``lineage_store``: one row per (pred_part, bucket)
@@ -96,8 +101,11 @@ def run_pipeline(
     (``lineage_verdicts``: one row per (shape_id, status)) — two extra
     small aggregation jobs; benchmarks that compare walls across rounds
     keep the default."""
+    if extract_buckets < 1:
+        raise ValueError(f"extract_buckets must be >= 1, got {extract_buckets}")
     metrics: dict = {}
     raw_dir = os.path.join(out_dir, "raw_triples")
+    bucket_dirs = [os.path.join(raw_dir, f"bucket={b}") for b in range(extract_buckets)]
     lineage_dir = os.path.join(out_dir, "lineage_extract")
     store_dir = os.path.join(out_dir, "triple_store")
     verdict_dir = os.path.join(out_dir, "verdicts")
@@ -106,18 +114,18 @@ def run_pipeline(
     # -- stage 1: extraction (+ error channel + lineage) ---------------------
     if not (resume and stage_complete(raw_dir)):
         with StageTimer(metrics, "extract"):
+            # an old marker must not outlive a crash of this rerun
+            marker = os.path.join(raw_dir, "_SUCCESS")
+            if os.path.exists(marker):
+                os.remove(marker)
             # Materialize the prepared docs (sha + range-shuffle) ONCE as an
             # explicit ingest stage boundary: the NT-columnar and Python
-            # format branches each consume it, and without this the
-            # per-branch lang filters get pushed below the exchange so
+            # format branches of every bucket consume it, and without this
+            # the per-branch lang filters get pushed below the exchange so
             # Catalyst cannot reuse it — scan+sha256+range-sampling would
             # run once per branch (observed 2×+ extract wall at sf0.1).
             # DISK_ONLY ≈ a shuffle-file materialization, the same cost
             # model as a staging table on a real cluster.
-            from pyspark import StorageLevel
-
-            from rdfshape_api_spark.sources.extract import with_doc_sha
-
             prepared = with_doc_sha(docs)
             if repartition_by_repo:
                 prepared = prepared.repartitionByRange(
@@ -125,45 +133,35 @@ def run_pipeline(
                 )
             prepared = prepared.persist(StorageLevel.DISK_ONLY)
             try:
-                if extract_buckets > 0:
-                    # Sub-stage checkpointing (north rule: resumable with
-                    # per-partition lineage): extraction runs as B
-                    # independent bucket jobs keyed by a deterministic hash
-                    # of (repo, path); each bucket's parquet job writes its
-                    # own _SUCCESS, so a crashed run re-does only the
-                    # unfinished buckets — the anti-join resume of SURVEY §4
-                    # expressed as directory skips (no driver state needed).
-                    bucket = F.pmod(F.xxhash64("repo", "path"), F.lit(extract_buckets))
-                    for b in range(extract_buckets):
-                        bdir = os.path.join(raw_dir, f"bucket={b}")
-                        if resume and stage_complete(bdir):
-                            continue
-                        extract_triples_raw(
-                            prepared.filter(bucket == b)
-                        ).write.mode("overwrite").parquet(bdir)
-                    raw_glob = os.path.join(raw_dir, "bucket=*")
-                    extraction_lineage(
-                        prepared, spark.read.parquet(raw_glob)
-                    ).write.mode("overwrite").parquet(lineage_dir)
-                    # stage marker so downstream stage_complete() sees done
-                    with open(os.path.join(raw_dir, "_SUCCESS"), "w"):
-                        pass
-                else:
-                    raw = extract_triples_raw(prepared)
-                    raw.write.mode("overwrite").parquet(raw_dir)
-                    extraction_lineage(prepared, spark.read.parquet(raw_dir)).write.mode(
-                        "overwrite"
-                    ).parquet(lineage_dir)
+                # Sub-stage checkpointing (north rule: resumable with
+                # per-partition lineage): each bucket's parquet job writes
+                # its own _SUCCESS — the anti-join resume of SURVEY §4
+                # expressed as directory skips (no state outside the output).
+                bucket = F.pmod(F.xxhash64("repo", "path"), F.lit(extract_buckets))
+                for b, bdir in enumerate(bucket_dirs):
+                    if resume and stage_complete(bdir):
+                        continue
+                    extract_triples_raw(
+                        prepared.filter(bucket == b)
+                    ).write.mode("overwrite").parquet(bdir)
+                raw = spark.read.schema(RAW_TRIPLE_SCHEMA).parquet(*bucket_dirs)
+                extraction_lineage(prepared, raw).write.mode("overwrite").parquet(
+                    lineage_dir
+                )
+                raw.filter(F.col("error").isNotNull()).select(
+                    "repo", "path", "commit", "doc_sha256", "error"
+                ).write.mode("overwrite").parquet(errors_dir)
             finally:
                 prepared.unpersist()
-    raw = spark.read.parquet(raw_dir)
-    raw.filter(F.col("error").isNotNull()).select(
-        "repo", "path", "commit", "doc_sha256", "error"
-    ).write.mode("overwrite").parquet(errors_dir)
+            # stage marker last: a crash before it resumes into the
+            # unfinished buckets, the lineage and the error channel
+            with open(marker, "w"):
+                pass
 
     # -- stage 2: canonicalize + dedup → predicate-partitioned store ---------
     if not (resume and stage_complete(store_dir)):
         with StageTimer(metrics, "canonicalize"):
+            raw = spark.read.schema(RAW_TRIPLE_SCHEMA).parquet(*bucket_dirs)
             canon = canonicalize(
                 raw.filter(F.col("error").isNull()).select(*TRIPLE_COLUMNS)
             )
@@ -180,9 +178,7 @@ def run_pipeline(
             if not canon.filter(F.col("pred") == OWL_SAMEAS).isEmpty():
                 canon = link_entities(canon)
             # dedup is fused into the store's layout shuffle (one exchange)
-            write_canonical_store(
-                canon, store_dir, subj_buckets=store_subj_buckets, dedup=True
-            )
+            write_canonical_store(canon, store_dir, dedup=True)
     store = read_store(spark, store_dir)
     triples = store.select(*TRIPLE_COLUMNS)
 
@@ -249,12 +245,6 @@ def run_pipeline(
         metrics["verdicts"] = sum(
             _papq.ParquetFile(f).metadata.num_rows
             for f in _pads.dataset(verdict_dir, format="parquet").files
-        )
-    if golden_triples:
-        from rdfshape_api_spark.lineage import triple_precision_recall
-
-        metrics.update(
-            triple_precision_recall(triples, spark.read.parquet(golden_triples))
         )
     wall = sum(v for k, v in metrics.items() if isinstance(v, float) and k.endswith("_wall_s"))
     if wall and metrics.get("triples"):

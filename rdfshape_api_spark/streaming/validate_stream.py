@@ -151,8 +151,7 @@ def _batch_validate(batch: DataFrame, cfg: StreamConfig) -> tuple[DataFrame, Dat
         "repo", "path", "commit", "doc_sha256", "error"
     )
     triples = dedup_triples(
-        canonicalize(raw.filter(F.col("error").isNull()).select(*TRIPLE_COLUMNS)),
-        scope_doc=True,
+        canonicalize(raw.filter(F.col("error").isNull()).select(*TRIPLE_COLUMNS))
     )
     verdicts = []
     if cfg.shex_schema:

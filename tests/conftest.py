@@ -25,6 +25,6 @@ def triples_001(spark, fixtures_001):
     from rdfshape_api_spark.sources.extract import extract_triples
 
     docs = spark.read.parquet(fixtures_001["docs"])
-    t = dedup_triples(canonicalize(extract_triples(docs)), scope_doc=True).persist()
+    t = dedup_triples(canonicalize(extract_triples(docs))).persist()
     t.count()
     return t

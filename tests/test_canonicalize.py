@@ -1,5 +1,5 @@
 """Canonicalization invariants: skolem determinism, literal normalization,
-salted dedup equivalence, store partitioning."""
+lang/datatype exclusivity, doc-scoped dedup, store partitioning."""
 
 from __future__ import annotations
 
@@ -50,14 +50,56 @@ def test_normalize_literals(spark):
     assert vals == ["18.5", "18", "7", "0", "18.50"]
 
 
+def test_lang_datatype_exclusive_after_canonicalize(spark):
+    """RDF/XML with rdf:datatype + xml:lang and RDF/JSON with lang +
+    datatype: a typed literal keeps its datatype and drops the language; a
+    language-tagged literal keeps no rdf:langString datatype."""
+    from rdfshape_api_spark.model import RDF_LANGSTRING, XSD_INTEGER
+    from rdfshape_api_spark.sources.extract import extract_triples
+
+    rdfxml = (
+        '<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#" '
+        'xmlns:ex="http://e/">'
+        '<rdf:Description rdf:about="http://e/s">'
+        f'<ex:n xml:lang="en" rdf:datatype="{XSD_INTEGER}">5</ex:n>'
+        '<ex:label xml:lang="en">five</ex:label>'
+        "</rdf:Description></rdf:RDF>"
+    )
+    rdfjson = (
+        '{"http://e/s": {'
+        f'"http://e/n": [{{"type": "literal", "value": "6", "lang": "en", "datatype": "{XSD_INTEGER}"}}], '
+        f'"http://e/label": [{{"type": "literal", "value": "six", "lang": "EN", "datatype": "{RDF_LANGSTRING}"}}]'
+        "}}"
+    )
+    docs = spark.createDataFrame(
+        [("r", "a.rdf", "c", "rdfxml", rdfxml), ("r", "a.json", "c", "rdfjson", rdfjson)],
+        "repo string, path string, commit string, lang string, content string",
+    )
+    got = {
+        (r["obj_value"], r["obj_lang"], r["obj_datatype"])
+        for r in C.canonicalize(extract_triples(docs)).collect()
+    }
+    assert got == {
+        ("5", None, XSD_INTEGER),
+        ("five", "en", None),
+        ("6", None, XSD_INTEGER),
+        ("six", "en", None),
+    }
+
+
 def test_salted_dedup_equivalence(spark):
+    """Exact duplicates fold within a document; the same triple in another
+    document stays."""
     rows = [("d", "s", "p", "iri", "o", None, None)] * 50 + [
-        ("d", "s2", "p", "iri", "o", None, None)
+        ("d", "s2", "p", "iri", "o", None, None),
+        ("d2", "s", "p", "iri", "o", None, None),
     ]
-    df = _raw(spark, rows)
-    plain = C.dedup_triples(df)
-    salted = C.dedup_triples(df, salt_buckets=8)
-    assert plain.count() == salted.count() == 2
+    out = C.dedup_triples(_raw(spark, rows))
+    assert sorted(tuple(r)[:2] for r in out.collect()) == [
+        ("d", "s"),
+        ("d", "s2"),
+        ("d2", "s"),
+    ]
 
 
 def test_store_partitioned_by_predicate(spark, tmp_path):

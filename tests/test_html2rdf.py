@@ -83,7 +83,7 @@ def test_webdocs_goldens_end_to_end(spark):
 
     paths = ensure_webdocs("sf0.001")
     docs = spark.read.parquet(paths["docs"])
-    tri = dedup_triples(canonicalize(extract_triples(docs)), scope_doc=True)
+    tri = dedup_triples(canonicalize(extract_triples(docs)))
     got = set(
         map(tuple, tri.select(
             "doc_sha256", "subj", "pred", "obj_kind", "obj_value", "obj_lang", "obj_datatype"

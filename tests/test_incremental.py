@@ -29,7 +29,7 @@ def _extract(docs):
     from rdfshape_api_spark.operators.canonicalize import canonicalize, dedup_triples
     from rdfshape_api_spark.sources.extract import extract_triples
 
-    return dedup_triples(canonicalize(extract_triples(docs)), scope_doc=True)
+    return dedup_triples(canonicalize(extract_triples(docs)))
 
 
 def _canon_set(df):

@@ -31,10 +31,13 @@ def test_pipeline_end_to_end_and_resume(spark, fixtures_001, tmp_path):
     assert len(parts) == 6  # rdf:type + 5 sensor predicates
 
     # resume: stages with _SUCCESS are skipped → no stage timers re-recorded
+    errors_marker = os.path.join(out, "errors", "_SUCCESS")
+    errors_mtime = os.path.getmtime(errors_marker)
     m2 = run_pipeline(
         spark, docs, out, shex_schema=SHEX_SENSOR, shex_shapemap=SHAPEMAP_QUERY
     )
     assert "extract_wall_s" not in m2
+    assert os.path.getmtime(errors_marker) == errors_mtime  # no job rewrote errors/
     assert m2["docs"] == 1000  # metrics still recomputed from lineage
 
     # lineage is per-repo

@@ -88,20 +88,36 @@ def test_validation_plan_has_no_python_stages(spark, store):
     assert "HashAggregate" in plan  # the A5 cardinality aggregation
 
 
-def test_fused_store_write_single_exchange(spark, store):
-    from rdfshape_api_spark.operators.canonicalize import pred_partition_key
+def _without_broadcast_subtrees(plan: str) -> str:
+    """The plan text minus every ``BroadcastExchange`` node and its children."""
+    kept, cut_at = [], None
+    for line in plan.splitlines():
+        depth = len(line) - len(line.lstrip(" :+-"))
+        if cut_at is not None and depth > cut_at:
+            continue
+        cut_at = depth if "BroadcastExchange" in line else None
+        if cut_at is None:
+            kept.append(line)
+    return "\n".join(kept)
 
-    out = read_store(spark, store).select(*TRIPLE_COLUMNS).withColumn(
-        "pred_part", pred_partition_key()
-    ).withColumn("bucket", F.pmod(F.xxhash64("subj"), F.lit(4)))
-    key = ["doc_sha256", "subj", "pred", "obj_kind", "obj_value", "obj_lang", "obj_datatype"]
-    fused = (
-        out.repartition("pred_part", "bucket")
-        .groupBy("pred_part", "bucket", *key)
-        .agg(F.count(F.lit(1)).alias("_n"))
+
+def test_fused_store_write_single_exchange(spark, store, monkeypatch, tmp_path):
+    """The frame ``write_canonical_store(dedup=True)`` hands to the parquet
+    writer shuffles once, on the layout key: the dedup aggregation rides
+    that exchange (the broadcast ``pred_map`` side is not counted)."""
+    from pyspark.sql import DataFrameWriter
+
+    written = []
+    monkeypatch.setattr(DataFrameWriter, "parquet", lambda self, *a, **k: written.append(self._df))
+    write_canonical_store(
+        read_store(spark, store).select(*TRIPLE_COLUMNS), str(tmp_path / "s"), dedup=True
     )
-    plan = _plan(fused)
-    assert plan.count("Exchange") == 1
+    (df,) = written
+    plan = _without_broadcast_subtrees(_plan(df))
+    keys = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
+    # hashpartitioning(<key columns>, <partition count>)
+    assert [re.sub(r"#\d+L?", "", k).split(", ")[:-1] for k in keys] == [["pred_part", "bucket"]], plan
+    assert len(re.findall(r"\bExchange\b", plan)) == 1, plan
 
 
 def test_identity_edges_plan_is_star_not_pairs(spark):

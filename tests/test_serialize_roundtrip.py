@@ -77,7 +77,7 @@ def test_fixture_corpus_roundtrip(spark, fn, col, lang):
     raw = extract_triples(docs)
     cols = ["doc_sha256", "subj", "pred", "obj_kind", "obj_value", "obj_lang", "obj_datatype"]
     expected = set(
-        map(tuple, dedup_triples(canonicalize(raw), scope_doc=True).select(*cols).collect())
+        map(tuple, dedup_triples(canonicalize(raw)).select(*cols).collect())
     )
     ser = fn(raw)
     redocs = ser.select(
@@ -91,7 +91,7 @@ def test_fixture_corpus_roundtrip(spark, fn, col, lang):
     got = set(
         map(
             tuple,
-            dedup_triples(canonicalize(extract_triples(redocs)), scope_doc=True)
+            dedup_triples(canonicalize(extract_triples(redocs)))
             .select(*cols)
             .collect(),
         )

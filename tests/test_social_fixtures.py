@@ -20,7 +20,7 @@ from rdfshape_api_spark.sources.extract import extract_triples
 def social(spark):
     paths = ensure_social("sf0.001")
     docs = spark.read.parquet(paths["docs"])
-    tri = dedup_triples(canonicalize(extract_triples(docs)), scope_doc=True).persist()
+    tri = dedup_triples(canonicalize(extract_triples(docs))).persist()
     tri.count()
     return paths, tri
 
