@@ -9,6 +9,9 @@ DataFrame transforms (Catalyst handles pushdown/pruning/join strategy).
 
 from __future__ import annotations
 
+from collections import defaultdict
+from collections.abc import Iterable, Sequence
+
 from pyspark.sql import DataFrame, functions as F
 
 from rdfshape_api_spark.model import KIND_IRI, KIND_LITERAL, RDF_TYPE, RDFS_SUBCLASSOF
@@ -85,29 +88,15 @@ def check_datatype(df: DataFrame, node: str, datatype: str) -> DataFrame:
 
 # --- P6: SHACL instances incl. subclass closure (MergedModels.scala:75-79) --
 
-def subclass_closure(df: DataFrame, cls: str, max_iters: int = 20) -> list[str]:
+def subclass_closure(df: DataFrame, cls: str) -> list[str]:
     """Transitive rdfs:subClassOf closure *below* cls (classes whose
     instances count as instances of cls).  The class hierarchy is tiny
-    relative to instance data → iterate driver-side over a filtered scan
-    and broadcast the result into the instance filter (SURVEY §2.5 J4)."""
-    sub = (
-        df.filter(F.col("pred") == RDFS_SUBCLASSOF)
-        .select(F.col("subj").alias("c"), F.col("obj_value").alias("parent"))
-        .distinct()
-    )
-    closure = {cls}
-    frontier = {cls}
-    for _ in range(max_iters):
-        if not frontier:
-            break
-        new = {
-            r["c"]
-            for r in sub.filter(F.col("parent").isin(*frontier)).collect()
-            if r["c"] not in closure
-        }
-        closure |= new
-        frontier = new
-    return sorted(closure)
+    relative to instance data → one collect of the subClassOf edges, a
+    driver-side closure, and the result broadcast into the instance
+    filter (SURVEY §2.5 J4)."""
+    edges = df.filter(F.col("pred") == RDFS_SUBCLASSOF).select("subj", "obj_value")
+    below = transitive_pairs([(r["subj"], r["obj_value"]) for r in edges.collect()])
+    return sorted({cls} | {c for c, d in below if d == cls})
 
 
 def shacl_instances(df: DataFrame, cls: str) -> DataFrame:
@@ -121,7 +110,7 @@ def shacl_instances(df: DataFrame, cls: str) -> DataFrame:
 
 # --- P7: property paths (MergedModels.scala:81-94) ---------------------------
 # Path algebra: direct pred = filter; inverse = swap; sequence = chained
-# joins; alternative = union; zeroOrMore = bounded fixpoint.
+# joins; alternative = union; zeroOrMore = fixpoint run to convergence.
 
 def path_direct(df: DataFrame, pred: str) -> DataFrame:
     return df.filter(F.col("pred") == pred).select(
@@ -147,20 +136,65 @@ def path_alternative(p1: DataFrame, p2: DataFrame) -> DataFrame:
     return p1.unionByName(p2).distinct()
 
 
-def path_zero_or_more(pairs: DataFrame, max_iters: int = 10) -> DataFrame:
-    """Bounded transitive closure via iterative self-join (driver-side
-    fixpoint per SURVEY §4 — Catalyst has no recursion). localCheckpoint
-    per round cuts the lineage so plans stay flat."""
-    acc = pairs.select("doc_sha256", "src", "dst").distinct().localCheckpoint()
-    frontier = acc
-    for _ in range(max_iters):
-        nxt = path_sequence(frontier, pairs)
-        new = nxt.exceptAll(acc).localCheckpoint()
+def path_zero_or_more(pairs: DataFrame) -> DataFrame:
+    """Paths of length >= 1 (SPARQL ``p+``, not ``p*``): the transitive
+    closure of ``(doc_sha256, src, dst)`` within each document."""
+    return transitive_closure(pairs, "src", "dst", ["doc_sha256"])
+
+
+def transitive_closure(
+    pairs: DataFrame, src: str, dst: str, keys: Sequence[str]
+) -> DataFrame:
+    """Length >= 1 transitive closure of the pair relation ``(src, dst)``;
+    pairs compose only when their ``keys`` columns agree.  Returns the
+    distinct ``(*keys, src, dst)`` rows.
+
+    Semi-naive driver-side fixpoint (SURVEY §4 — Catalyst has no
+    recursion): each round joins only the pairs the previous round found
+    against the base relation, and the loop ends when a round adds
+    nothing.  On a finite input it must: every earlier round added a new
+    pair from a finite set.  localCheckpoint per round keeps the plans
+    flat."""
+    keys = list(keys)
+    base = pairs.select(*keys, src, dst).distinct().localCheckpoint()
+    step = base.select(
+        *[F.col(k).alias(f"_step_{k}") for k in keys],
+        F.col(src).alias("_step_mid"),
+        F.col(dst).alias("_step_dst"),
+    )
+    on = [F.col(dst) == F.col("_step_mid")]
+    on += [F.col(k) == F.col(f"_step_{k}") for k in keys]
+    acc = frontier = base
+    while True:
+        nxt = (
+            frontier.join(step, on)
+            .select(*keys, src, F.col("_step_dst").alias(dst))
+            .distinct()
+        )
+        new = nxt.subtract(acc).localCheckpoint()
         if new.isEmpty():
-            break
+            return acc
         acc = acc.unionByName(new).localCheckpoint()
         frontier = new
-    return acc
+
+
+def transitive_pairs(edges: Iterable[tuple[str, str]]) -> list[tuple[str, str]]:
+    """Driver-side transitive closure (length >= 1) of a small
+    schema-level relation, e.g. the rdfs:subClassOf hierarchy."""
+    adj = defaultdict(set)
+    for a, b in edges:
+        adj[a].add(b)
+    out = set()
+    for start in list(adj):
+        seen, stack = set(), [start]
+        while stack:
+            cur = stack.pop()
+            for nxt in adj.get(cur, ()):
+                if nxt not in seen:
+                    seen.add(nxt)
+                    stack.append(nxt)
+        out.update((start, d) for d in seen)
+    return sorted(out)
 
 
 # --- A1/A2: counts & info (MergedModels.scala:137-138; DataInfo.scala:37-57)

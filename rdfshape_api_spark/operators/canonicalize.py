@@ -138,7 +138,7 @@ OWL_SAMEAS = "http://www.w3.org/2002/07/owl#sameAs"
 
 
 def connected_components(
-    pairs: DataFrame, max_iters: int = 25, a: str = "doc_a", b: str = "doc_b"
+    pairs: DataFrame, a: str = "doc_a", b: str = "doc_b"
 ) -> DataFrame:
     """Identity clusters from identity edges: connected components by
     iterative min-label propagation.
@@ -154,10 +154,10 @@ def connected_components(
     O(graph diameter) rounds — ``owl:sameAs`` and identifier-sharing
     clusters are stars or near-cliques, so 2-3 rounds in practice.
     ``localCheckpoint`` per round keeps the plan flat (same protocol as
-    the SPARQL ``knows+`` fixpoint, plans/sparql.py).  This is the
+    ``algebra.transitive_closure``).  This is the
     standard label-propagation formulation of CC-in-MapReduce (Kiveris
-    et al. 2014).  Raises ``ValueError`` if ``max_iters`` rounds do not
-    reach a fixpoint.
+    et al. 2014).  Runs until a round lowers no label; labels only
+    decrease within a finite vertex set, so every input converges.
     """
     # symmetric edge list; vertices = every endpoint
     fwd = pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
@@ -170,7 +170,7 @@ def connected_components(
         .withColumn("component", F.col("doc_id"))
         .localCheckpoint()
     )
-    for _ in range(max_iters):
+    while True:
         # neighbor messages: each vertex offers its label to its neighbors
         msgs = edges.join(
             labels, on=edges["src"] == labels["doc_id"]
@@ -196,14 +196,12 @@ def connected_components(
         labels = joined.select("doc_id", "component")
         if changed == 0:
             return labels
-    raise ValueError(f"connected_components did not converge in {max_iters} rounds")
 
 
 def link_entities(
     triples: DataFrame,
     edges: DataFrame | None = None,
     drop_identity_triples: bool = True,
-    max_iters: int = 25,
 ) -> DataFrame:
     """Entity linking (north-star: "entity linking plus IRI
     canonicalization"): resolve identity edges to connected components
@@ -211,8 +209,9 @@ def link_entities(
     (lexicographic-min) representative.
 
     ``edges`` defaults to the triple set's own ``owl:sameAs`` statements;
-    pass any ``(a, b)`` DataFrame to link on other evidence (e.g. a
-    blocking/dedup candidate-pair set).  Identity is global — IRIs are
+    without any, the triples are returned unchanged after one
+    predicate-pushed limit-1 probe job.  Pass any ``(a, b)`` DataFrame to
+    link on other evidence (e.g. a blocking/dedup candidate-pair set).  Identity is global — IRIs are
     document-independent, so the rewrite applies across documents.
 
     100 TB design: components via distributed min-label propagation
@@ -225,17 +224,16 @@ def link_entities(
     """
     if edges is None:
         ident = (F.col("pred") == OWL_SAMEAS) & (F.col("obj_kind") != "literal")
-        edges = triples.filter(ident).select(
-            F.col("subj").alias("a"), F.col("obj_value").alias("b")
-        )
+        same = triples.filter(ident)
+        if same.isEmpty():
+            return triples
+        edges = same.select(F.col("subj").alias("a"), F.col("obj_value").alias("b"))
         if drop_identity_triples:
             triples = triples.filter(~ident)
-        comp = connected_components(edges, max_iters=max_iters, a="a", b="b")
+        comp = connected_components(edges, a="a", b="b")
     else:
         cols = edges.columns
-        comp = connected_components(
-            edges, max_iters=max_iters, a=cols[0], b=cols[1]
-        )
+        comp = connected_components(edges, a=cols[0], b=cols[1])
     mapping = comp.filter(F.col("doc_id") != F.col("component"))
     smap = mapping.select(
         F.col("doc_id").alias("subj"), F.col("component").alias("_canon_s")

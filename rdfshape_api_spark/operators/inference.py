@@ -28,27 +28,8 @@ from rdfshape_api_spark.model import (
     RDFS_SUBCLASSOF,
     RDFS_SUBPROPERTYOF,
 )
+from rdfshape_api_spark.operators.algebra import transitive_closure, transitive_pairs
 from rdfshape_api_spark.operators.canonicalize import connected_components
-
-
-def _transitive_pairs(edges: list[tuple[str, str]]) -> list[tuple[str, str]]:
-    """Driver-side transitive closure of a small (schema-level) relation."""
-    from collections import defaultdict
-
-    adj = defaultdict(set)
-    for a, b in edges:
-        adj[a].add(b)
-    out = set()
-    for start in list(adj):
-        seen, stack = set(), [start]
-        while stack:
-            cur = stack.pop()
-            for nxt in adj.get(cur, ()):
-                if nxt not in seen:
-                    seen.add(nxt)
-                    stack.append(nxt)
-        out.update((start, d) for d in seen)
-    return sorted(out)
 
 
 def rdfs_closure(df: DataFrame, spark=None) -> DataFrame:
@@ -60,10 +41,10 @@ def rdfs_closure(df: DataFrame, spark=None) -> DataFrame:
         .select("pred", "subj", "obj_value")
         .collect()
     )
-    subclass = _transitive_pairs(
+    subclass = transitive_pairs(
         [(r["subj"], r["obj_value"]) for r in schema_rows if r["pred"] == RDFS_SUBCLASSOF]
     )
-    subprop = _transitive_pairs(
+    subprop = transitive_pairs(
         [(r["subj"], r["obj_value"]) for r in schema_rows if r["pred"] == RDFS_SUBPROPERTYOF]
     )
     domain = [(r["subj"], r["obj_value"]) for r in schema_rows if r["pred"] == RDFS_DOMAIN]
@@ -132,7 +113,7 @@ OWL_EQUIV_CLASS = OWL + "equivalentClass"
 OWL_SAMEAS = OWL + "sameAs"
 
 
-def owl_sameas_closure(df: DataFrame, spark=None, max_iters: int = 25) -> DataFrame:
+def owl_sameas_closure(df: DataFrame, spark=None) -> DataFrame:
     """``owl:sameAs`` identity semantics (OWL-RL eq-sym / eq-rep-s /
     eq-rep-o) in **representative form** — the missing half of the OWL
     engine vs Jena's reasoner applied by the reference
@@ -177,7 +158,7 @@ def owl_sameas_closure(df: DataFrame, spark=None, max_iters: int = 25) -> DataFr
     if same.isEmpty():
         return df
     edges = same.select(F.col("subj").alias("a"), F.col("obj_value").alias("b"))
-    comp = connected_components(edges, max_iters=max_iters, a="a", b="b")
+    comp = connected_components(edges, a="a", b="b")
     mapping = comp.filter(F.col("doc_id") != F.col("component"))
 
     # eq-sym: the mirrored statement, in the asserting document.  The
@@ -229,14 +210,14 @@ def owl_sameas_closure(df: DataFrame, spark=None, max_iters: int = 25) -> DataFr
     return out.groupBy(*key).agg(F.min("origin").alias("origin"))
 
 
-def owl_lite_closure(df: DataFrame, spark=None, max_transitive_iters: int = 10) -> DataFrame:
+def owl_lite_closure(df: DataFrame, spark=None) -> DataFrame:
     """OWL-RL-lite entailment: the property-axiom subset of Jena's OWL
     reasoner that instance data commonly exercises —
 
     * ``owl:inverseOf``      (prp-inv1/2): x p y ⇒ y q x
     * ``owl:SymmetricProperty`` (prp-symp): x p y ⇒ y p x
-    * ``owl:TransitiveProperty`` (prp-trp): bounded fixpoint self-join
-      (driver loop with localCheckpoint — Catalyst has no recursion)
+    * ``owl:TransitiveProperty`` (prp-trp): full closure per predicate
+      (:func:`~rdfshape_api_spark.operators.algebra.transitive_closure`)
     * ``owl:equivalentClass`` (cax-eqc1/2): typed as one ⇒ typed as both
 
     Schema axioms are tiny → collected and broadcast like
@@ -321,49 +302,27 @@ def owl_lite_closure(df: DataFrame, spark=None, max_transitive_iters: int = 10) 
         out = out.unionByName(p)
 
     if transitive:
-        # per-predicate bounded fixpoint over (subj, obj) pairs
-        for pred in transitive:
-            pairs_df = (
-                out.filter((F.col("pred") == pred) & (F.col("obj_kind") != "literal"))
-                .select(*base, "subj", "obj_value")
-                .distinct()
-                .localCheckpoint()
+        # one closure for all transitive predicates: `pred` is a join key,
+        # so chains never mix predicates
+        keys = [*base, "pred"]
+        asserted = out.filter(
+            F.col("pred").isin(*transitive) & (F.col("obj_kind") != "literal")
+        ).select(*keys, "subj", "obj_value")
+        entailed = transitive_closure(asserted, "subj", "obj_value", keys).subtract(
+            asserted
+        )
+        out = out.unionByName(
+            entailed.select(
+                *base,
+                "subj",
+                "pred",
+                _node_kind(F.col("obj_value")).alias("obj_kind"),
+                "obj_value",
+                F.lit(None).cast("string").alias("obj_lang"),
+                F.lit(None).cast("string").alias("obj_datatype"),
+                F.lit("inferred").alias("origin"),
             )
-            acc = pairs_df
-            frontier = pairs_df
-            for _ in range(max_transitive_iters):
-                a = frontier.select(*base, "subj", F.col("obj_value").alias("_mid"))
-                b = pairs_df.select(
-                    *[F.col(c).alias(f"_b_{c}") for c in base],
-                    F.col("subj").alias("_mid2"),
-                    F.col("obj_value").alias("_dst"),
-                )
-                cond = [a["_mid"] == b["_mid2"]] + [
-                    a[c] == b[f"_b_{c}"] for c in base
-                ]
-                nxt = (
-                    a.join(b, on=cond)
-                    .select(*base, "subj", F.col("_dst").alias("obj_value"))
-                    .distinct()
-                )
-                new = nxt.exceptAll(acc).localCheckpoint()
-                if new.isEmpty():
-                    break
-                acc = acc.unionByName(new).localCheckpoint()
-                frontier = new
-            entailed = acc.exceptAll(pairs_df)
-            out = out.unionByName(
-                entailed.select(
-                    *base,
-                    "subj",
-                    F.lit(pred).alias("pred"),
-                    _node_kind(F.col("obj_value")).alias("obj_kind"),
-                    "obj_value",
-                    F.lit(None).cast("string").alias("obj_lang"),
-                    F.lit(None).cast("string").alias("obj_datatype"),
-                    F.lit("inferred").alias("origin"),
-                )
-            )
+        )
 
     key = [c for c in out.columns if c != "origin"]
     return out.groupBy(*key).agg(F.min("origin").alias("origin"))

@@ -23,9 +23,10 @@ from rdfshape_api_spark.lineage import (
     extraction_lineage,
     stage_complete,
 )
-from rdfshape_api_spark.model import RAW_TRIPLE_SCHEMA, TRIPLE_COLUMNS
+from rdfshape_api_spark.model import RAW_TRIPLE_SCHEMA, TRIPLE_COLUMNS, VERDICT_SCHEMA
 from rdfshape_api_spark.operators.canonicalize import (
     canonicalize,
+    link_entities,
     read_store,
     write_canonical_store,
 )
@@ -166,17 +167,8 @@ def run_pipeline(
                 raw.filter(F.col("error").isNull()).select(*TRIPLE_COLUMNS)
             )
             # entity linking (north-star): resolve owl:sameAs identity
-            # edges to canonical representatives before the store write.
-            # One pushdown-pruned scan decides whether the corpus carries
-            # identity triples at all; without them the stage is a no-op
-            # and adds no join to the plan.
-            from rdfshape_api_spark.operators.canonicalize import (
-                OWL_SAMEAS,
-                link_entities,
-            )
-
-            if not canon.filter(F.col("pred") == OWL_SAMEAS).isEmpty():
-                canon = link_entities(canon)
+            # edges to canonical representatives before the store write
+            canon = link_entities(canon)
             # dedup is fused into the store's layout shuffle (one exchange)
             write_canonical_store(canon, store_dir, dedup=True)
     store = read_store(spark, store_dir)
@@ -212,7 +204,9 @@ def run_pipeline(
             "overwrite"
         ).parquet(os.path.join(out_dir, "lineage_store"))
         if os.path.exists(verdict_dir):
-            verdict_lineage(spark.read.parquet(verdict_dir)).write.mode(
+            verdict_lineage(
+                spark.read.schema(VERDICT_SCHEMA).parquet(verdict_dir)
+            ).write.mode(
                 "overwrite"
             ).parquet(os.path.join(out_dir, "lineage_verdicts"))
 

@@ -14,9 +14,9 @@ literal metadata taken from the FINAL hop so SHACL value constraints
 Scale: evaluation is **focus-seeded** — the first step semi-joins the focus
 work-list, so a path constraint over a 100 TB store touches only the focus
 nodes' neighbourhoods (per-predicate directory pruning still applies to
-every hop's scan: each hop filters ``pred ==``).  Closures are bounded
-frontier fixpoints with ``localCheckpoint`` per round (Catalyst cannot
-recurse), expanding from the focus frontier only — never the global
+every hop's scan: each hop filters ``pred ==``).  Closures are frontier
+fixpoints run to convergence with ``localCheckpoint`` per round (Catalyst
+cannot recurse), expanding from the focus frontier only — never the global
 transitive closure.
 """
 
@@ -206,14 +206,11 @@ def _invert(path: PathNode) -> PathNode:
     return PathClosure(_invert(path.inner), path.min_len, path.max_len)
 
 
-def _closure(
-    triples: DataFrame, frontier: DataFrame, path: PathClosure, max_iters: int = 12
-) -> DataFrame:
+def _closure(triples: DataFrame, frontier: DataFrame, path: PathClosure) -> DataFrame:
     """Frontier-based closure from the focus set: each round advances the
     NEW nodes only (incremental semi-naive expansion), accumulating value
-    rows; zero-length contributes the focus node itself.  Bounded by
-    ``max_iters`` (graphs deeper than that raise — same contract as the
-    SPARQL ``+`` fixpoint)."""
+    rows; zero-length contributes the focus node itself.  Runs until no
+    new (focus, node) pair is reached, or ``path.max_len`` hops."""
     seed = frontier.select("doc_sha256", "node").distinct().localCheckpoint()
     acc_rows = _node_rows(seed) if path.min_len == 0 else None
 
@@ -265,11 +262,6 @@ def _closure(
         visited = visited.unionByName(new_frontier).localCheckpoint()
         frontier_pairs = new_frontier
         rounds += 1
-        if rounds >= max_iters:
-            raise ValueError(
-                f"path closure {path_display(path)} did not converge in "
-                f"{max_iters} rounds"
-            )
     if acc_rows is None:  # oneOrMore with no hops at all
         return _node_rows(seed).limit(0)
     return acc_rows.localCheckpoint()

@@ -35,6 +35,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F
 
+from rdfshape_api_spark.operators.algebra import transitive_closure
+
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
 _TOKEN_RE = re.compile(
@@ -1111,11 +1113,11 @@ def _filter_expr(toks: list[str]) -> F.Column:
     return _compile_expr(toks)
 
 
-def _path_pairs(df: DataFrame, path: _Path, max_iters: int = 25) -> DataFrame:
+def _path_pairs(df: DataFrame, path: _Path) -> DataFrame:
     """Compile a path AST to its solution pairs ``(s, o)`` over the merged
-    triples.  'plus' is a bounded distinct-pairs fixpoint (SPARQL arbitrary-
-    length paths are set-semantics) with localCheckpoint per round to keep
-    the plan flat; at store scale the base pairs are predicate-pruned scans."""
+    triples.  'plus' is the distinct-pairs transitive closure (SPARQL
+    arbitrary-length paths are set-semantics, algebra.transitive_closure);
+    at store scale the base pairs are predicate-pruned scans."""
     # per-document mode (sh:sparql): the doc id rides along in the pair
     # tables as `_g_doc` and every composition joins on it, so paths never
     # cross document boundaries
@@ -1126,7 +1128,7 @@ def _path_pairs(df: DataFrame, path: _Path, max_iters: int = 25) -> DataFrame:
             *gsel, F.col("subj").alias("s"), F.col("obj_value").alias("o")
         )
     if path.op == "inv":
-        c = _path_pairs(df, path.children[0], max_iters)
+        c = _path_pairs(df, path.children[0])
         return c.select(*gsel, F.col("o").alias("s"), F.col("s").alias("o"))
     if path.op == "neg":
         # Negated property set (§9.1): children are the excluded members —
@@ -1154,9 +1156,9 @@ def _path_pairs(df: DataFrame, path: _Path, max_iters: int = 25) -> DataFrame:
             out = out.unionByName(q)
         return out
     if path.op == "seq":
-        acc = _path_pairs(df, path.children[0], max_iters)
+        acc = _path_pairs(df, path.children[0])
         for ch in path.children[1:]:
-            nxt = _path_pairs(df, ch, max_iters).select(
+            nxt = _path_pairs(df, ch).select(
                 *([F.col("_g_doc").alias("_g2")] if g else []),
                 F.col("s").alias("_m"),
                 F.col("o").alias("_o2"),
@@ -1171,13 +1173,13 @@ def _path_pairs(df: DataFrame, path: _Path, max_iters: int = 25) -> DataFrame:
             )
         return acc
     if path.op == "alt":
-        parts = [_path_pairs(df, ch, max_iters) for ch in path.children]
+        parts = [_path_pairs(df, ch) for ch in path.children]
         out = parts[0]
         for q in parts[1:]:
             out = out.unionByName(q)
         return out
     if path.op == "plus":
-        return _plus_pairs(df, path.children[0], max_iters)
+        return _plus_pairs(df, path.children[0])
     if path.op in ("star", "opt"):
         # zero-length path semantics (SPARQL 1.1 §18.4 ZeroLengthPath):
         # every term of the graph — subjects AND objects, literals included
@@ -1189,43 +1191,18 @@ def _path_pairs(df: DataFrame, path: _Path, max_iters: int = 25) -> DataFrame:
         )
         zero = terms.select(*gsel, F.col("t").alias("s"), F.col("t").alias("o"))
         one_or_more = (
-            _plus_pairs(df, path.children[0], max_iters)
+            _plus_pairs(df, path.children[0])
             if path.op == "star"
-            else _path_pairs(df, path.children[0], max_iters)
+            else _path_pairs(df, path.children[0])
         )
         return zero.unionByName(one_or_more).distinct()
     raise SparqlParseError(f"unknown path op {path.op!r}")
 
 
-def _plus_pairs(df: DataFrame, child: _Path, max_iters: int) -> DataFrame:
-    """OneOrMore fixpoint: bounded semi-naive distinct-pairs expansion."""
-    g = "_g_doc" in df.columns
-    base = _path_pairs(df, child, max_iters).distinct().localCheckpoint()
-    acc, frontier = base, base
-    for _ in range(max_iters):
-        step = base.select(
-            *([F.col("_g_doc").alias("_g2")] if g else []),
-            F.col("s").alias("_m"),
-            F.col("o").alias("_o2"),
-        )
-        cond = frontier["o"] == step["_m"]
-        if g:
-            cond = cond & (frontier["_g_doc"] == step["_g2"])
-        nxt = (
-            frontier.join(step, cond)
-            .select(
-                *([frontier["_g_doc"]] if g else []),
-                frontier["s"].alias("s"),
-                F.col("_o2").alias("o"),
-            )
-            .distinct()
-        )
-        new = nxt.subtract(acc).localCheckpoint()
-        if new.isEmpty():
-            return acc
-        acc = acc.unionByName(new).localCheckpoint()
-        frontier = new
-    raise SparqlParseError(f"path '+' fixpoint exceeded {max_iters} iterations")
+def _plus_pairs(df: DataFrame, child: _Path) -> DataFrame:
+    """OneOrMore: the transitive closure of the child path's pairs."""
+    keys = ["_g_doc"] if "_g_doc" in df.columns else []
+    return transitive_closure(_path_pairs(df, child), "s", "o", keys)
 
 
 def _path_pattern_df(df: DataFrame, pat: _Pattern) -> tuple[DataFrame, list[str]]:

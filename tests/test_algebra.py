@@ -103,6 +103,33 @@ def test_subclass_closure_and_instances(g):
     assert inst == {"http://e/a"}
 
 
+def test_subclass_closure_deep_hierarchy_one_job(spark, tmp_path):
+    """A 25-level rdfs:subClassOf chain: the closure is complete and costs
+    one Spark job (one collect of the edges), not one per level."""
+    rows = [
+        ("d1", f"http://e/C{i:02d}", RDFS_SUBCLASSOF, "iri", f"http://e/C{i + 1:02d}", None, None)
+        for i in range(25)
+    ]
+    path = str(tmp_path / "hierarchy")
+    spark.createDataFrame(
+        rows,
+        "doc_sha256 string, subj string, pred string, obj_kind string, "
+        "obj_value string, obj_lang string, obj_datatype string",
+    ).write.parquet(path)
+    df = spark.read.parquet(path)
+    sc = spark.sparkContext
+    group = "test_subclass_closure_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        got = algebra.subclass_closure(df, "http://e/C25")
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert got == [f"http://e/C{i:02d}" for i in range(26)]
+    assert len(jobs) == 1
+
+
 def test_property_paths(g):
     direct = algebra.path_direct(g, "http://e/p")
     assert direct.count() == 2
@@ -119,6 +146,16 @@ def test_property_paths(g):
         ("http://e/b", "http://e/c"),
         ("http://e/a", "http://e/c"),
     }
+
+
+def test_path_zero_or_more_deep_chain(spark):
+    """A 12-edge chain needs 11 join rounds; every pair is reached."""
+    pairs = spark.createDataFrame(
+        [("d1", f"v{i:02d}", f"v{i + 1:02d}") for i in range(12)],
+        "doc_sha256 string, src string, dst string",
+    )
+    got = {(r["src"], r["dst"]) for r in algebra.path_zero_or_more(pairs).collect()}
+    assert got == {(f"v{i:02d}", f"v{j:02d}") for i in range(13) for j in range(i + 1, 13)}
 
 
 def test_aggregations(g):

@@ -252,6 +252,18 @@ def test_connected_components_chain(spark):
     assert got == {"a": "a", "b": "a", "c": "a", "d": "a", "x": "x", "y": "x"}
 
 
+def test_connected_components_deep_chain(spark):
+    """A 26-edge chain with its min label at one end takes 26 rounds to
+    propagate; every vertex ends in the one component."""
+    from rdfshape_api_spark.operators.canonicalize import connected_components
+
+    pairs = spark.createDataFrame(
+        [(f"v{i:02d}", f"v{i + 1:02d}") for i in range(26)], "doc_a string, doc_b string"
+    )
+    got = {r["doc_id"]: r["component"] for r in connected_components(pairs).collect()}
+    assert got == {f"v{i:02d}": "v00" for i in range(27)}
+
+
 def test_connected_components_star_and_singleton_free(spark):
     from rdfshape_api_spark.operators.canonicalize import connected_components
 

@@ -72,6 +72,19 @@ def test_transitive_chain(spark):
     assert (E + "a", E + "part", E + "b", "asserted") in facts
 
 
+def test_transitive_deep_chain(spark):
+    """A 12-edge owl:TransitiveProperty chain closes completely."""
+    tri = _tri(
+        spark,
+        [(E + "part", RDF_TYPE, "iri", OWL_TRANSITIVE, None, None)]
+        + [(E + f"v{i:02d}", E + "part", "iri", E + f"v{i + 1:02d}", None, None) for i in range(12)],
+    )
+    got = {(s, o) for s, p, o, _ in _facts(owl_lite_closure(tri)) if p == E + "part"}
+    assert got == {
+        (E + f"v{i:02d}", E + f"v{j:02d}") for i in range(13) for j in range(i + 1, 13)
+    }
+
+
 def test_equivalent_class(spark):
     tri = _tri(
         spark,

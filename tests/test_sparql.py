@@ -410,6 +410,18 @@ def test_path_plus_transitive_with_cycle(spark):
     assert pairs == expect
 
 
+def test_path_plus_deep_chain(spark):
+    """A 26-edge chain: ex:knows+ runs to convergence (26 rounds)."""
+    cols = "subj string, pred string, obj_kind string, obj_value string, obj_lang string, obj_datatype string"
+    tri = spark.createDataFrame(
+        [(EX + f"v{i:02d}", EX + "knows", "iri", EX + f"v{i + 1:02d}", None, None) for i in range(26)],
+        cols,
+    )
+    out = sparql_select(tri, PREFIX + "SELECT DISTINCT ?a ?b WHERE { ?a ex:knows+ ?b . }")
+    pairs = {(r["a"][len(EX):], r["b"][len(EX):]) for r in out.collect()}
+    assert pairs == {(f"v{i:02d}", f"v{j:02d}") for i in range(27) for j in range(i + 1, 27)}
+
+
 def test_path_star_zero_length(spark):
     cols = "subj string, pred string, obj_kind string, obj_value string, obj_lang string, obj_datatype string"
     edges = [("a", "b"), ("b", "c")]
