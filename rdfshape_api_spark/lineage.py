@@ -111,15 +111,16 @@ def stage_complete(stage_dir: str) -> bool:
 
 
 class StageTimer:
-    """Wall-clock per stage, recorded into the run's metrics dict."""
+    """Wall time per stage on the monotonic clock, recorded into the run's
+    metrics dict."""
 
     def __init__(self, metrics: dict, name: str):
         self.metrics, self.name = metrics, name
 
     def __enter__(self):
-        self.t0 = time.time()
+        self.t0 = time.perf_counter()
         return self
 
     def __exit__(self, *exc):
-        self.metrics[f"{self.name}_wall_s"] = round(time.time() - self.t0, 3)
+        self.metrics[f"{self.name}_wall_s"] = round(time.perf_counter() - self.t0, 3)
         return False

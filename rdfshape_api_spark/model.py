@@ -16,8 +16,9 @@ parquet column pruning, predicate pushdown):
     obj_lang, obj_datatype
 
 Scale note: the canonical store is written partitioned by ``pred`` (north
-rule) with a ``bucket`` sub-key = ``pmod(hash(subj), k)`` so hot predicates
-(``rdf:type``) do not become single giant partitions (``STORE_SCHEMA``).
+rule) with a ``bucket`` sub-key = ``pmod(hash(subj), nb_p)``, ``nb_p`` sized
+from the predicate's row count, so hot predicates (``rdf:type``) do not
+become single giant partitions (``STORE_SCHEMA``, ``STORE_TARGET_ROWS``).
 """
 
 from __future__ import annotations
@@ -108,10 +109,12 @@ STORE_SCHEMA = T.StructType(
         T.StructField("bucket", T.IntegerType(), True),
     ]
 )
-# bucket = pmod(xxhash64(subj), STORE_SUBJ_BUCKETS): the one subject-bucket
-# count every store writer uses, so a snapshot's base keeps one layout
-# across init and compaction, and readers can derive a subject's bucket.
-STORE_SUBJ_BUCKETS = 16
+# Target rows per store file (Iceberg's write.target-file-size-bytes, in
+# rows): a predicate with n rows is written into max(1, ceil(n / target))
+# subject buckets, so a cold predicate is one file and a hot one splits.
+# 2M rows is roughly 128 MiB of parquet at the ~65 bytes per stored triple
+# measured on one-file-per-predicate stores.
+STORE_TARGET_ROWS = 1 << 21
 
 # --- prefix table (SURVEY §2.3 P8) ------------------------------------------
 PREFIX_SCHEMA = T.StructType(

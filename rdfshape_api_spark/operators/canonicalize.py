@@ -27,9 +27,12 @@ distributed-friendly rules:
   whose key skews is :func:`entity_degree` (the entity alone); its
   partial aggregation is the combiner.
 * **Canonical store** — parquet partitioned by predicate (north rule) with
-  a ``bucket = pmod(xxhash64(subj), STORE_SUBJ_BUCKETS)`` sub-key so hot
-  predicates (``rdf:type``) split into that many files instead of one
-  giant partition (SURVEY §7.3).  ``read_store`` is its one reader.
+  a ``bucket = pmod(xxhash64(subj), nb_p)`` sub-key, where ``nb_p =
+  max(1, ceil(rows_p / STORE_TARGET_ROWS))`` comes from the predicate's
+  row count: a cold predicate is one file, a hot one (``rdf:type``) splits
+  into ``nb_p`` files instead of one giant partition (SURVEY §7.3).
+  ``nb_p`` is not recorded, so no reader computes a subject's bucket.
+  ``read_store`` is the store's one reader.
 """
 
 from __future__ import annotations
@@ -41,7 +44,7 @@ from rdfshape_api_spark.model import (
     RDF_LANGSTRING,
     SKOLEM_PREFIX,
     STORE_SCHEMA,
-    STORE_SUBJ_BUCKETS,
+    STORE_TARGET_ROWS,
     XSD_DECIMAL,
     XSD_INTEGER,
 )
@@ -372,12 +375,17 @@ def pred_partition_key(pred=None):
 def write_canonical_store(
     df: DataFrame,
     path: str,
-    subj_buckets: int = STORE_SUBJ_BUCKETS,
+    subj_buckets: int | None = None,
     dedup: bool = False,
 ) -> None:
     """Overwrite ``path`` with the canonical triple store: parquet
     partitioned by predicate (north rule), sub-bucketed by subject hash so
     hot predicates split.
+
+    Predicate ``p`` gets ``nb_p = max(1, ceil(rows_p / STORE_TARGET_ROWS))``
+    subject buckets, from one ``groupBy("pred").count()`` (``rows_p``
+    counts the input rows, duplicates included); ``subj_buckets`` fixes
+    ``nb_p`` for every predicate instead.
 
     The pre-write ``repartition(pred_part, bucket)`` lines file boundaries
     up with partition directories (one shuffle, one file per directory);
@@ -394,18 +402,25 @@ def write_canonical_store(
     exchange — one shuffle total, with map-side partial aggregation
     absorbing duplicates before the wire.
     """
-    # pred_part via a BROADCAST DICTIONARY join, not a per-row expression:
-    # distinct predicates are few (10²-10⁴ even at web scale) while rows are
-    # 10⁹+ — evaluating regexp+split+md5 per row measured ~15x slower than
-    # joining a tiny precomputed (pred → pred_part) map (the expression
-    # chain collapses under high thread counts; the dictionary join is
-    # cheap at every parallelism level and the exchange-elision below still
-    # sees plain columns).
+    # (pred, pred_part, nb_p) via a BROADCAST DICTIONARY join, not a
+    # per-row expression: distinct predicates are few (10²-10⁴ even at web
+    # scale) while rows are 10⁹+ — evaluating regexp+split+md5 per row
+    # measured ~15x slower than joining a tiny precomputed map.  The map is
+    # the per-predicate count itself (the same jobs a distinct would run);
+    # collecting it and broadcasting a driver-built table costs one more
+    # job.  The exchange-elision below still sees plain columns.
+    nb_p = (
+        F.lit(subj_buckets)
+        if subj_buckets is not None
+        else F.greatest(F.lit(1), F.ceil(F.col("count") / F.lit(STORE_TARGET_ROWS)))
+    )
     pred_map = F.broadcast(
-        df.select("pred").distinct().withColumn("pred_part", pred_partition_key())
+        df.groupBy("pred")
+        .count()
+        .select("pred", pred_partition_key().alias("pred_part"), nb_p.cast("int").alias("nb_p"))
     )
     out = df.join(pred_map, "pred").withColumn(
-        "bucket", F.pmod(F.xxhash64("subj"), F.lit(subj_buckets))
+        "bucket", F.pmod(F.xxhash64("subj"), F.col("nb_p")).cast("int")
     )
     out = out.select(*df.columns, "pred_part", "bucket").repartition("pred_part", "bucket")
     if dedup:

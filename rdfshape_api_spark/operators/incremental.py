@@ -254,7 +254,8 @@ def stream_merge_snapshots(
 def compact_snapshot(spark: SparkSession, store_dir: str) -> None:
     """Fold the merge log into a fresh base (Iceberg rewrite_data_files
     analog): materialize the reconciled snapshot, rewrite the canonical
-    layout, reset the log.  Run when the accumulated log size makes the
+    layout (each predicate's bucket count recomputed from its current row
+    count), reset the log.  Run when the accumulated log size makes the
     read-side reconciliation join dominate scan cost."""
     import shutil
 

@@ -323,3 +323,45 @@ def test_connected_components_random_graphs_vs_union_find(spark):
             for r in connected_components(pairs).collect()
         }
         assert got == expected, f"trial {trial} mismatch"
+
+
+def _bucket_dirs(path, pred):
+    import os
+
+    part = os.path.join(path, f"pred_part={C.pred_partition_value(pred)}")
+    return sorted(d for d in os.listdir(part) if d.startswith("bucket="))
+
+
+def test_store_layout_sized_per_predicate(spark, tmp_path, monkeypatch):
+    """A predicate above ``STORE_TARGET_ROWS`` splits into several subject
+    buckets; one below it is a single ``bucket=0`` file."""
+    monkeypatch.setattr(C, "STORE_TARGET_ROWS", 4)
+    hot, cold = "http://e/ns#type", "http://e/ns#name"
+    rows = [("d", f"http://e/s{i}", hot, "iri", "http://e/C", None, None) for i in range(40)]
+    rows += [("d", "http://e/s0", cold, "literal", "x", None, None)] * 3  # duplicates
+    rows += [("d2", "http://e/s0", cold, "literal", "x", None, None)]
+    path = str(tmp_path / "store")
+    C.write_canonical_store(_raw(spark, rows), path, dedup=True)
+    assert len(_bucket_dirs(path, hot)) > 1
+    assert _bucket_dirs(path, cold) == ["bucket=0"]
+    got = C.read_store(spark, path).select(*["doc_sha256"] + C.TRIPLE_KEY).collect()
+    assert sorted(map(tuple, got)) == sorted(set(rows))
+
+
+def test_store_write_job_count(spark, tmp_path):
+    """The per-predicate count that sizes the layout runs no more Spark jobs
+    than the distinct-predicate scan it replaced (4 jobs before)."""
+    src = str(tmp_path / "src")
+    rows = [("d", f"http://e/s{i % 7}", f"http://e/p{i % 3}", "iri", "o", None, None) for i in range(30)]
+    _raw(spark, rows).write.parquet(src)
+    df = spark.read.parquet(src)
+    sc = spark.sparkContext
+    group = "test_store_write_job_count"
+    sc.setJobGroup(group, group)
+    try:
+        C.write_canonical_store(df, str(tmp_path / "store"), dedup=True)
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(jobs) <= 4, jobs

@@ -272,3 +272,34 @@ def test_read_snapshot_plans_without_spark_jobs(spark, tmp_path):
         sc.setLocalProperty("spark.job.description", None)
     assert planned == []
     assert ran and vals == {"new", "two"}
+
+
+def test_compaction_resizes_the_layout(spark, tmp_path, monkeypatch):
+    """Compaction recomputes each predicate's bucket count: a predicate that
+    merges grew past ``STORE_TARGET_ROWS`` is rewritten into several
+    buckets, and the reconciled snapshot is unchanged by the rewrite."""
+    import os
+
+    from rdfshape_api_spark.operators import canonicalize as C
+
+    monkeypatch.setattr(C, "STORE_TARGET_ROWS", 4)
+    pred = "http://e/p"
+
+    def doc(path, subjects):
+        return (path, "c1", "".join(f'<http://e/s{i}> <{pred}> "v" .\n' for i in subjects))
+
+    def buckets(store_dir):
+        part = os.path.join(store_dir, "base", f"pred_part={C.pred_partition_value(pred)}")
+        return sorted(d for d in os.listdir(part) if d.startswith("bucket="))
+
+    store_dir = str(tmp_path / "snap")
+    init_snapshot(_nt_docs(spark, [doc("a.nt", range(3))]), store_dir)
+    assert buckets(store_dir) == ["bucket=0"]
+    merge_snapshot(spark, store_dir, _nt_docs(spark, [doc("b.nt", range(3, 20))]))
+    merge_snapshot(spark, store_dir, _nt_docs(spark, [doc("c.nt", range(20, 40))]))
+    before = sorted(map(tuple, read_snapshot(spark, store_dir).select(*CANON).collect()))
+    assert len(before) == 40
+    compact_snapshot(spark, store_dir)
+    assert len(buckets(store_dir)) > 1
+    after = sorted(map(tuple, read_snapshot(spark, store_dir).select(*CANON).collect()))
+    assert after == before

@@ -29,6 +29,16 @@ def test_pipeline_end_to_end_and_resume(spark, fixtures_001, tmp_path):
     # store is predicate-partitioned
     parts = [p for p in os.listdir(os.path.join(out, "triple_store")) if p.startswith("pred_part=")]
     assert len(parts) == 6  # rdf:type + 5 sensor predicates
+    # every predicate is far below STORE_TARGET_ROWS: one file each, and
+    # the metrics report the layout from a listing
+    files = [
+        os.path.join(d, f)
+        for d, _, fs in os.walk(os.path.join(out, "triple_store"))
+        for f in fs
+        if f.endswith(".parquet")
+    ]
+    assert m["store_files"] == len(files) == 6
+    assert m["store_bytes"] == sum(map(os.path.getsize, files))
 
     # resume: stages with _SUCCESS are skipped → no stage timers re-recorded
     errors_marker = os.path.join(out, "errors", "_SUCCESS")
