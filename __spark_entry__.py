@@ -445,15 +445,6 @@ def _q_check_datatype(spark, sf_dir):
     ).distinct()
 
 
-def _q_graph_fp(spark, sf_dir):
-    """P9 at corpus scale: bnode-blind canonical graph fingerprints
-    (one groupBy render + one count; exact isomorphic() settles the tiny
-    candidate groups)."""
-    from rdfshape_api_spark.operators.algebra import graph_fingerprints
-
-    return graph_fingerprints(_rdf_triples(spark, sf_dir))
-
-
 def _q_trig(spark, sf_dir):
     """K1 TriG emitter: one <urn:doc:sha> { … } graph block per document
     (RdfFormat.scala:18-29 lists TriG as a DataConvert output)."""
@@ -503,15 +494,6 @@ def _q_jsonld_roundtrip(spark, sf_dir):
 def _q_rdfjson_roundtrip(spark, sf_dir):
     """K1 RDF/JSON (Talis) emitter, round-trip via parse_rdfjson."""
     return _roundtrip_q(spark, sf_dir, "to_rdfjson_per_doc", "rdfjson", "rdfjson")
-
-
-def _q_pagerank(spark, sf_dir):
-    """Integerized 10-iteration PageRank over the merged entity graph
-    (operators/algebra.pagerank) — fixed-point arithmetic makes the
-    fixpoint bit-identical to the unrolled SQL twin."""
-    from rdfshape_api_spark.operators.algebra import pagerank
-
-    return pagerank(_rdf_triples(spark, sf_dir), iterations=10)
 
 
 # left-biased prefix list for DOT labels — same entries the P8 prefix-map
@@ -1461,10 +1443,15 @@ def _q_owl_sameas(spark, sf_dir):
 
 
 def _q_path_reachable(spark, sf_dir):
-    from rdfshape_api_spark.operators.algebra import path_direct, path_zero_or_more
+    """P7: ``ex:station+`` pairs per document through the shared path
+    evaluator, unseeded."""
+    from rdfshape_api_spark.plans.paths import PathClosure, PathPred, path_rows
 
-    pairs = path_direct(_rdf_triples(spark, sf_dir), EX + "station")
-    return path_zero_or_more(pairs).select("doc_sha256", "src", "dst").distinct()
+    path = PathClosure(PathPred(EX + "station"), 1, None)
+    rows = path_rows(_rdf_triples(spark, sf_dir), path, ["doc_sha256"])
+    return rows.select(
+        "doc_sha256", F.col("node").alias("src"), F.col("obj_value").alias("dst")
+    ).distinct()
 
 
 def _q_json_graph(spark, sf_dir):
@@ -1504,20 +1491,6 @@ def _q_stream_validate(spark, sf_dir):
     )
 
 
-def _q_social_triangles(spark, sf_dir):
-    """Per-node triangle counts over the merged knows graph — the
-    degree-ordered wedge join (compact-forward), O(m^1.5) wedges on any
-    graph vs the hub-quadratic lexicographic orientation. Oracle uses the
-    orientation-invariant x<y<z join (row-identical output)."""
-    from rdfshape_api_spark.operators.algebra import triangle_counts
-
-    tri = _social_triples(spark, sf_dir)
-    kn = tri.filter(F.col("pred") == EX + "knows").select(
-        F.col("subj").alias("src"), F.col("obj_value").alias("dst")
-    )
-    return triangle_counts(kn)
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         # SURVEY §2 operators (RDF engine)
@@ -1547,12 +1520,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "rdf_trig": _q_trig,                             # K1 TriG (r4)
         "rdf_has_pred_subj": _q_has_pred_subj,           # P4 vectorized (r4)
         "rdf_check_datatype": _q_check_datatype,         # P5 vectorized (r4)
-        "rdf_graph_fp": _q_graph_fp,                     # P9 corpus fingerprints (r4)
         "rdf_xml_roundtrip": _q_rdfxml_roundtrip,        # K1 RDF/XML round-trip (r4)
         "rdf_jsonld_roundtrip": _q_jsonld_roundtrip,     # K1 JSON-LD round-trip (r4)
         "rdf_rdfjson_roundtrip": _q_rdfjson_roundtrip,   # K1 RDF/JSON round-trip (r4)
         "rdf_dot": _q_dot,                               # K-DOT visual graph (r4)
-        "rdf_pagerank": _q_pagerank,                     # KG entity salience (r4)
         "rdf_skolem_count": _q_skolem_count,             # canonicalization
         "rdf_hub_degree": _q_hub_degree,                 # J5 skewed entity agg
         "rdf_sparql_select": _q_sparql_select,           # Q1 SPARQL subset
@@ -1582,7 +1553,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "social_shacl_qualified_inverse": _q_shacl_qualified_inverse,  # §2.7 disjoint qualified over inverse path (r4)
         "social_shacl_member_prop": _q_shacl_member_prop,  # §2.7 sh:property on or-members (r4s9)
         "social_shacl_node_level": _q_shacl_node_level,    # §2.7 node-shape-level or/not (r4s10)
-        "social_triangles": _q_social_triangles,  # KG triangle support (r4s9)
         "rdf_infer_profile": _q_infer_profile,           # §2.6 schema inference
         "rdf_rdfs_closure": _q_rdfs_closure,             # I1 RDFS entailment
         "rdf_owl_sameas": _q_owl_sameas,                 # I1 owl:sameAs merge (r5)
@@ -1641,35 +1611,6 @@ def _dot_qn_sql(x: str) -> str:
             f"THEN '{pfx}:' || substr({x}, {n + 1})"
         )
     return "CASE " + " ".join(parts) + f" ELSE {x} END"
-
-
-def _pagerank_sql(iters: int = 10, scale: int = 1_000_000) -> str:
-    """Unrolled integer-arithmetic PageRank twin of algebra.pagerank —
-    one CTE per iteration; integer ops make summation order irrelevant."""
-    ctes = [
-        f"e AS (SELECT DISTINCT subj AS src, obj_value AS dst FROM {_T} "
-        "WHERE obj_kind <> 'literal')",
-        "nodes AS (SELECT DISTINCT node FROM "
-        "(SELECT src AS node FROM e UNION ALL SELECT dst FROM e))",
-        "od AS (SELECT src, count(*)::BIGINT AS deg FROM e GROUP BY src)",
-        "ew AS (SELECT e.src, e.dst, od.deg FROM e JOIN od USING (src))",
-        "p AS (SELECT count(*)::BIGINT AS n FROM nodes)",
-        f"r0 AS (SELECT node, ({scale} // n)::BIGINT AS rank FROM nodes, p)",
-    ]
-    for i in range(iters):
-        ctes.append(
-            f"r{i + 1} AS (SELECT n.node, "
-            f"((15 * ({scale} // p.n)) // 100 "
-            f"+ (85 * coalesce(s.m, 0)) // 100)::BIGINT AS rank "
-            f"FROM nodes n CROSS JOIN p LEFT JOIN ("
-            f"SELECT ew.dst, sum(r.rank // ew.deg) AS m "
-            f"FROM ew JOIN r{i} r ON ew.src = r.node GROUP BY ew.dst"
-            f") s ON s.dst = n.node)"
-        )
-    return (
-        "WITH " + ",\n".join(ctes)
-        + f"\nSELECT node AS entity, rank AS rank_int FROM r{iters}"
-    )
 
 
 def _dot_esc_sql(x: str) -> str:
@@ -1835,28 +1776,6 @@ def oracle_sql() -> dict[str, str]:
             FROM {_T}
             WHERE pred IN ('{EX}readingTemperature', '{EX}label')
         """,
-        "rdf_graph_fp": f"""
-            -- bnode-blind canonical graph fingerprint per document:
-            -- sorted DISTINCT masked lines, md5 of the newline join
-            WITH l AS (
-              SELECT DISTINCT doc_sha256,
-                (CASE WHEN subj LIKE 'urn:skolem:%' THEN '_:' ELSE subj END)
-                || ' ' || pred || ' ' ||
-                (CASE WHEN obj_kind = 'literal'
-                      THEN '"' || obj_value || '"'
-                           || coalesce('@' || obj_lang, '')
-                           || coalesce('^^' || obj_datatype, '')
-                      WHEN obj_value LIKE 'urn:skolem:%' THEN '_:'
-                      ELSE obj_value END) AS line
-              FROM {_T}
-            ), fp AS (
-              SELECT doc_sha256,
-                     md5(string_agg(line, chr(10) ORDER BY line)) AS graph_fp
-              FROM l GROUP BY doc_sha256
-            )
-            SELECT graph_fp, count(*) AS n_docs, min(doc_sha256) AS rep_doc
-            FROM fp GROUP BY graph_fp
-        """,
         "rdf_trig": f"""
             WITH l AS (
               SELECT DISTINCT doc_sha256,
@@ -1885,7 +1804,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT DISTINCT doc_sha256, subj, pred, obj_kind, obj_value,
                             obj_lang, obj_datatype FROM {_T}
         """,
-        "rdf_pagerank": _pagerank_sql(10),
         "rdf_dot": f"""
             WITH t AS (
               SELECT *,
@@ -2756,29 +2674,6 @@ def oracle_sql() -> dict[str, str]:
                         THEN 'conformant' ELSE 'nonconformant' END AS status
             FROM focus f LEFT JOIN contact c
               ON c.doc_sha256 = f.doc_sha256 AND c.node = f.node
-        """,
-        "social_triangles": f"""
-            -- orientation-invariant triangle enumeration (x<y<z joins;
-            -- the Spark side uses the degree-ordered orientation, same
-            -- per-node output), each triangle exploded to its 3 vertices
-            WITH k AS (
-              SELECT DISTINCT subj AS a, obj_value AS b
-              FROM '{_SOC_TRIPLES}'
-              WHERE pred = 'http://example.org/knows' AND subj <> obj_value
-            ),
-            e2 AS (
-              SELECT DISTINCT least(a, b) AS x, greatest(a, b) AS y
-              FROM (SELECT a, b FROM k UNION SELECT b, a FROM k)
-            ),
-            tri AS (
-              SELECT e1.x AS a, e1.y AS b, f.y AS c
-              FROM e2 e1
-              JOIN e2 f ON f.x = e1.y
-              JOIN e2 g ON g.x = e1.x AND g.y = f.y
-            )
-            SELECT node, count(*)::BIGINT AS n_tri
-            FROM (SELECT unnest([a, b, c]) AS node FROM tri)
-            GROUP BY 1
         """,
     }
     # Syntax-twin entries run the SAME semantics through a different schema

@@ -14,7 +14,7 @@ from collections.abc import Iterable, Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
-from rdfshape_api_spark.model import KIND_IRI, KIND_LITERAL, RDF_TYPE, RDFS_SUBCLASSOF
+from rdfshape_api_spark.model import KIND_IRI, RDF_TYPE, RDFS_SUBCLASSOF
 
 
 # --- P1/P2: scans & distinct node projections (MergedModels.scala:62-73,99-100)
@@ -106,40 +106,6 @@ def shacl_instances(df: DataFrame, cls: str) -> DataFrame:
         .select(F.col("subj").alias("node"))
         .distinct()
     )
-
-
-# --- P7: property paths (MergedModels.scala:81-94) ---------------------------
-# Path algebra: direct pred = filter; inverse = swap; sequence = chained
-# joins; alternative = union; zeroOrMore = fixpoint run to convergence.
-
-def path_direct(df: DataFrame, pred: str) -> DataFrame:
-    return df.filter(F.col("pred") == pred).select(
-        "doc_sha256", F.col("subj").alias("src"), F.col("obj_value").alias("dst")
-    )
-
-
-def path_inverse(pairs: DataFrame) -> DataFrame:
-    return pairs.select("doc_sha256", F.col("dst").alias("src"), F.col("src").alias("dst"))
-
-
-def path_sequence(p1: DataFrame, p2: DataFrame) -> DataFrame:
-    a = p1.select("doc_sha256", "src", F.col("dst").alias("_mid"))
-    b = p2.select(F.col("doc_sha256").alias("_d2"), F.col("src").alias("_mid2"), "dst")
-    return (
-        a.join(b, on=[a["doc_sha256"] == b["_d2"], a["_mid"] == b["_mid2"]])
-        .select("doc_sha256", "src", "dst")
-        .distinct()
-    )
-
-
-def path_alternative(p1: DataFrame, p2: DataFrame) -> DataFrame:
-    return p1.unionByName(p2).distinct()
-
-
-def path_zero_or_more(pairs: DataFrame) -> DataFrame:
-    """Paths of length >= 1 (SPARQL ``p+``, not ``p*``): the transitive
-    closure of ``(doc_sha256, src, dst)`` within each document."""
-    return transitive_closure(pairs, "src", "dst", ["doc_sha256"])
 
 
 def transitive_closure(
@@ -281,186 +247,4 @@ def check_datatype_table(df: DataFrame, pred: str, datatype: str) -> DataFrame:
         # coalesce: `obj_datatype == dt` is SQL-NULL on untyped literals —
         # a boolean verdict must be two-valued
         F.coalesce(datatype_ok(datatype), F.lit(False)).alias("datatype_ok"),
-    )
-
-
-def graph_fingerprints(df: DataFrame) -> DataFrame:
-    """P9 at corpus scale: bnode-blind canonical graph fingerprints, for
-    finding isomorphism-candidate duplicate documents in one pass.
-
-    Each document's triples render to sorted N-Triples-style lines with
-    every skolemized blank node masked to ``_:`` (bnode-BLIND: graphs
-    differing only in bnode identity — or in bnode *wiring* invisible to
-    this mask — share a fingerprint).  This is the standard first
-    refinement of iso-canonicalisation (the colour-0 hash); candidate
-    groups are tiny, so the exact pairwise :func:`isomorphic` check
-    settles them.  Returns one row per distinct fingerprint:
-    ``(graph_fp, n_docs, rep_doc)``.
-
-    Scale: one groupBy(doc) render + one groupBy(fp) count — both
-    map-side-combinable; no pairwise comparison anywhere."""
-    mask = lambda c: F.when(  # noqa: E731 — tiny local combinator
-        c.startswith("urn:skolem:"), F.lit("_:")
-    ).otherwise(c)
-    subj_term = mask(F.col("subj"))
-    obj_term = F.when(
-        F.col("obj_kind") == KIND_LITERAL,
-        F.concat(
-            F.lit('"'), F.col("obj_value"), F.lit('"'),
-            F.coalesce(F.concat(F.lit("@"), F.col("obj_lang")), F.lit("")),
-            F.coalesce(F.concat(F.lit("^^"), F.col("obj_datatype")), F.lit("")),
-        ),
-    ).otherwise(mask(F.col("obj_value")))
-    line = F.concat_ws(" ", subj_term, F.col("pred"), obj_term)
-    per_doc = df.groupBy("doc_sha256").agg(
-        F.md5(F.array_join(F.sort_array(F.collect_set(line)), "\n")).alias("graph_fp")
-    )
-    return per_doc.groupBy("graph_fp").agg(
-        F.count("*").alias("n_docs"), F.min("doc_sha256").alias("rep_doc")
-    )
-
-
-# --- KG analytics: entity PageRank over the merged entity graph -------------
-# Complements rdf_hub_degree / link_entities: importance ranking of the
-# canonical entities (the classic KG-construction signal for entity
-# salience).  The reference exposes degree-style DataInfo aggregates; a
-# distributed importance measure is the scale-path extension of A3.
-
-def pagerank(
-    df: DataFrame,
-    iterations: int = 10,
-    scale: int = 1_000_000,
-) -> DataFrame:
-    """Fixed-iteration PageRank over the DISTINCT resource→resource edges
-    of the merged model, in **integer fixed-point arithmetic** so the
-    result is bit-reproducible across engines and run orders (float
-    summation is order-sensitive; integer sums are not — same trick as
-    the integerized TF-IDF scores).
-
-    Semantics (simplified PageRank, damping 0.85, dangling mass dropped —
-    the common fixed-k formulation):
-
-      ``rank₀ = scale // n``
-      ``rankᵢ₊₁(v) = (15·(scale//n))//100 + (85·Σ_{u→v} rankᵢ(u)//deg(u))//100``
-
-    Scale design: per iteration one partition-local ``div`` map over the
-    pre-joined ``(src, dst, deg)`` edge relation, one shuffle
-    (``groupBy(dst)`` with map-side partial sums), one broadcast-free left
-    join back to the node list; lineage is cut with ``localCheckpoint``
-    per round (on a cluster: persist + count, or checkpoint to durable
-    storage).  Edges carry their out-degree from a single up-front join,
-    so the loop never re-aggregates degrees.
-    """
-    edges = (
-        df.where(F.col("obj_kind") != KIND_LITERAL)
-        .select(F.col("subj").alias("src"), F.col("obj_value").alias("dst"))
-        .distinct()
-    )
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    outdeg = edges.groupBy("src").agg(F.count("*").alias("deg"))
-    ewd = edges.join(outdeg, on="src").persist()
-    n = nodes.count()
-    if n == 0:
-        return nodes.select("node", F.lit(0).cast("bigint").alias("rank_int")).withColumnRenamed("node", "entity")
-    base = scale // n
-    teleport = (15 * base) // 100
-    ranks = nodes.select("node", F.lit(base).cast("bigint").alias("rank"))
-    for _ in range(iterations):
-        contrib = ewd.join(ranks, ewd["src"] == ranks["node"]).select(
-            F.col("dst"), F.expr("rank div deg").alias("c")
-        )
-        sums = contrib.groupBy("dst").agg(F.sum("c").alias("m"))
-        ranks = (
-            nodes.join(sums, nodes["node"] == sums["dst"], "left")
-            .select(
-                "node",
-                (F.lit(teleport) + F.expr("(85 * coalesce(m, 0)) div 100"))
-                .cast("bigint")
-                .alias("rank"),
-            )
-            .localCheckpoint()
-        )
-    out = ranks.select(F.col("node").alias("entity"), F.col("rank").alias("rank_int"))
-    nodes.unpersist()
-    ewd.unpersist()
-    return out
-
-
-def triangle_counts(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
-    """Per-node triangle counts over the UNDIRECTED simple graph of
-    ``edges`` — ``(node, n_tri)`` for every node in ≥ 1 triangle.
-
-    KG-analytics extension of A3 (outgoing-arc aggregates): triangle
-    support is the standard local clustering / community signal over the
-    entity graph.
-
-    Scale design — the degree-ordered wedge join (compact-forward /
-    Cohen's MapReduce triangle counting; Suri & Vassilvitskii WWW'11):
-    each undirected edge is oriented from the (degree, node)-smaller
-    endpoint to the larger, making the orientation acyclic with
-    out-degree ≤ O(√m) on any graph — so the wedge join produces
-    Σ out-deg(v)² = O(m^1.5) rows instead of the Σ deg(v)² blow-up a
-    lexicographic orientation suffers on hub-heavy KGs (a celebrity node
-    with 10^6 followers would otherwise emit 10^12 wedges).  Three
-    shuffles total: degree agg, wedge join on the middle vertex, closing
-    semi-join on the (lo, hi) edge key.  Each triangle is produced
-    exactly once (acyclic orientation), then exploded to its 3 vertices
-    for the per-node count (map-side combine).
-
-    The per-node OUTPUT is orientation-invariant, so the DuckDB oracle
-    may use the simpler x<y<z lexicographic join — row-identical result.
-    """
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("x"),
-            F.greatest(F.col(src), F.col(dst)).alias("y"),
-        )
-        .filter(F.col("x") != F.col("y"))
-        .distinct()
-    )
-    deg = (
-        und.select(F.col("x").alias("node"))
-        .unionAll(und.select(F.col("y").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").cast("long").alias("deg"))
-    )
-    dx = deg.select(F.col("node").alias("x"), F.col("deg").alias("_dx"))
-    dy = deg.select(F.col("node").alias("y"), F.col("deg").alias("_dy"))
-    # orient by (degree, name): x<y lexicographically, so ties keep x first
-    o = (
-        und.join(dx, "x")
-        .join(dy, "y")
-        .select(
-            F.when(
-                (F.col("_dx") < F.col("_dy"))
-                | ((F.col("_dx") == F.col("_dy"))),
-                F.struct(F.col("x").alias("a"), F.col("y").alias("b")),
-            )
-            .otherwise(F.struct(F.col("y").alias("a"), F.col("x").alias("b")))
-            .alias("e")
-        )
-        .select("e.a", "e.b")
-    )
-    w1 = o.select(F.col("a").alias("u"), F.col("b").alias("v"))
-    w2 = o.select(F.col("a").alias("v2"), F.col("b").alias("w"))
-    wedges = w1.join(w2, w1["v"] == w2["v2"]).select("u", "v", "w")
-    # closing edge lookup on the CANONICAL (lo, hi) key — orientation of
-    # the closing edge is irrelevant to triangle existence
-    closing = und.select(F.col("x").alias("_cx"), F.col("y").alias("_cy"))
-    tri = wedges.join(
-        closing,
-        (F.least("u", "w") == F.col("_cx")) & (F.greatest("u", "w") == F.col("_cy")),
-        "leftsemi",
-    )
-    return (
-        tri.select(F.explode(F.array("u", "v", "w")).alias("node"))
-        .groupBy("node")
-        .agg(F.count("*").cast("long").alias("n_tri"))
     )

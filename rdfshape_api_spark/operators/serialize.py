@@ -67,13 +67,6 @@ def to_ntriples(df: DataFrame) -> DataFrame:
     )
 
 
-def write_ntriples(df: DataFrame, path: str, partitions: int | None = None) -> None:
-    out = to_ntriples(df)
-    if partitions:
-        out = out.repartition(partitions)
-    out.write.mode("overwrite").text(path)
-
-
 def to_json_graph(df: DataFrame) -> DataFrame:
     """K2 JSON adjacency export: one row per subject with its arcs."""
     return (

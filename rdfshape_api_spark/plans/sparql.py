@@ -35,7 +35,17 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F
 
-from rdfshape_api_spark.operators.algebra import transitive_closure
+from rdfshape_api_spark.plans.paths import (
+    PathAlt,
+    PathClosure,
+    PathInverse,
+    PathNeg,
+    PathNode,
+    PathPred,
+    PathSeq,
+    invert_path,
+    path_rows,
+)
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
@@ -66,15 +76,6 @@ def _tokenize(text: str) -> list[str]:
 
 
 @dataclass
-class _Path:
-    """Property-path AST node (SPARQL 1.1: iri, ^, /, |, +, *, ?)."""
-
-    op: str  # 'iri' | 'inv' | 'seq' | 'alt' | 'plus' | 'star' | 'opt'
-    iri: str | None = None
-    children: list = field(default_factory=list)
-
-
-@dataclass
 class _Pattern:
     subj: str  # '?var' or absolute IRI
     pred: str  # '?var' or absolute IRI
@@ -82,7 +83,7 @@ class _Pattern:
     obj_is_literal: bool = False
     obj_lang: str | None = None
     obj_datatype: str | None = None
-    path: "_Path | None" = None  # non-None → pred position is a path expr
+    path: PathNode | None = None  # non-None → pred position is a path expr
 
 
 @dataclass
@@ -662,12 +663,16 @@ def _parse_term(p: _Parser, prefixes: dict[str, str]) -> tuple[str, bool, str | 
     return _expand(t, prefixes), False, None, None
 
 
-def _parse_path(p: _Parser, prefixes: dict[str, str]) -> _Path:
+#: SPARQL path modifiers → (min_len, max_len) of a PathClosure
+_PATH_MODS = {"+": (1, None), "*": (0, None), "?": (0, 1)}
+
+
+def _parse_path(p: _Parser, prefixes: dict[str, str]) -> PathNode:
     """SPARQL 1.1 property-path subset: iri, 'a', ^inverse, /sequence,
     |alternative, +oneOrMore, *zeroOrMore, ?zeroOrOne, (grouping), and
     !negated property sets (§9.1: `!iri`, `!^iri`, `!(p1|^p2|…)` — forward
-    and inverse member exclusions translate to the NPS / ^NPS alternative
-    of the algebra)."""
+    and inverse member exclusions), parsed into the shared path IR
+    (plans/paths.py)."""
 
     def nps_member(fwd: list[str], inv: list[str]) -> None:
         # PathOneInPropertySet ::= iri | 'a' | '^' (iri | 'a')
@@ -680,8 +685,11 @@ def _parse_path(p: _Parser, prefixes: dict[str, str]) -> _Path:
             raise SparqlParseError("negated property set: expected IRI member")
         target.append(RDF_TYPE if tok == "a" else _expand(tok, prefixes))
 
-    def elt() -> _Path:
+    def elt() -> PathNode:
         t = p.peek()
+        if t == "^":
+            p.next()
+            return PathInverse(elt())
         if t == "!":
             p.next()
             fwd: list[str] = []
@@ -696,44 +704,32 @@ def _parse_path(p: _Parser, prefixes: dict[str, str]) -> _Path:
                     raise SparqlParseError("unclosed negated property set")
             else:
                 nps_member(fwd, inv)
-            node = _Path(
-                "neg",
-                children=[_Path("iri", iri=i) for i in fwd]
-                + [_Path("inv", children=[_Path("iri", iri=i)]) for i in inv],
-            )
-            mods = {"+": "plus", "*": "star", "?": "opt"}
-            while p.peek() in mods:
-                node = _Path(mods[p.next()], children=[node])
-            return node
-        if t == "^":
-            p.next()
-            return _Path("inv", children=[elt()])
-        if t == "(":
+            node = PathNeg(tuple(fwd), tuple(inv))
+        elif t == "(":
             p.next()
             node = alt()
             if p.next() != ")":
                 raise SparqlParseError("unclosed path group")
         else:
             tok = p.next()
-            node = _Path("iri", iri=RDF_TYPE if tok == "a" else _expand(tok, prefixes))
-        mods = {"+": "plus", "*": "star", "?": "opt"}
-        while p.peek() in mods:
-            node = _Path(mods[p.next()], children=[node])
+            node = PathPred(RDF_TYPE if tok == "a" else _expand(tok, prefixes))
+        while p.peek() in _PATH_MODS:
+            node = PathClosure(node, *_PATH_MODS[p.next()])
         return node
 
-    def seq() -> _Path:
+    def seq() -> PathNode:
         parts = [elt()]
         while p.peek() == "/":
             p.next()
             parts.append(elt())
-        return parts[0] if len(parts) == 1 else _Path("seq", children=parts)
+        return parts[0] if len(parts) == 1 else PathSeq(tuple(parts))
 
-    def alt() -> _Path:
+    def alt() -> PathNode:
         parts = [seq()]
         while p.peek() == "|":
             p.next()
             parts.append(seq())
-        return parts[0] if len(parts) == 1 else _Path("alt", children=parts)
+        return parts[0] if len(parts) == 1 else PathAlt(tuple(parts))
 
     return alt()
 
@@ -747,7 +743,7 @@ def _parse_triples_block(p: _Parser, prefixes: dict[str, str], into: list[_Patte
             pred, path = p.next(), None
         else:
             path = _parse_path(p, prefixes)
-            if path.op == "iri":
+            if isinstance(path, PathPred):
                 pred, path = path.iri, None  # plain predicate — old fast path
             else:
                 pred = ""
@@ -1113,132 +1109,93 @@ def _filter_expr(toks: list[str]) -> F.Column:
     return _compile_expr(toks)
 
 
-def _path_pairs(df: DataFrame, path: _Path) -> DataFrame:
-    """Compile a path AST to its solution pairs ``(s, o)`` over the merged
-    triples.  'plus' is the distinct-pairs transitive closure (SPARQL
-    arbitrary-length paths are set-semantics, algebra.transitive_closure);
-    at store scale the base pairs are predicate-pruned scans."""
-    # per-document mode (sh:sparql): the doc id rides along in the pair
-    # tables as `_g_doc` and every composition joins on it, so paths never
-    # cross document boundaries
-    g = "_g_doc" in df.columns
-    gsel = [F.col("_g_doc")] if g else []
-    if path.op == "iri":
-        return df.filter(F.col("pred") == path.iri).select(
-            *gsel, F.col("subj").alias("s"), F.col("obj_value").alias("o")
-        )
-    if path.op == "inv":
-        c = _path_pairs(df, path.children[0])
-        return c.select(*gsel, F.col("o").alias("s"), F.col("s").alias("o"))
-    if path.op == "neg":
-        # Negated property set (§9.1): children are the excluded members —
-        # 'iri' nodes exclude forward predicates, 'inv' nodes exclude
-        # inverse ones.  Each side appears in the result only if it has
-        # members (a pure-inverse set `!(^p)` has no forward branch); both
-        # sides present → alt(NPS(fwd), ^NPS(inv)).
-        fwd = [c.iri for c in path.children if c.op == "iri"]
-        inv = [c.children[0].iri for c in path.children if c.op == "inv"]
-        parts: list[DataFrame] = []
-        if fwd:
-            parts.append(
-                df.filter(~F.col("pred").isin(fwd)).select(
-                    *gsel, F.col("subj").alias("s"), F.col("obj_value").alias("o")
-                )
-            )
-        if inv:
-            parts.append(
-                df.filter(~F.col("pred").isin(inv)).select(
-                    *gsel, F.col("obj_value").alias("s"), F.col("subj").alias("o")
-                )
-            )
-        out = parts[0]
-        for q in parts[1:]:
-            out = out.unionByName(q)
-        return out
-    if path.op == "seq":
-        acc = _path_pairs(df, path.children[0])
-        for ch in path.children[1:]:
-            nxt = _path_pairs(df, ch).select(
-                *([F.col("_g_doc").alias("_g2")] if g else []),
-                F.col("s").alias("_m"),
-                F.col("o").alias("_o2"),
-            )
-            cond = acc["o"] == nxt["_m"]
-            if g:
-                cond = cond & (acc["_g_doc"] == nxt["_g2"])
-            acc = acc.join(nxt, cond).select(
-                *([acc["_g_doc"]] if g else []),
-                acc["s"].alias("s"),
-                F.col("_o2").alias("o"),
-            )
-        return acc
-    if path.op == "alt":
-        parts = [_path_pairs(df, ch) for ch in path.children]
-        out = parts[0]
-        for q in parts[1:]:
-            out = out.unionByName(q)
-        return out
-    if path.op == "plus":
-        return _plus_pairs(df, path.children[0])
-    if path.op in ("star", "opt"):
-        # zero-length path semantics (SPARQL 1.1 §18.4 ZeroLengthPath):
-        # every term of the graph — subjects AND objects, literals included
-        # — is connected to itself
-        terms = (
-            df.select(*gsel, F.col("subj").alias("t"))
-            .unionByName(df.select(*gsel, F.col("obj_value").alias("t")))
-            .distinct()
-        )
-        zero = terms.select(*gsel, F.col("t").alias("s"), F.col("t").alias("o"))
-        one_or_more = (
-            _plus_pairs(df, path.children[0])
-            if path.op == "star"
-            else _path_pairs(df, path.children[0])
-        )
-        return zero.unionByName(one_or_more).distinct()
-    raise SparqlParseError(f"unknown path op {path.op!r}")
+def _obj_match(obj: str, is_literal: bool, lang: str | None, dt: str | None) -> F.Column:
+    """A constant object term against the ``obj_*`` columns: value, kind,
+    and a literal's language tag or datatype."""
+    cond = F.col("obj_value") == obj
+    if not is_literal:
+        return cond & (F.col("obj_kind") != "literal")
+    cond = cond & (F.col("obj_kind") == "literal")
+    if lang:
+        return cond & (F.col("obj_lang") == lang)
+    if dt:
+        # numeric datatypes compare by value class in SPARQL; exact
+        # datatype match is what the fixture profile needs
+        return cond & (F.col("obj_datatype") == dt)
+    return cond
 
 
-def _plus_pairs(df: DataFrame, child: _Path) -> DataFrame:
-    """OneOrMore: the transitive closure of the child path's pairs."""
-    keys = ["_g_doc"] if "_g_doc" in df.columns else []
-    return transitive_closure(_path_pairs(df, child), "s", "o", keys)
-
-
-def _path_pattern_df(df: DataFrame, pat: _Pattern) -> tuple[DataFrame, list[str]]:
-    pairs = _path_pairs(df, pat.path)
-    out_cols: list[F.Column] = []
-    vars_: list[str] = []
-    cond = F.lit(True)
-    if "_g_doc" in df.columns:
-        # per-document scoping (sh:sparql): same pseudo-variable threading
-        # as _pattern_df, over the doc-scoped path pairs
-        vars_.append("_g_doc")
-        out_cols.append(F.col("_g_doc"))
-    if pat.subj.startswith("?"):
-        vars_.append(pat.subj[1:])
-        out_cols.append(F.col("s").alias(pat.subj[1:]))
-    else:
-        cond = cond & (F.col("s") == pat.subj)
-    if pat.obj.startswith("?"):
-        if pat.obj == pat.subj:
-            # same var both ends (?x p* ?x): constrain s == o, bind once
-            cond = cond & (F.col("o") == F.col("s"))
+def _bind_cols(
+    v: str, value: F.Column, kind: F.Column | None, with_meta: bool
+) -> list[F.Column]:
+    """Columns binding ``?v`` to ``value``, plus its term-metadata sidecars
+    in metadata-carrying mode: ``kind`` and no lang/datatype for a node,
+    or the ``obj_*`` columns when ``kind`` is None."""
+    cols = [value.alias(v)]
+    if with_meta:
+        kc, lc, dc = _meta_cols(v)
+        if kind is None:
+            cols += [
+                F.col("obj_kind").alias(kc),
+                F.col("obj_lang").alias(lc),
+                F.col("obj_datatype").alias(dc),
+            ]
         else:
-            vars_.append(pat.obj[1:])
-            out_cols.append(F.col("o").alias(pat.obj[1:]))
+            null = F.lit(None).cast("string")
+            cols += [kind.alias(kc), null.alias(lc), null.alias(dc)]
+    return cols
+
+
+def _const_seed(df: DataFrame, keys: list[str], term: str) -> DataFrame:
+    """A constant path end as the evaluator's seed: one row, or one row
+    per document graph under per-document scoping."""
+    if keys:
+        return df.select(*keys).distinct().withColumn("node", F.lit(term))
+    # a one-row range, not createDataFrame: its size is known to the
+    # planner, so the seed is broadcast and the hop's scan streams
+    return df.sparkSession.range(1, numPartitions=1).select(F.lit(term).alias("node"))
+
+
+def _path_pattern_df(
+    df: DataFrame, pat: _Pattern, with_meta: bool = False
+) -> tuple[DataFrame, list[str]]:
+    """A path pattern through the shared evaluator (plans/paths.py).  A
+    constant subject seeds the path; else a constant IRI object seeds the
+    inverted path; else the path runs unseeded.  A seeded zero-length path
+    reaches its constant even when the graph lacks it (§18.5)."""
+    # per-document scoping (sh:sparql, GRAPH): the doc id is the key every
+    # hop joins on, and rides along as a pseudo-variable (as in _pattern_df)
+    keys = ["_g_doc"] if "_g_doc" in df.columns else []
+    path, start = pat.path, pat.subj
+    end = (pat.obj, pat.obj_is_literal, pat.obj_lang, pat.obj_datatype)
+    if start.startswith("?") and not pat.obj.startswith("?") and not pat.obj_is_literal:
+        path, start, end = invert_path(path), pat.obj, (pat.subj, False, None, None)
+    seed = None if start.startswith("?") else _const_seed(df, keys, start)
+    rows = path_rows(df, path, keys, seed)
+    out_cols: list[F.Column] = [F.col(k) for k in keys]
+    vars_ = list(keys)
+    cond = F.lit(True)
+    if start.startswith("?"):
+        vars_.append(start[1:])
+        out_cols += _bind_cols(start[1:], F.col("node"), _term_kind(F.col("node")), with_meta)
+    if end[0] == start and start.startswith("?"):
+        # same var both ends (?x p* ?x): constrain node == value, bind once
+        cond = F.col("obj_value") == F.col("node")
+    elif end[0].startswith("?"):
+        vars_.append(end[0][1:])
+        out_cols += _bind_cols(end[0][1:], F.col("obj_value"), None, with_meta)
     else:
-        cond = cond & (F.col("o") == pat.obj)
+        cond = _obj_match(*end)
     if not vars_:
         out_cols.append(F.lit(1).alias("__exists"))
-    return pairs.filter(cond).select(*out_cols), vars_
+    return rows.filter(cond).select(*out_cols), vars_
 
 
 def _pattern_df(
     df: DataFrame, pat: _Pattern, with_meta: bool = False
 ) -> tuple[DataFrame, list[str]]:
     if pat.path is not None:
-        return _path_pattern_df(df, pat)
+        return _path_pattern_df(df, pat, with_meta=with_meta)
     out_cols: list[F.Column] = []
     vars_: list[str] = []
     cond = F.lit(True)
@@ -1250,50 +1207,19 @@ def _pattern_df(
         out_cols.append(F.col("_g_doc"))
     if pat.subj.startswith("?"):
         vars_.append(pat.subj[1:])
-        out_cols.append(F.col("subj").alias(pat.subj[1:]))
-        if with_meta:
-            kc, lc, dc = _meta_cols(pat.subj[1:])
-            out_cols += [
-                _term_kind(F.col("subj")).alias(kc),
-                F.lit(None).cast("string").alias(lc),
-                F.lit(None).cast("string").alias(dc),
-            ]
+        out_cols += _bind_cols(pat.subj[1:], F.col("subj"), _term_kind(F.col("subj")), with_meta)
     else:
         cond = cond & (F.col("subj") == pat.subj)
     if pat.pred.startswith("?"):
         vars_.append(pat.pred[1:])
-        out_cols.append(F.col("pred").alias(pat.pred[1:]))
-        if with_meta:
-            kc, lc, dc = _meta_cols(pat.pred[1:])
-            out_cols += [
-                F.lit("iri").alias(kc),
-                F.lit(None).cast("string").alias(lc),
-                F.lit(None).cast("string").alias(dc),
-            ]
+        out_cols += _bind_cols(pat.pred[1:], F.col("pred"), F.lit("iri"), with_meta)
     else:
         cond = cond & (F.col("pred") == pat.pred)
     if pat.obj.startswith("?"):
         vars_.append(pat.obj[1:])
-        out_cols.append(F.col("obj_value").alias(pat.obj[1:]))
-        if with_meta:
-            kc, lc, dc = _meta_cols(pat.obj[1:])
-            out_cols += [
-                F.col("obj_kind").alias(kc),
-                F.col("obj_lang").alias(lc),
-                F.col("obj_datatype").alias(dc),
-            ]
+        out_cols += _bind_cols(pat.obj[1:], F.col("obj_value"), None, with_meta)
     else:
-        cond = cond & (F.col("obj_value") == pat.obj)
-        if pat.obj_is_literal:
-            cond = cond & (F.col("obj_kind") == "literal")
-            if pat.obj_lang:
-                cond = cond & (F.col("obj_lang") == pat.obj_lang)
-            elif pat.obj_datatype:
-                # numeric datatypes compare by value class in SPARQL; exact
-                # datatype match is what the fixture profile needs
-                cond = cond & (F.col("obj_datatype") == pat.obj_datatype)
-        else:
-            cond = cond & (F.col("obj_kind") != "literal")
+        cond = cond & _obj_match(pat.obj, pat.obj_is_literal, pat.obj_lang, pat.obj_datatype)
     if not vars_:
         out_cols.append(F.lit(1).alias("__exists"))
     return df.filter(cond).select(*out_cols), vars_
@@ -1395,9 +1321,9 @@ def _wants_term_meta(q: SparqlQuery) -> bool:
 
 def _ensure_meta(df: DataFrame, toks: list[str]) -> DataFrame:
     """Null-fill sidecar metadata for LANG/DATATYPE arguments whose
-    variable was bound outside a metadata-carrying BGP scan (VALUES, BIND,
-    path pattern, subquery projection): kind falls back to the string
-    heuristic, lang/datatype stay unknown."""
+    variable was bound outside a metadata-carrying pattern scan (VALUES,
+    BIND, subquery projection): kind falls back to the string heuristic,
+    lang/datatype stay unknown."""
     for i, t in enumerate(toks):
         if (
             t.upper() in _META_FUNCS
@@ -1827,8 +1753,8 @@ def sparql_violators(triples: DataFrame, query_text: str) -> DataFrame:
     every document's graph at once; per-document scoping comes from
     threading the doc id through every BGP join as the ``_g_doc``
     pseudo-variable — the set-based equivalent of the spec's per-focus-node
-    evaluation, with no driver-side loop.  Property paths compute their
-    pair fixpoints per document (``_path_pairs`` joins on ``_g_doc``);
+    evaluation, with no driver-side loop.  Property paths run per
+    document (``path_rows`` keyed on ``_g_doc``);
     subqueries group implicitly by document (``_select_result``), so
     aggregates are scoped to one graph as the spec's per-focus evaluation
     requires — LIMIT/OFFSET inside a subquery stays rejected."""

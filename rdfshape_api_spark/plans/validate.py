@@ -780,11 +780,14 @@ def evaluate_shape(
 
     for i in sorted(path_indices):
         # non-trivial sh:path: value rows from the focus-seeded path
-        # reachability join (plans/paths.py), then the same m/t aggregation
-        from rdfshape_api_spark.plans.paths import path_value_rows
+        # evaluator (plans/paths.py), then the same m/t aggregation; value
+        # nodes are a set, the evaluator's bag rows are not
+        from rdfshape_api_spark.plans.paths import path_rows
 
         tc = flat_constraints[i]
-        rows = path_value_rows(full, tc.path, focus.select("doc_sha256", "node"))
+        rows = path_rows(
+            full, tc.path, ["doc_sha256"], focus.select("doc_sha256", "node")
+        ).distinct()
         rows = _attach_refs(rows, _ref_reqs(i, tc) + _sib_reqs(i, tc))
         p_grouped = rows.groupBy("doc_sha256", "node").agg(
             F.sum(

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from rdfshape_api_spark.model import RDF_TYPE, RDFS_DOMAIN, RDFS_SUBCLASSOF, RDFS_SUBPROPERTYOF
 from rdfshape_api_spark.operators import algebra
+from rdfshape_api_spark.plans.paths import PathClosure, PathInverse, PathPred, PathSeq, path_rows
 
 
 @pytest.fixture(scope="module")
@@ -71,28 +72,6 @@ def test_check_datatype_table(spark):
                    "http://e/c": False, "http://e/d": False}
 
 
-def test_graph_fingerprints(spark):
-    # d1 and d2 are identical up to bnode identity (skolem IRIs differ);
-    # d3 differs in a literal — d1/d2 share a fingerprint, d3 does not
-    rows = [
-        ("d1", "http://e/s", "http://e/p", "bnode", "urn:skolem:aaa", None, None),
-        ("d1", "http://e/s", "http://e/q", "literal", "x", None, None),
-        ("d2", "http://e/s", "http://e/p", "bnode", "urn:skolem:bbb", None, None),
-        ("d2", "http://e/s", "http://e/q", "literal", "x", None, None),
-        ("d3", "http://e/s", "http://e/p", "bnode", "urn:skolem:ccc", None, None),
-        ("d3", "http://e/s", "http://e/q", "literal", "y", None, None),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "doc_sha256 string, subj string, pred string, obj_kind string, "
-        "obj_value string, obj_lang string, obj_datatype string",
-    )
-    out = algebra.graph_fingerprints(df).collect()
-    assert len(out) == 2
-    by_rep = {r["rep_doc"]: r["n_docs"] for r in out}
-    assert by_rep == {"d1": 2, "d3": 1}
-
-
 def test_subclass_closure_and_instances(g):
     assert algebra.subclass_closure(g, "http://e/Top") == [
         "http://e/Mid",
@@ -130,18 +109,23 @@ def test_subclass_closure_deep_hierarchy_one_job(spark, tmp_path):
     assert len(jobs) == 1
 
 
+def _pairs(rows):
+    return {(r["node"], r["obj_value"]) for r in rows.collect()}
+
+
 def test_property_paths(g):
-    direct = algebra.path_direct(g, "http://e/p")
+    p = PathPred("http://e/p")
+    direct = path_rows(g, p, ["doc_sha256"])
     assert direct.count() == 2
-    inv = algebra.path_inverse(direct)
-    assert {(r["src"], r["dst"]) for r in inv.collect()} == {
+    inv = path_rows(g, PathInverse(p), ["doc_sha256"])
+    assert _pairs(inv) == {
         ("http://e/b", "http://e/a"),
         ("http://e/c", "http://e/b"),
     }
-    seq = algebra.path_sequence(direct, direct)
-    assert {(r["src"], r["dst"]) for r in seq.collect()} == {("http://e/a", "http://e/c")}
-    star = algebra.path_zero_or_more(direct)
-    assert {(r["src"], r["dst"]) for r in star.collect()} == {
+    seq = path_rows(g, PathSeq((p, p)), ["doc_sha256"])
+    assert _pairs(seq) == {("http://e/a", "http://e/c")}
+    plus = path_rows(g, PathClosure(p, 1, None), ["doc_sha256"])
+    assert _pairs(plus) == {
         ("http://e/a", "http://e/b"),
         ("http://e/b", "http://e/c"),
         ("http://e/a", "http://e/c"),
@@ -150,11 +134,12 @@ def test_property_paths(g):
 
 def test_path_zero_or_more_deep_chain(spark):
     """A 12-edge chain needs 11 join rounds; every pair is reached."""
-    pairs = spark.createDataFrame(
-        [("d1", f"v{i:02d}", f"v{i + 1:02d}") for i in range(12)],
-        "doc_sha256 string, src string, dst string",
+    g = spark.createDataFrame(
+        [("d1", f"v{i:02d}", "p", "iri", f"v{i + 1:02d}", None, None) for i in range(12)],
+        "doc_sha256 string, subj string, pred string, obj_kind string, "
+        "obj_value string, obj_lang string, obj_datatype string",
     )
-    got = {(r["src"], r["dst"]) for r in algebra.path_zero_or_more(pairs).collect()}
+    got = _pairs(path_rows(g, PathClosure(PathPred("p"), 1, None), ["doc_sha256"]))
     assert got == {(f"v{i:02d}", f"v{j:02d}") for i in range(13) for j in range(i + 1, 13)}
 
 
@@ -269,76 +254,3 @@ def test_dot_escaping(spark):
     assert 'label="say \\"hi\\"\\nnow\\\\"' in lit
 
 
-def test_pagerank_matches_reference_implementation(spark):
-    """Integerized PageRank equals a driver-side pure-Python evaluation of
-    the same fixed-point recurrence on a deterministic pseudo-random graph,
-    and ranks hubs above leaves."""
-    import hashlib
-
-    from rdfshape_api_spark.operators.algebra import pagerank
-
-    # deterministic scale-free-ish digraph: node i links to md5-derived targets
-    n_nodes, rows = 40, []
-    for i in range(n_nodes):
-        for j in range(1 + i % 3):
-            h = int(hashlib.md5(f"{i}|{j}".encode()).hexdigest(), 16)
-            tgt = h % n_nodes
-            if tgt != i:
-                rows.append(("d1", f"http://e/n{i}", "http://e/p", "iri", f"http://e/n{tgt}", None, None))
-    # every node also links to the hub
-    rows += [("d1", f"http://e/n{i}", "http://e/p", "iri", "http://e/hub", None, None) for i in range(n_nodes)]
-    g = spark.createDataFrame(
-        rows,
-        "doc_sha256 string, subj string, pred string, obj_kind string, "
-        "obj_value string, obj_lang string, obj_datatype string",
-    )
-    got = {r["entity"]: r["rank_int"] for r in pagerank(g, iterations=10).collect()}
-
-    # pure-Python reference of the identical integer recurrence
-    edges = sorted({(s, o) for _, s, _, _, o, _, _ in rows})
-    nodes = sorted({x for e in edges for x in e})
-    deg: dict[str, int] = {}
-    for s, _ in edges:
-        deg[s] = deg.get(s, 0) + 1
-    scale, n = 1_000_000, len(nodes)
-    base = scale // n
-    teleport = (15 * base) // 100
-    rank = {v: base for v in nodes}
-    for _ in range(10):
-        sums = {v: 0 for v in nodes}
-        for s, o in edges:
-            sums[o] += rank[s] // deg[s]
-        rank = {v: teleport + (85 * sums[v]) // 100 for v in nodes}
-    assert got == rank
-    assert got["http://e/hub"] == max(got.values())
-    assert got["http://e/hub"] > 10 * min(got.values())
-
-
-def test_triangle_counts_k4_and_edge_cases(spark):
-    from pyspark.sql import functions as F
-
-    from rdfshape_api_spark.operators.algebra import triangle_counts
-
-    edges = spark.createDataFrame(
-        [
-            ("a", "b"), ("a", "c"), ("a", "d"), ("b", "c"), ("b", "d"),
-            ("c", "d"),          # K4: 4 triangles, each vertex in 3
-            ("d", "d"),          # self-loop dropped
-            ("b", "a"),          # reverse duplicate collapses
-            ("e", "f"),          # isolated edge -> no output rows
-        ],
-        "src string, dst string",
-    )
-    got = {r.node: r.n_tri for r in triangle_counts(edges).collect()}
-    assert got == {"a": 3, "b": 3, "c": 3, "d": 3}
-
-
-def test_triangle_counts_hub_star_no_triangles(spark):
-    from rdfshape_api_spark.operators.algebra import triangle_counts
-
-    # a pure hub star has zero triangles; the degree orientation keeps the
-    # wedge join tiny (all edges point INTO the hub -> hub out-degree 0)
-    edges = spark.createDataFrame(
-        [("hub", f"n{i}") for i in range(20)], "src string, dst string"
-    )
-    assert triangle_counts(edges).count() == 0

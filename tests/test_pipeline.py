@@ -70,6 +70,21 @@ def test_entry_contract(spark):
         assert any(k.startswith(prefix) for k in qs), prefix
 
 
+def test_check_contract_rejects_unknown_entry():
+    """A named entry that queries() does not define fails the contract
+    check before Spark starts, instead of passing with nothing checked."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    res = subprocess.run(
+        [sys.executable, "tools/check_contract.py", "unused_dir", "no_such_entry"],
+        cwd=root, capture_output=True, text=True, timeout=120,
+    )
+    assert res.returncode == 1
+    assert "unknown entries: no_such_entry" in res.stdout
+
+
 def test_pipeline_links_sameas_entities(spark, tmp_path):
     """A corpus carrying owl:sameAs triples gets entity-linked before the
     store write: aliased subjects collapse onto the canonical IRI."""

@@ -193,11 +193,11 @@ def test_zero_or_more_path(spark):
 
 def test_zero_or_more_path_deep_chain(spark):
     """sh:zeroOrMorePath over a 12-edge chain reaches every node."""
-    from rdfshape_api_spark.plans.paths import PathClosure, PathPred, path_value_rows
+    from rdfshape_api_spark.plans.paths import PathClosure, PathPred, path_rows
 
     tri = _tri(spark, [(f"v{i:02d}", "part", "iri", f"v{i + 1:02d}", None) for i in range(12)])
     focus = spark.createDataFrame([("d1", EX + "v00")], "doc_sha256 string, node string")
-    rows = path_value_rows(tri, PathClosure(PathPred(EX + "part"), 0, None), focus)
+    rows = path_rows(tri, PathClosure(PathPred(EX + "part"), 0, None), ["doc_sha256"], focus)
     assert {r["obj_value"] for r in rows.collect()} == {EX + f"v{i:02d}" for i in range(13)}
 
 

@@ -471,6 +471,73 @@ def test_path_star_with_literal_terms(spark):
     assert vals == {EX + "a", EX + "b", "Alice"}
 
 
+def _zero_length_graph(spark):
+    return _mk_tri(spark, [
+        (EX + "a", EX + "p", "iri", EX + "b", None, None),
+        (EX + "b", EX + "p", "iri", EX + "c", None, None),
+        (EX + "a", EX + "q", "iri", EX + "b", None, None),
+    ])
+
+
+@pytest.mark.parametrize("mod", ["*", "?"])
+def test_path_zero_length_constant_subject_not_in_graph(spark, mod):
+    """§18.5: a zero-length path from a constant reaches the constant,
+    whether or not the graph holds it."""
+    tri = _zero_length_graph(spark)
+    out = sparql_select(tri, PREFIX + f"SELECT ?y WHERE {{ ex:missing ex:p{mod} ?y . }}")
+    assert [r["y"] for r in out.collect()] == [EX + "missing"]
+
+
+def test_path_zero_length_constant_object_not_in_graph(spark):
+    tri = _zero_length_graph(spark)
+    out = sparql_select(tri, PREFIX + "SELECT ?x WHERE { ?x ex:p* ex:missing . }")
+    assert [r["x"] for r in out.collect()] == [EX + "missing"]
+
+
+def test_path_zero_length_both_constants_not_in_graph(spark):
+    tri = _zero_length_graph(spark)
+    out = sparql_select(tri, PREFIX + "SELECT * WHERE { ex:missing ex:p* ex:missing . }")
+    assert out.count() == 1  # one empty solution
+
+
+XSD_INT = "http://www.w3.org/2001/XMLSchema#integer"
+
+
+def _meta_graph(spark):
+    return _mk_tri(spark, [
+        (EX + "x", EX + "p", "iri", EX + "m", None, None),
+        (EX + "m", EX + "q", "literal", "cat", "en", None),
+        (EX + "m", EX + "q", "literal", "chat", "fr", None),
+        (EX + "m", EX + "q", "literal", "1", None, XSD_INT),
+    ])
+
+
+@pytest.mark.parametrize("path", ["ex:p/ex:q", "(ex:p/ex:q|ex:r)", "(ex:p|ex:q)+"])
+def test_path_values_keep_term_metadata(spark, path):
+    """LANG/DATATYPE see the final hop's literal metadata of a path
+    binding, as they do for a plain pattern."""
+    tri = _meta_graph(spark)
+    lang = sparql_select(
+        tri, PREFIX + f'SELECT ?o WHERE {{ ex:x {path} ?o FILTER(LANG(?o) = "en") }}'
+    )
+    assert [r["o"] for r in lang.collect()] == ["cat"]
+    dt = sparql_select(
+        tri, PREFIX + f"SELECT ?o WHERE {{ ex:x {path} ?o FILTER(DATATYPE(?o) = <{XSD_INT}>) }}"
+    )
+    assert [r["o"] for r in dt.collect()] == ["1"]
+
+
+def test_path_constant_literal_object_matches_term(spark):
+    """A constant literal at a path's end matches value AND language tag."""
+    from rdfshape_api_spark.plans.sparql import sparql_ask
+
+    tri = _meta_graph(spark)
+    assert sparql_ask(tri, PREFIX + 'ASK { ex:x ex:p/ex:q "cat"@en . }') is True
+    assert sparql_ask(tri, PREFIX + 'ASK { ex:x ex:p/ex:q "cat"@fr . }') is False
+    out = sparql_select(tri, PREFIX + 'SELECT ?s WHERE { ?s ex:p/ex:q "cat"@fr . }')
+    assert out.count() == 0
+
+
 def test_values_joins_unbound_solution_var(spark):
     """A null binding on the solution side (padded UNION branch) is
     compatible with any VALUES row; the merged binding is the bound one."""

@@ -4,6 +4,9 @@ DuckDB, compare row count + order-insensitive value hash (columns sorted
 by name, every value stringified).
 
 Usage: python tools/check_contract.py [sf_dir] [only_query ...]
+
+An ``only_query`` name that ``queries()`` does not define fails the run
+before Spark starts.
 """
 
 from __future__ import annotations
@@ -50,11 +53,14 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from rdfshape_api_spark.session import get_spark
 
-    spark = get_spark()
-
-    con = duckdb.connect()
-
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        print("unknown entries:", " ".join(unknown))
+        return 1
+
+    spark = get_spark()
+    con = duckdb.connect()
     failures = 0
     for name, fn in qs.items():
         if only and name not in only:
