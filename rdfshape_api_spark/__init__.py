@@ -5,8 +5,8 @@ Re-expresses the query / data-processing capabilities of weso/rdfshape-api
 pipeline over an Iceberg-style table of source documents
 ``(repo, path, commit, lang, content)``:
 
-* triple extraction (Turtle / N-Triples / JSON-LD) — N-Triples on a pure
-  columnar fast path, Turtle/JSON-LD through Arrow-batched ``mapInPandas``;
+* triple extraction (Turtle / N-Triples / JSON-LD) — one parser per format,
+  every document through one Arrow-batched ``mapInPandas`` stage;
 * ShEx / SHACL conformance compiled to DataFrame predicates (no per-row
   Python in the validation hot path);
 * IRI canonicalization, deterministic blank-node skolemization, skew-aware

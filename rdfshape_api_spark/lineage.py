@@ -38,12 +38,15 @@ def sha_invariant_violations(docs: DataFrame) -> DataFrame:
 
 def extraction_lineage(docs: DataFrame, raw_triples: DataFrame) -> DataFrame:
     """Per-repo lineage for the extraction stage: input docs, output
-    triples, error docs, sha violations."""
+    triples, error docs, sha violations.  ``docs`` are the prepared docs
+    (``extract.with_doc_sha``), whose ``doc_sha256`` is the hash of
+    ``content``; a violation is a row whose recorded ``content_sha256``
+    differs from it, so the content is hashed once per run."""
     d = docs.groupBy("repo").agg(
         F.count("*").alias("input_docs"),
-        F.sum(
-            F.when(F.sha2(F.col("content"), 256) != F.col("content_sha256"), 1).otherwise(0)
-        ).alias("sha_violations")
+        F.sum(F.when(F.col("doc_sha256") != F.col("content_sha256"), 1).otherwise(0)).alias(
+            "sha_violations"
+        )
         if "content_sha256" in docs.columns
         else F.lit(0).alias("sha_violations"),
     )

@@ -122,13 +122,11 @@ def run_pipeline(
             if os.path.exists(marker):
                 os.remove(marker)
             # Materialize the prepared docs (sha + range-shuffle) ONCE as an
-            # explicit ingest stage boundary: the NT-columnar and Python
-            # format branches of every bucket consume it, and without this
-            # the per-branch lang filters get pushed below the exchange so
-            # Catalyst cannot reuse it — scan+sha256+range-sampling would
-            # run once per branch (observed 2×+ extract wall at sf0.1).
-            # DISK_ONLY ≈ a shuffle-file materialization, the same cost
-            # model as a staging table on a real cluster.
+            # explicit ingest stage boundary: every bucket job and the
+            # extraction lineage consume it, so the scan, the sha256 and the
+            # range sampling run once, not once per consumer.  DISK_ONLY ≈ a
+            # shuffle-file materialization, the same cost model as a
+            # staging table on a real cluster.
             prepared = with_doc_sha(docs)
             if repartition_by_repo:
                 prepared = prepared.repartitionByRange(

@@ -46,6 +46,7 @@ from rdfshape_api_spark.plans.paths import (
     invert_path,
     path_rows,
 )
+from rdfshape_api_spark.sources.parsers import unescape
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
@@ -176,15 +177,19 @@ def _expand(tok: str, prefixes: dict[str, str]) -> str:
 
 
 def _unquote(tok: str) -> str:
-    body = tok[1:-1]
-    return (
-        body.replace("\\\\", "\x00")
-        .replace('\\"', '"')
-        .replace("\\n", "\n")
-        .replace("\\t", "\t")
-        .replace("\\r", "\r")
-        .replace("\x00", "\\")
-    )
+    """String token → its value, escapes decoded as in N-Triples/Turtle."""
+    try:
+        return unescape(tok[1:-1])
+    except ValueError as e:
+        raise SparqlParseError(f"bad string literal {tok}: {e}") from None
+
+
+def _expr_token(tok: str, prefixes: dict[str, str]) -> str:
+    """An expression token, with a prefixed name expanded to ``<iri>`` (an
+    undeclared prefix raises, as in a triple pattern)."""
+    if ":" in tok and not tok.startswith(("<", '"')):
+        return f"<{_expand(tok, prefixes)}>"
+    return tok
 
 
 class _Parser:
@@ -368,32 +373,20 @@ def _parse_modifiers(p: _Parser, prefixes: dict[str, str], q: SparqlQuery) -> No
                 or p.peek().upper() in ("ASC", "DESC")
                 or p.peek() == "("
             ):
-                t = p.next()
                 desc = False
-                if t.upper() in ("ASC", "DESC") or t == "(":
+                if p.peek().upper() in ("ASC", "DESC") or p.peek() == "(":
                     # ASC(expr) / DESC(expr) / bare (expr): capture the
                     # balanced token run, compiled by _compile_expr at
                     # sort time (numeric when arithmetic is involved)
-                    if t != "(":
-                        desc = t.upper() == "DESC"
-                        p.expect("(")
-                    toks: list[str] = []
-                    depth = 1
-                    while depth:
-                        tk = p.next()
-                        if tk == "(":
-                            depth += 1
-                        elif tk == ")":
-                            depth -= 1
-                            if depth == 0:
-                                break
-                        toks.append(tk)
+                    if p.peek() != "(":
+                        desc = p.next().upper() == "DESC"
+                    toks = _parse_filter_tokens(p, prefixes)
                     if len(toks) == 1 and toks[0].startswith("?"):
                         q.order_by.append((toks[0][1:], desc))
                     else:
                         q.order_by.append((toks, desc))
                 else:
-                    q.order_by.append((t[1:], desc))
+                    q.order_by.append((p.next()[1:], desc))
         elif kw == "LIMIT":
             q.limit = int(p.next())
         elif kw == "OFFSET":
@@ -585,7 +578,7 @@ def _parse_bind(p: _Parser, prefixes: dict[str, str]) -> tuple[list[str], str]:
                 raise SparqlParseError("BIND missing AS ?var")
         elif t.upper() == "AS" and depth == 1:
             break
-        toks.append(t)
+        toks.append(_expr_token(t, prefixes))
     alias = p.next()
     if not alias.startswith("?"):
         raise SparqlParseError("BIND alias must be a ?var")
@@ -766,6 +759,7 @@ def _parse_triples_block(p: _Parser, prefixes: dict[str, str], into: list[_Patte
 
 
 def _parse_filter_tokens(p: _Parser, prefixes: dict[str, str]) -> list[str]:
+    """``( expr )`` → the expression's tokens, prefixed names expanded."""
     p.expect("(")
     depth = 1
     toks: list[str] = []
@@ -777,7 +771,7 @@ def _parse_filter_tokens(p: _Parser, prefixes: dict[str, str]) -> list[str]:
             depth -= 1
             if depth == 0:
                 break
-        toks.append(t)
+        toks.append(_expr_token(t, prefixes))
     return toks
 
 
@@ -1022,8 +1016,8 @@ def _compile_expr(toks: list[str]) -> F.Column:
             return F.lit(t[1:-1]), False
         if _NUM_RE.match(t):
             return F.lit(float(t) if ("." in t or "e" in t.lower()) else int(t)), True
-        # bare token (e.g. unexpanded prefixed name): string literal,
-        # matching the pre-unification FILTER operand behavior
+        # any other bare token (prefixed names arrive expanded to <iri>):
+        # its string form
         return F.lit(t), False
 
     def multiplicative() -> tuple[F.Column, bool]:

@@ -30,6 +30,8 @@ array functions, not UDFs.
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 from pyspark.sql import Column, DataFrame, functions as F
 
 from rdfshape_api_spark.model import (
@@ -1015,6 +1017,30 @@ def evaluate_shape(
     )
 
 
+def _shapemap_assocs(
+    schema: CompiledSchema, shapemap: str | list[Association]
+) -> list[Association]:
+    """The shapemap's associations against ``schema``: ``@start`` resolves
+    to the schema's start shape, and a shape the schema does not declare
+    raises ``ValueError``."""
+    assocs = (
+        parse_shapemap(shapemap, schema.prefixes) if isinstance(shapemap, str) else shapemap
+    )
+    out = []
+    for a in assocs:
+        shape = a.shape
+        if shape == "@start":
+            if schema.start is None:
+                raise ValueError(
+                    "shapemap references @start but the schema declares no start shape"
+                )
+            shape = schema.start
+        if shape not in schema.shapes:
+            raise ValueError(f"shapemap names shape {shape!r}, which the schema does not declare")
+        out.append(replace(a, shape=shape))
+    return out
+
+
 def validate_batch(
     triples: DataFrame,
     jobs: list[tuple[CompiledSchema, "str | list[Association] | None", str]],
@@ -1090,11 +1116,7 @@ def validate_batch(
             continue
         sid, shape = next(iter(schema.shapes.items()))
         if shapemap is not None:
-            assocs = (
-                parse_shapemap(shapemap, schema.prefixes)
-                if isinstance(shapemap, str)
-                else shapemap
-            )
+            assocs = _shapemap_assocs(schema, shapemap)
             focus = resolve_focus(focus_src, assocs).select("doc_sha256", "node")
         else:
             focus = resolve_targets(focus_src, shape)
@@ -1242,16 +1264,7 @@ def validate(
     """
     focus_src = focus_triples if focus_triples is not None else triples
     if shapemap is not None:
-        assocs = (
-            parse_shapemap(shapemap, schema.prefixes) if isinstance(shapemap, str) else shapemap
-        )
-        for a in assocs:
-            if a.shape == "@start":
-                if schema.start is None:
-                    raise ValueError(
-                        "shapemap references @start but the schema declares no start shape"
-                    )
-                a.shape = schema.start
+        assocs = _shapemap_assocs(schema, shapemap)
         work = [(s, None) for s in dict.fromkeys(a.shape for a in assocs)]
         focus_all = resolve_focus(focus_src, assocs)
     else:

@@ -1,10 +1,9 @@
 """Pure-Python RDF parsers: N-Triples, Turtle (subset), JSON-LD (subset).
 
 These run **batch-wise inside Arrow UDFs** (``mapInPandas``), never as
-per-row Spark UDFs — per the input_hint "no per-row Python".  The N-Triples
-format additionally has a fully columnar Spark-SQL fast path in
-``extract.py``; the Python N-Triples parser here is the reference
-implementation used for tests and for the Turtle parser's literal handling.
+per-row Spark UDFs — per the input_hint "no per-row Python".  They are the
+only parsers: ``extract.py`` sends every document, N-Triples included,
+through :func:`parse_document`, one parser per format.
 
 Semantics matched to the reference's parse surface (SURVEY §2.1 S1):
 ``RDFAsJenaModel.fromChars(input, format, base)`` — reference call site
@@ -78,7 +77,7 @@ def unescape(s: str) -> str:
 # --------------------------------------------------------------------------
 
 _NT_LINE = re.compile(
-    r"^(<[^>]*>|_:[^\s]+)\s+(<[^>]*>)\s+(.+?)\s*\.\s*$"
+    r"^(<[^>]*>|_:[^\s]+)\s+(<[^<>\s]*>)\s+(.+?)\s*\.\s*$"
 )
 _NT_LITERAL = re.compile(
     r'^"((?:[^"\\]|\\.)*)"(?:@([A-Za-z][A-Za-z0-9-]*)|\^\^<([^>]*)>)?$'

@@ -50,17 +50,50 @@ def test_prefix_tables(spark, fixtures_001):
     assert pm["xsd"] == "http://www.w3.org/2001/XMLSchema#"
 
 
-def test_nt_fast_path_is_columnar(spark):
-    """The N-Triples path must stay pure Spark SQL (no Python stage):
-    its physical plan contains no ArrowEvalPython/MapInPandas nodes and
-    the scan prunes to the used columns."""
-    from rdfshape_api_spark.sources.extract import extract_ntriples_columnar, with_doc_sha
+# N-Triples documents; raw strings, so every backslash is in the document
+_PARITY_DOCS = {
+    "unicode": r'<http://e/s> <http://e/p> "caf\u00e9 \U0001F600" .',
+    "quotes": r"""<http://e/s> <http://e/p> "\'q\' \"d\"" .""",
+    "escaped_backslash": r'<http://e/s> <http://e/p> "a\\nb" .',
+    "lang": '# comment\n\n<http://e/s> <http://e/p> "hi"@EN-GB .\n_:b <http://e/q> _:c .\n',
+    "space_in_subject": '<http://e/s x> <http://e/p> "x" .',
+    "space_in_predicate": '<http://e/s> <http://e/p x> "x" .',
+    "space_in_object": "<http://e/s> <http://e/p> <http://e/o x> .",
+}
 
-    docs = with_doc_sha(
-        spark.createDataFrame(
-            [("r", "p", "c", "ntriples", "<http://e/s> <http://e/p> <http://e/o> .")],
-            "repo string, path string, commit string, lang string, content string",
-        )
+
+def test_ntriples_and_turtle_labels_give_the_same_rows(spark):
+    """One parser per format: the same N-Triples bytes give the same
+    triples, or one error row, whether labelled ``ntriples`` or
+    ``turtle``."""
+    from rdfshape_api_spark.sources.extract import extract_triples_raw
+
+    docs = spark.createDataFrame(
+        [
+            ("r", name, "c", lang, content)
+            for name, content in _PARITY_DOCS.items()
+            for lang in ("ntriples", "turtle")
+        ],
+        "repo string, path string, commit string, lang string, content string",
     )
-    plan = extract_ntriples_columnar(docs)._jdf.queryExecution().executedPlan().toString()
-    assert "Python" not in plan and "InPandas" not in plan
+    rows: dict[str, list] = {"ntriples": [], "turtle": []}
+    # the raw rows keep `commit`, so it carries the label through
+    for r in extract_triples_raw(docs.withColumn("commit", F.col("lang"))).collect():
+        # the error text names the parser; the rest of the row must match
+        rows[r["commit"]].append(
+            (r["path"], r["subj"], r["pred"], r["obj_kind"], r["obj_value"],
+             r["obj_lang"], r["obj_datatype"], r["error"] is not None)
+        )
+    nt, ttl = sorted(rows["ntriples"], key=str), sorted(rows["turtle"], key=str)
+    assert nt == ttl
+    lit = lambda doc, v, lang=None: (  # noqa: E731
+        doc, "http://e/s", "http://e/p", "literal", v, lang, None, False
+    )
+    assert lit("unicode", "café \U0001F600") in nt
+    assert lit("quotes", "'q' \"d\"") in nt
+    assert lit("escaped_backslash", "a\\nb") in nt
+    assert lit("lang", "hi", "en-gb") in nt
+    assert ("lang", "_:b", "http://e/q", "bnode", "_:c", None, None, False) in nt
+    for doc in ("space_in_subject", "space_in_predicate", "space_in_object"):
+        assert [r for r in nt if r[0] == doc] == [(doc, *[None] * 6, True)]
+    assert len(nt) == 8

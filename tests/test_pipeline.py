@@ -143,3 +143,48 @@ def test_pipeline_full_lineage_tables(spark, fixtures_001, tmp_path):
     assert roll.agg(F.sum("n_nodes")).first()[0] == verd.count()
     assert set(r["shape_id"] for r in roll.select("shape_id").distinct().collect()) == \
         set(r["shape_id"] for r in verd.select("shape_id").distinct().collect())
+
+
+def test_lineage_counts_a_tampered_content_sha(spark, tmp_path):
+    """The extraction lineage counts a row whose recorded content_sha256
+    differs from the hash of its content."""
+    import hashlib
+
+    rows = [
+        ("r1", f"d{i}.nt", "c1", "ntriples", f"<http://e/s{i}> <http://e/p> \"{i}\" .\n")
+        for i in range(3)
+    ]
+    docs = spark.createDataFrame(
+        [
+            (*r, hashlib.sha256(r[4].encode()).hexdigest() if i else "0" * 64)
+            for i, r in enumerate(rows)
+        ],
+        "repo string, path string, commit string, lang string, content string, "
+        "content_sha256 string",
+    )
+    m = run_pipeline(spark, docs, str(tmp_path / "out"))
+    assert m["docs"] == 3 and m["triples"] == 3
+    assert m["sha_violations"] == 1
+
+
+def test_extraction_stage_job_count(spark, fixtures_001, tmp_path):
+    """Stage 1 of run_pipeline runs 6 Spark jobs: one bucket write (every
+    format through one parse stage), 4 for the lineage (its two aggregations,
+    their join and the write) and one for the error channel."""
+    import shutil
+
+    docs = spark.read.parquet(fixtures_001["docs"])
+    out = str(tmp_path / "jobs")
+    run_pipeline(spark, docs, out, resume=False)
+    # with the store and no schemas in place, a resumed call redoes stage 1 only
+    shutil.rmtree(os.path.join(out, "raw_triples"))
+    sc = spark.sparkContext
+    group = "test_extraction_stage_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        m = run_pipeline(spark, docs, out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert "extract_wall_s" in m and "canonicalize_wall_s" not in m
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 6

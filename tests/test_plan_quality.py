@@ -62,16 +62,14 @@ def test_column_projection_prunes_read_schema(spark, store):
     assert rs == "struct<subj:string,pred:string,obj_value:string>"
 
 
-def test_extraction_fast_path_is_whole_stage_codegen(spark, fixtures_001):
-    from rdfshape_api_spark.sources.extract import extract_ntriples_columnar, with_doc_sha
+def test_extraction_is_one_python_stage(spark, fixtures_001):
+    """Every format goes through the same parse: one MapInPandas node and
+    no Union of per-format branches."""
+    from rdfshape_api_spark.sources.extract import extract_triples_raw
 
-    docs = with_doc_sha(spark.read.parquet(fixtures_001["docs"]))
-    nt = extract_ntriples_columnar(docs.filter(F.lower("lang") == "ntriples"))
-    plan = _plan(nt)
-    # `*(n)` prefixes in executedPlan.toString mark WholeStageCodegen stages
-    assert "*(" in plan
-    # zero Python stages on the fast path
-    assert "MapInPandas" not in plan and "BatchEvalPython" not in plan
+    plan = _plan(extract_triples_raw(spark.read.parquet(fixtures_001["docs"])))
+    assert plan.count("MapInPandas") == 1
+    assert "Union" not in plan
 
 
 def test_validation_plan_has_no_python_stages(spark, store):

@@ -1224,3 +1224,42 @@ def test_graph_empty_group_enumerates_graphs(spark):
     from rdfshape_api_spark.plans.sparql import SparqlParseError
     with _pytest.raises(SparqlParseError, match="no bindings"):
         sparql_select(tri, "SELECT ?s WHERE { ?s ?p ?o . GRAPH <urn:doc:d1> { } }").collect()
+
+
+def test_string_escapes_decode_like_ntriples(spark):
+    """A query literal decodes \\u, \\U and \\' as N-Triples and Turtle do,
+    so it matches the stored value."""
+    tri = _mk_tri(spark, [
+        (EX + "a", EX + "name", "literal", "café", None, None),
+        (EX + "b", EX + "name", "literal", "it's", None, None),
+    ])
+    q = PREFIX + r'SELECT ?s WHERE { ?s ex:name ?o FILTER(?o = "caf\u00e9") }'
+    assert [r["s"] for r in sparql_select(tri, q).collect()] == [EX + "a"]
+    q = PREFIX + r"""SELECT ?s WHERE { ?s ex:name "it\'s" }"""
+    assert [r["s"] for r in sparql_select(tri, q).collect()] == [EX + "b"]
+    with pytest.raises(SparqlParseError, match="bad escape"):
+        parse_sparql(PREFIX + r'SELECT ?s WHERE { ?s ex:name "a\qb" }')
+
+
+def test_filter_and_bind_expand_prefixed_names(spark):
+    """A prefixed name inside FILTER or BIND is the IRI it names."""
+    tri = _meta_graph(spark)
+    rows = lambda q: sorted(tuple(r) for r in sparql_select(tri, PREFIX + q).collect())  # noqa: E731
+    pname = rows("SELECT ?o WHERE { ?m ex:q ?o FILTER(DATATYPE(?o) = xsd:integer) }")
+    iri = rows(f"SELECT ?o WHERE {{ ?m ex:q ?o FILTER(DATATYPE(?o) = <{XSD_INT}>) }}")
+    assert pname == iri == [("1",)]
+    assert rows("SELECT ?s WHERE { ?s ex:p ?o FILTER(?o = ex:m) }") == [(EX + "x",)]
+    assert rows("SELECT ?x WHERE { ex:x ex:p ?o BIND(ex:a AS ?x) }") == [(EX + "a",)]
+    first = "SELECT ?s WHERE {{ ?s ?p ?o }} ORDER BY {}(?s = ex:m) LIMIT 1"
+    assert rows(first.format("DESC")) == [(EX + "m",)]
+    assert rows(first.format("ASC")) == [(EX + "x",)]
+    with pytest.raises(SparqlParseError, match="cannot resolve"):
+        parse_sparql(PREFIX + "SELECT ?o WHERE { ?s ex:q ?o FILTER(?o = nope:x) }")
+    with pytest.raises(SparqlParseError, match="cannot resolve"):
+        parse_sparql(PREFIX + "SELECT ?x WHERE { ?s ex:q ?o BIND(nope:x AS ?x) }")
+    # pattern-valued filters inside the same query still parse
+    out = rows(
+        "SELECT ?s WHERE { ?s ex:p ?o FILTER EXISTS { ?o ex:q ?v } "
+        "FILTER NOT EXISTS { ?o ex:r ?v } FILTER(?o != xsd:integer) }"
+    )
+    assert out == [(EX + "x",)]

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from rdfshape_api_spark.fixtures.generator import (
@@ -150,3 +151,37 @@ def test_batch_falls_back_for_pair_constraints(spark):
         for r in validate(tri, schema).collect()
     }
     assert batch == seq == {"a": "conformant", "b": "nonconformant"}
+
+
+@pytest.mark.parametrize("batched", [True, False])
+def test_shapemap_naming_an_undeclared_shape_raises(spark, triples_001, batched):
+    """The batched path and validate() reject a shapemap whose shape the
+    schema does not declare with the same ValueError."""
+    schema = parse_shexc(SHEX_SENSOR)
+    smap = "{FOCUS a ex:Reading}@ex:Missing"
+    with pytest.raises(ValueError, match="http://example.org/Missing"):
+        if batched:
+            validate_batch(triples_001, [(schema, smap, "job")])
+        else:
+            validate(triples_001, schema, shapemap=smap)
+
+
+@pytest.mark.parametrize("batched", [True, False])
+def test_shapemap_start_resolves_in_both_paths(spark, triples_001, batched):
+    """``@start`` names the schema's start shape on both paths, and raises
+    on both when the schema declares none."""
+    run = (
+        (lambda s, m: validate_batch(triples_001, [(s, m, "job")]))
+        if batched
+        else (lambda s, m: validate(triples_001, s, shapemap=m, shape_label="job"))
+    )
+    with pytest.raises(ValueError, match="no start shape"):
+        run(parse_shexc(SHEX_SENSOR), "{FOCUS a ex:Reading}@start")
+    started = parse_shexc(
+        SHEX_SENSOR.replace("\nex:ValidReading {", "\nstart = @ex:ValidReading\nex:ValidReading {")
+    )
+    cols = ("doc_sha256", "node", "shape_id", "status")
+    got = run(started, "{FOCUS a ex:Reading}@start").select(*cols)
+    want = run(started, SHAPEMAP_QUERY).select(*cols)
+    assert want.count() > 0
+    assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
