@@ -26,16 +26,6 @@ import time
 from pyspark.sql import DataFrame, functions as F
 
 
-def sha_invariant_violations(docs: DataFrame) -> DataFrame:
-    """Rows whose recomputed sha256(content) differs from the recorded
-    ``content_sha256`` (north_star per-row invariant). Empty ⇒ healthy."""
-    if "content_sha256" not in docs.columns:
-        return docs.limit(0).select("repo", "path", "commit")
-    return docs.filter(F.sha2(F.col("content"), 256) != F.col("content_sha256")).select(
-        "repo", "path", "commit"
-    )
-
-
 def extraction_lineage(docs: DataFrame, raw_triples: DataFrame) -> DataFrame:
     """Per-repo lineage for the extraction stage: input docs, output
     triples, error docs, sha violations.  ``docs`` are the prepared docs

@@ -16,26 +16,33 @@ commits land:
   simply the empty set, and the parse error flows through the normal
   error channel).
 * **Merge-on-read snapshot log** — ``merge_snapshot`` never rewrites the
-  base store.  Each merge appends two O(delta)-sized parquet logs (added
-  triples, retracted keys) under a monotonically versioned directory;
-  ``read_snapshot`` reconciles them with one broadcast join.  This is the
-  same copy-on-write-avoidance trade Iceberg makes with delete files: at
-  100 TB a delta of 10^6 files must not touch the 10^12-file base.
+  base store.  Version ``v`` writes two parquet logs: ``adds_v``, every
+  add since the base that is still live at ``v``, and ``retracts_v``,
+  every ``(repo, path)`` retracted since the base.  The merge carries its
+  predecessor's logs forward (its adds anti-joined against this delta's
+  keys, its keys plus this delta's), so the log reconcile runs once per
+  merge; ``read_snapshot`` then needs only version ``v``'s two logs.
+  This is the same copy-on-write-avoidance trade Iceberg makes with
+  delete files: at 100 TB a delta of 10^6 files must not touch the
+  10^12-file base.
 * **Compaction** — ``compact_snapshot`` folds the log back into a new
-  base (the Iceberg ``rewrite_data_files`` analog) once the log's read
-  amplification outweighs the rewrite cost.
+  base (the Iceberg ``rewrite_data_files`` analog) once the log's size
+  outweighs the rewrite cost.
 
-Scale shape of the read-side reconciliation: the retract log holds one
-row per superseded ``(repo, path)`` — delta-sized, so it broadcasts; the
-join against the base is then a map-side hash probe, no shuffle of the
-store.  Version ordering (a key retracted at v2 but re-added at v3 must
-survive) reduces to ``max(retract version) <= row version`` per key,
-computed on the broadcast side.
+Scale shape: the retract log holds one row per ``(repo, path)`` changed
+since the last compaction — log-sized, so it broadcasts, and a read is
+one base scan with a map-side anti-join probe (no shuffle of the store)
+plus one scan of the live adds.  The read cost does not grow with the
+number of versions.  Every key of ``adds_v`` is in ``retracts_v``, so a
+key retracted at v2 and re-added at v3 keeps exactly its v3 triples, and
+reconciling an already compacted base against the same logs changes
+nothing.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -139,6 +146,30 @@ def init_snapshot(docs: DataFrame, store_dir: str) -> None:
     _write_version(store_dir, 0)
 
 
+def _predecessor(store_dir: str, cur: int, below: int) -> int:
+    """The live log version a merge to ``below`` builds on: the highest
+    version under ``below`` and not above the pointer ``cur`` whose adds
+    and retracts logs both exist.  0 means the base alone."""
+    log_root = os.path.join(store_dir, "log")
+    if not os.path.isdir(log_root):
+        return 0
+    names = os.listdir(log_root)
+    found = {
+        kind: {int(n[len(kind) + 2 :]) for n in names if n.startswith(f"{kind}_v")}
+        for kind in ("adds", "retracts")
+    }
+    live = [p for p in found["adds"] & found["retracts"] if p < below and p <= cur]
+    return max(live, default=0)
+
+
+def _read_log(spark: SparkSession, store_dir: str, version: int):
+    adds = spark.read.schema(TRIPLE_SCHEMA).parquet(_log_dir(store_dir, "adds", version))
+    retracts = spark.read.schema(_RETRACT_SCHEMA).parquet(
+        _log_dir(store_dir, "retracts", version)
+    )
+    return adds.select(*TRIPLE_COLUMNS), retracts
+
+
 def merge_snapshot(
     spark: SparkSession,
     store_dir: str,
@@ -147,12 +178,17 @@ def merge_snapshot(
 ) -> int:
     """Apply one delta batch as snapshot version N+1.
 
-    Cost is O(delta): two parquet writes (added triples, retracted keys);
-    the base is untouched.  The version-file swap is the atomic commit —
-    a crash before it leaves a dangling log directory that the next read
-    ignores (versions > the pointer are invisible), so the merge is
-    idempotently re-runnable: the re-run overwrites the same vN+1 dirs
-    and then swings the pointer.  Returns the new version.
+    Writes version ``v``'s two logs from its predecessor's (see
+    :func:`_predecessor`): ``adds_v`` = the predecessor's adds minus this
+    delta's keys, plus the delta's extraction; ``retracts_v`` = the
+    predecessor's keys plus the delta's.  Cost is O(delta + live log); the
+    base is untouched.  At pointer 0 no log is live, so ``log/`` is
+    removed first.  The version-file swap is the atomic commit — a crash
+    before it leaves a dangling log directory that no read or merge uses
+    (versions above the pointer are invisible), so the merge is
+    idempotently re-runnable: the re-run rebuilds the same ``v`` dirs
+    from the same predecessor and then swings the pointer.  Returns the
+    new version.
 
     ``version``: explicit target version for replay-safe callers (the
     streaming path maps micro-batch id → version, so a replayed batch
@@ -161,16 +197,24 @@ def merge_snapshot(
     """
     cur = snapshot_version(store_dir)
     v = cur + 1 if version is None else int(version)
+    log_root = os.path.join(store_dir, "log")
+    if cur == 0 and os.path.isdir(log_root):
+        shutil.rmtree(log_root)
+    prev = _predecessor(store_dir, cur, v)
     delta_docs.persist()
     try:
-        adds = _extract_canonical(delta_docs)
+        # keys are not deduplicated: a repeated key is harmless to an
+        # anti-join, and skipping the distinct saves a shuffle per merge
+        keys = delta_docs.select("repo", "path")
+        adds = _extract_canonical(delta_docs).select(*TRIPLE_COLUMNS)
+        retracts = keys
+        if prev:
+            prev_adds, prev_retracts = _read_log(spark, store_dir, prev)
+            live = prev_adds.join(F.broadcast(keys), on=["repo", "path"], how="left_anti")
+            adds = live.unionByName(adds)
+            retracts = prev_retracts.unionByName(keys)
         adds.write.mode("overwrite").parquet(_log_dir(store_dir, "adds", v))
-        (
-            delta_docs.select("repo", "path")
-            .distinct()
-            .write.mode("overwrite")
-            .parquet(_log_dir(store_dir, "retracts", v))
-        )
+        retracts.write.mode("overwrite").parquet(_log_dir(store_dir, "retracts", v))
     finally:
         delta_docs.unpersist()
     _write_version(store_dir, max(cur, v))
@@ -178,14 +222,13 @@ def merge_snapshot(
 
 
 def read_snapshot(spark: SparkSession, store_dir: str) -> DataFrame:
-    """Reconcile base + logs into the current canonical triple set.
-
-    One broadcast left join: rows (base at version 0, adds at their merge
-    version) survive iff no retract of their ``(repo, path)`` happened at
-    a LATER version — ``max(retract_v) <= row_v`` per key, aggregated on
-    the broadcast (delta-sized) side.  Column pruning and pushed-down
-    data filters still apply to the base scan before the probe; the
-    result drops ``pred_part``, so there is no directory pruning.
+    """The current canonical triple set: the base anti-joined against the
+    broadcast ``retracts_v`` of the pointer's version ``v``, plus
+    ``adds_v``.  The merges already reconciled the versions, so this is
+    one base scan, one broadcast anti-join and one small scan, whatever
+    the number of versions.  Column pruning and pushed-down data filters
+    still apply to the base scan before the probe; the result drops
+    ``pred_part``, so there is no directory pruning.
 
     Base and logs are read with pinned schemas, so building the frame runs
     no Spark job.  A base written over zero documents reads as empty; a
@@ -195,24 +238,11 @@ def read_snapshot(spark: SparkSession, store_dir: str) -> DataFrame:
 
     v = snapshot_version(store_dir)
     base = read_store(spark, os.path.join(store_dir, "base")).select(*TRIPLE_COLUMNS)
-    tri = base.withColumn("_v", F.lit(0))
-    retracts = None
-    for i in range(1, v + 1):
-        adds = spark.read.schema(TRIPLE_SCHEMA).parquet(_log_dir(store_dir, "adds", i))
-        tri = tri.unionByName(adds.withColumn("_v", F.lit(i)))
-        r = spark.read.schema(_RETRACT_SCHEMA).parquet(
-            _log_dir(store_dir, "retracts", i)
-        ).withColumn("_rv", F.lit(i))
-        retracts = r if retracts is None else retracts.unionByName(r)
-    if retracts is None:
-        return tri.drop("_v")
-    sup = retracts.groupBy("repo", "path").agg(F.max("_rv").alias("_max_rv"))
-    out = (
-        tri.join(F.broadcast(sup), on=["repo", "path"], how="left")
-        .filter(F.col("_max_rv").isNull() | (F.col("_max_rv") <= F.col("_v")))
-        .drop("_v", "_max_rv")
-    )
-    return out.select(*TRIPLE_COLUMNS)
+    if v == 0:
+        return base
+    adds, retracts = _read_log(spark, store_dir, v)
+    kept = base.join(F.broadcast(retracts), on=["repo", "path"], how="left_anti")
+    return kept.unionByName(adds)
 
 
 def stream_merge_snapshots(
@@ -228,7 +258,8 @@ def stream_merge_snapshots(
     replay overwrites its own log directories and the version pointer
     never moves backwards.  Contract: the store starts at version 0
     (:func:`init_snapshot`, possibly over an empty doc set) and is owned
-    by one checkpoint lineage; compaction requires the stream stopped.
+    by one checkpoint lineage; compaction requires the stream stopped,
+    and a stream resumed after it builds its next version on the new base.
 
     Returns the started ``StreamingQuery`` (``availableNow`` trigger —
     drains what exists, then stops; swap the trigger for continuous
@@ -255,10 +286,13 @@ def compact_snapshot(spark: SparkSession, store_dir: str) -> None:
     """Fold the merge log into a fresh base (Iceberg rewrite_data_files
     analog): materialize the reconciled snapshot, rewrite the canonical
     layout (each predicate's bucket count recomputed from its current row
-    count), reset the log.  Run when the accumulated log size makes the
-    read-side reconciliation join dominate scan cost."""
-    import shutil
+    count), reset the version pointer, then remove the log.  Run when the
+    accumulated log size makes the read-side anti-join dominate scan cost.
 
+    Once the new base is in place, a crash at either later step leaves a
+    readable snapshot: the new base reconciled against the still-named
+    logs is the same snapshot, and a log left after the pointer reset is
+    dead (the next merge at pointer 0 removes it)."""
     from rdfshape_api_spark.operators.canonicalize import write_canonical_store
 
     cur = read_snapshot(spark, store_dir)
@@ -267,7 +301,7 @@ def compact_snapshot(spark: SparkSession, store_dir: str) -> None:
     old_base = os.path.join(store_dir, "base")
     shutil.rmtree(old_base)
     os.replace(new_base, old_base)
+    _write_version(store_dir, 0)
     log_root = os.path.join(store_dir, "log")
     if os.path.isdir(log_root):
         shutil.rmtree(log_root)
-    _write_version(store_dir, 0)

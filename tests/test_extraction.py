@@ -34,10 +34,12 @@ def test_error_channel(spark, fixtures_001):
 
 
 def test_sha_invariant(spark, fixtures_001):
-    from rdfshape_api_spark.lineage import sha_invariant_violations
+    from rdfshape_api_spark.lineage import extraction_lineage
+    from rdfshape_api_spark.sources.extract import extract_triples_raw, with_doc_sha
 
-    docs = spark.read.parquet(fixtures_001["docs"])
-    assert sha_invariant_violations(docs).count() == 0
+    docs = with_doc_sha(spark.read.parquet(fixtures_001["docs"]))
+    lineage = extraction_lineage(docs, extract_triples_raw(docs)).collect()
+    assert lineage and sum(r["sha_violations"] for r in lineage) == 0
 
 
 def test_prefix_tables(spark, fixtures_001):

@@ -303,3 +303,139 @@ def test_compaction_resizes_the_layout(spark, tmp_path, monkeypatch):
     assert len(buckets(store_dir)) > 1
     after = sorted(map(tuple, read_snapshot(spark, store_dir).select(*CANON).collect()))
     assert after == before
+
+
+def _values(spark, store_dir):
+    return sorted((r["path"], r["obj_value"]) for r in read_snapshot(spark, store_dir).collect())
+
+
+def _doc(path, commit, value):
+    return (path, commit, f'<http://e/s> <http://e/p> "{value}" .\n')
+
+
+def test_retract_readd_retract_one_key(spark, tmp_path):
+    """One key retracted (a broken version), re-added, then retracted again
+    over three versions: each read shows exactly that version's state."""
+    store_dir = str(tmp_path / "snap")
+    init_snapshot(_nt_docs(spark, [_doc("a.nt", "c0", "a0"), _doc("b.nt", "c0", "b0")]), store_dir)
+    merge_snapshot(spark, store_dir, _nt_docs(spark, [("a.nt", "c1", "NOT NTRIPLES")]))
+    assert _values(spark, store_dir) == [("b.nt", "b0")]
+    merge_snapshot(spark, store_dir, _nt_docs(spark, [_doc("a.nt", "c2", "a2")]))
+    assert _values(spark, store_dir) == [("a.nt", "a2"), ("b.nt", "b0")]
+    assert merge_snapshot(spark, store_dir, _nt_docs(spark, [("a.nt", "c3", "NOT NTRIPLES")])) == 3
+    assert _values(spark, store_dir) == [("b.nt", "b0")]
+
+
+def test_replayed_versions_leave_snapshot_unchanged(spark, tmp_path):
+    """Replaying version 1 and version 2 after version 2 is committed
+    rebuilds each version's logs from the same predecessor, so the
+    snapshot does not change and the pointer stays at 2."""
+    store_dir = str(tmp_path / "snap")
+    init_snapshot(_nt_docs(spark, [_doc("a.nt", "c0", "a0"), _doc("b.nt", "c0", "b0")]), store_dir)
+    batch1 = _nt_docs(spark, [_doc("a.nt", "c1", "a1"), _doc("c.nt", "c1", "c1")])
+    batch2 = _nt_docs(spark, [_doc("a.nt", "c2", "a2"), _doc("b.nt", "c2", "b2")])
+    merge_snapshot(spark, store_dir, batch1, version=1)
+    merge_snapshot(spark, store_dir, batch2, version=2)
+    want = [("a.nt", "a2"), ("b.nt", "b2"), ("c.nt", "c1")]
+    assert _values(spark, store_dir) == want
+    for version, batch in ((1, batch1), (2, batch2)):
+        assert merge_snapshot(spark, store_dir, batch, version=version) == version
+        assert snapshot_version(store_dir) == 2
+        assert _values(spark, store_dir) == want
+
+
+def test_read_snapshot_job_count(spark, tmp_path):
+    """After two merges a counted read runs 3 Spark jobs: the broadcast of
+    the retract keys, the scan stage and the final count.  The merges
+    reconciled the log, so the read has no aggregate of its own."""
+    store_dir = str(tmp_path / "snap")
+    init_snapshot(_nt_docs(spark, [_doc("a.nt", "c0", "a0"), _doc("b.nt", "c0", "b0")]), store_dir)
+    merge_snapshot(spark, store_dir, _nt_docs(spark, [_doc("a.nt", "c1", "a1")]))
+    merge_snapshot(spark, store_dir, _nt_docs(spark, [_doc("c.nt", "c2", "c2")]))
+    sc = spark.sparkContext
+    group = "test_read_snapshot_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        n = read_snapshot(spark, store_dir).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert n == 3
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3
+
+
+def test_stream_resumes_after_compaction(spark, tmp_path):
+    """A stream that resumes after a compaction: its next batch (id 1, so
+    version 2) builds on the compacted base alone, and replaying that
+    batch as version 2 leaves the snapshot unchanged."""
+    from rdfshape_api_spark.operators.incremental import stream_merge_snapshots
+    from rdfshape_api_spark.streaming.validate_stream import DOCS_SCHEMA
+
+    drop = tmp_path / "drop"
+    drop.mkdir()
+    store_dir = str(tmp_path / "snap")
+    ckpt = str(tmp_path / "ckpt")
+    init_snapshot(_nt_docs(spark, []), store_dir)
+
+    def run_stream():
+        src = spark.readStream.schema(DOCS_SCHEMA).parquet(str(drop))
+        stream_merge_snapshots(src, store_dir, ckpt).awaitTermination(120)
+
+    _nt_docs(spark, [_doc("a.nt", "c1", "a1")]).write.mode("append").parquet(str(drop))
+    run_stream()
+    compact_snapshot(spark, store_dir)
+    batch = _nt_docs(spark, [_doc("b.nt", "c1", "b1")])
+    batch.write.mode("append").parquet(str(drop))
+    run_stream()
+    assert snapshot_version(store_dir) == 2
+    want = [("a.nt", "a1"), ("b.nt", "b1")]
+    assert _values(spark, store_dir) == want
+    merge_snapshot(spark, store_dir, batch, version=2)
+    assert _values(spark, store_dir) == want
+
+
+def _compaction_crash(spark, tmp_path, monkeypatch, fail_step):
+    """Compact with one step after the new base is in place raising, then
+    check the read and a following merge."""
+    import os
+    import shutil
+
+    from rdfshape_api_spark.operators import incremental as I
+
+    store_dir = str(tmp_path / "snap")
+    init_snapshot(_nt_docs(spark, [_doc("a.nt", "c0", "a0"), _doc("b.nt", "c0", "b0")]), store_dir)
+    merge_snapshot(spark, store_dir, _nt_docs(spark, [_doc("a.nt", "c1", "a1")]))
+    merge_snapshot(spark, store_dir, _nt_docs(spark, [_doc("c.nt", "c2", "c2")]))
+    before = _values(spark, store_dir)
+    assert before == [("a.nt", "a1"), ("b.nt", "b0"), ("c.nt", "c2")]
+
+    log_root = os.path.join(store_dir, "log")
+    real_rmtree = shutil.rmtree
+
+    def crash(*a, **k):
+        raise OSError("injected crash")
+
+    def rmtree(path, *a, **k):
+        if os.path.abspath(path) == os.path.abspath(log_root):
+            crash()
+        return real_rmtree(path, *a, **k)
+
+    with monkeypatch.context() as m:
+        if fail_step == "pointer":
+            m.setattr(I, "_write_version", crash)
+        else:
+            m.setattr(shutil, "rmtree", rmtree)
+        with pytest.raises(OSError, match="injected crash"):
+            compact_snapshot(spark, store_dir)
+    assert _values(spark, store_dir) == before
+
+    merge_snapshot(spark, store_dir, _nt_docs(spark, [_doc("b.nt", "c3", "b3")]))
+    assert _values(spark, store_dir) == [("a.nt", "a1"), ("b.nt", "b3"), ("c.nt", "c2")]
+
+
+def test_compaction_crash_at_pointer_reset(spark, tmp_path, monkeypatch):
+    _compaction_crash(spark, tmp_path, monkeypatch, "pointer")
+
+
+def test_compaction_crash_at_log_removal(spark, tmp_path, monkeypatch):
+    _compaction_crash(spark, tmp_path, monkeypatch, "log")
