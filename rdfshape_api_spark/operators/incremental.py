@@ -214,7 +214,8 @@ def merge_snapshot(
             adds = live.unionByName(adds)
             retracts = prev_retracts.unionByName(keys)
         adds.write.mode("overwrite").parquet(_log_dir(store_dir, "adds", v))
-        retracts.write.mode("overwrite").parquet(_log_dir(store_dir, "retracts", v))
+        # one file: every read broadcasts the retract keys whole
+        retracts.coalesce(1).write.mode("overwrite").parquet(_log_dir(store_dir, "retracts", v))
     finally:
         delta_docs.unpersist()
     _write_version(store_dir, max(cur, v))

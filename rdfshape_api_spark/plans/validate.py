@@ -1242,7 +1242,6 @@ def validate(
     schema: CompiledSchema,
     shapemap: str | list[Association] | None = None,
     shape_label: str | None = None,
-    max_fixpoint_iters: int = 25,
     focus_triples: DataFrame | None = None,
 ) -> DataFrame:
     """Validate — the `/api/schema/validate` equivalent (SURVEY §3.1).
@@ -1352,6 +1351,19 @@ def validate(
                         f"shape {sid!r}: negated (or xone-counted) reference "
                         "inside a reference cycle is not stratifiable (unsupported)"
                     )
+                # a cap on the count of conforming values where other values
+                # are allowed (ShEx EXTRA, sh:qualifiedMaxCount) fails when
+                # MORE values conform, and a disjoint qualified sibling counts
+                # the values that do NOT conform: both are non-monotone
+                capped = tc.max_count is not None and (tc.extra or tc.qualified)
+                if (capped and any(r in cyclic for r in _refs_of(tc))) or any(
+                    r in cyclic for sib in tc.disjoint_siblings or [] for r in _refs_of(sib)
+                ):
+                    raise ValueError(
+                        f"shape {sid!r}: count-capped (EXTRA / qualifiedMaxCount) "
+                        "or disjoint-sibling reference inside a reference cycle "
+                        "is not stratifiable (unsupported)"
+                    )
             # shape-LEVEL negative / xone-counted references are the same
             # non-monotone hazard when both ends sit inside the cycle set
             sh_ = schema.shapes[sid]
@@ -1367,16 +1379,19 @@ def validate(
         # recursion lives inside shexs at SchemaValidate.scala:97-99).
         # Greatest fixed point: start every cyclic shape optimistically
         # conformant over all subjects, re-evaluate the cycle set until no
-        # conformant set shrinks. With positive (negation-free) references
-        # the sets shrink monotonically, so count-stability ⇔ fixpoint and
-        # the loop terminates in ≤ |subjects| rounds (bounded below).
+        # conformant set shrinks. With the monotone references the check
+        # above admits, the sets only shrink, so count-stability ⇔ fixpoint.
+        # A set that grows means a non-monotone reference the check missed:
+        # raise rather than oscillate. Counts never grow, so every round that
+        # changes one lowers their total and the loop ends in ≤ that many.
         # localCheckpoint per round keeps plans flat (Catalyst can't recurse).
         all_ck = all_subjects.localCheckpoint()
         sizes: dict[str, int] = {}
         for sid in sorted(cyclic):
             conformant_refs[sid] = all_ck
             sizes[sid] = all_ck.count()
-        for _ in range(max_fixpoint_iters):
+        changed = True
+        while changed:
             changed = False
             for sid in sorted(cyclic):
                 v = evaluate_shape(
@@ -1388,16 +1403,16 @@ def validate(
                     .localCheckpoint()
                 )
                 n = nxt.count()
+                if n > sizes[sid]:
+                    raise ValueError(
+                        f"shape {sid!r}: conformant set grew between fixpoint "
+                        "rounds; a reference inside the cycle is not monotone "
+                        "(not stratifiable)"
+                    )
                 if n != sizes[sid]:
                     changed = True
                 conformant_refs[sid] = nxt
                 sizes[sid] = n
-            if not changed:
-                break
-        else:
-            raise ValueError(
-                f"shape-reference fixpoint did not converge in {max_fixpoint_iters} rounds"
-            )
 
     # acyclic shapes that depend on cycle members evaluate now, with the
     # fixpoint's conformant sets available (still in topological order)

@@ -439,3 +439,20 @@ def test_compaction_crash_at_pointer_reset(spark, tmp_path, monkeypatch):
 
 def test_compaction_crash_at_log_removal(spark, tmp_path, monkeypatch):
     _compaction_crash(spark, tmp_path, monkeypatch, "log")
+
+
+def test_retract_logs_are_one_file(spark, tmp_path):
+    """Every read broadcasts the retract log whole, so each merge writes it
+    as one file, however many files its predecessor and delta had."""
+    import glob
+    import os
+
+    store_dir = str(tmp_path / "snap")
+    init_snapshot(_nt_docs(spark, [_doc("a.nt", "c0", "a0"), _doc("b.nt", "c0", "b0")]), store_dir)
+    merge_snapshot(spark, store_dir, _nt_docs(spark, [_doc("a.nt", "c1", "a1")]))
+    merge_snapshot(spark, store_dir, _nt_docs(spark, [_doc("c.nt", "c2", "c2")]))
+    merge_snapshot(spark, store_dir, _nt_docs(spark, [_doc("b.nt", "c3", "b3"), _doc("d.nt", "c3", "d3")]))
+    logs = sorted(glob.glob(os.path.join(store_dir, "log", "retracts_v*")))
+    assert len(logs) == 3
+    assert [len(glob.glob(os.path.join(d, "*.parquet"))) for d in logs] == [1, 1, 1]
+    assert _values(spark, store_dir) == [("a.nt", "a1"), ("b.nt", "b3"), ("c.nt", "c2"), ("d.nt", "d3")]

@@ -44,7 +44,7 @@ def tri(spark):
 @pytest.mark.parametrize("text", list(CASES))
 def test_shacl_focus_rows_equal_sparql_constant_subject(spark, tri, text):
     query = f"PREFIX ex: <{EX}> SELECT DISTINCT ?o WHERE {{ ex:a {text} ?o . }}"
-    assert parse_sparql(query).patterns[0].path == CASES[text]
+    assert parse_sparql(query).where.patterns[0].path == CASES[text]
     focus = spark.createDataFrame([("d1", EX + "a")], "doc_sha256 string, node string")
     shacl = path_rows(tri, CASES[text], ["doc_sha256"], focus).distinct()
     sparql = sparql_select(tri, query)

@@ -199,3 +199,91 @@ ex:D {{ ex:peer @ex:C ? }}
     tri = _triples(spark, [("a", "peer", "iri", "b")])
     with pytest.raises(ValueError, match="not stratifiable"):
         validate(tri, schema, shapemap=f"<{EX}a>@<{EX}C>").collect()
+
+
+def test_long_chain_runs_the_fixpoint_to_convergence(spark):
+    """Nonconformance moves back one hop per fixpoint round, so a 26-node
+    chain whose last value is not an integer needs 26 rounds; the loop runs
+    until no conformant set shrinks, with no round cap."""
+    xsd_int = "http://www.w3.org/2001/XMLSchema#integer"
+    n = 26
+    rows = [
+        ("d", f"{EX}n{i:02d}", EX + "val", "literal", "1" if i < n - 1 else "x",
+         None, xsd_int if i < n - 1 else None)
+        for i in range(n)
+    ] + [
+        ("d", f"{EX}n{i:02d}", EX + "next", "iri", f"{EX}n{i + 1:02d}", None, None)
+        for i in range(n - 1)
+    ]
+    cols = ["doc_sha256", "subj", "pred", "obj_kind", "obj_value", "obj_lang", "obj_datatype"]
+    tri = spark.createDataFrame(rows, ", ".join(f"{c} string" for c in cols))
+    schema = parse_shexc(
+        f"""PREFIX ex: <{EX}>
+PREFIX xsd: <http://www.w3.org/2001/XMLSchema#>
+ex:Node {{ ex:val xsd:integer ; ex:next @ex:Node ? }}
+"""
+    )
+    smap = ", ".join(f"<{EX}n{i:02d}>@<{EX}Node>" for i in range(n))
+    out = {r["node"]: r["status"] for r in validate(tri, schema, shapemap=smap).collect()}
+    assert out == {f"{EX}n{i:02d}": "nonconformant" for i in range(n)}
+
+
+def test_count_capped_ref_within_cycle_rejected(spark):
+    """Under EXTRA a value that does not conform is allowed, so a cap on the
+    conforming ones fails when more conform: the conformant set of this
+    schema over a→b, a→c, b→a, b→d goes {a,b,c,d} → {c,d} → {a,b,c,d} …
+    and never settles."""
+    import pytest
+
+    schema = parse_shexc(
+        f"""PREFIX ex: <{EX}>
+ex:S EXTRA ex:next {{ ex:next @ex:S ? }}
+"""
+    )
+    tri = _triples(
+        spark,
+        [
+            ("a", "next", "iri", "b"),
+            ("a", "next", "iri", "c"),
+            ("b", "next", "iri", "a"),
+            ("b", "next", "iri", "d"),
+            ("c", "name", "literal", "C"),
+            ("d", "name", "literal", "D"),
+        ],
+    )
+    smap = ", ".join(f"<{EX}{n}>@<{EX}S>" for n in "abcd")
+    with pytest.raises(ValueError, match="not stratifiable"):
+        validate(tri, schema, shapemap=smap).collect()
+
+
+def test_qualified_max_ref_within_cycle_rejected(spark):
+    """sh:qualifiedMaxCount over a shape in the cycle is the SHACL form of
+    the same non-monotone cap, over the same oscillating graph."""
+    import pytest
+
+    from rdfshape_api_spark.plans import parse_shacl
+
+    schema = parse_shacl(
+        f"""@prefix sh: <http://www.w3.org/ns/shacl#> .
+@prefix ex: <{EX}> .
+ex:S a sh:NodeShape ; sh:targetSubjectsOf ex:next ;
+  sh:property [
+    sh:path ex:next ;
+    sh:qualifiedValueShape [ sh:node ex:S ] ;
+    sh:qualifiedMaxCount 1 ;
+  ] .
+"""
+    )
+    tri = _triples(
+        spark,
+        [
+            ("a", "next", "iri", "b"),
+            ("a", "next", "iri", "c"),
+            ("b", "next", "iri", "a"),
+            ("b", "next", "iri", "d"),
+            ("c", "name", "literal", "C"),
+            ("d", "name", "literal", "D"),
+        ],
+    )
+    with pytest.raises(ValueError, match="not stratifiable"):
+        validate(tri, schema).collect()

@@ -5,7 +5,13 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from rdfshape_api_spark.plans.sparql import SparqlParseError, parse_sparql, sparql_select
+from rdfshape_api_spark.plans.sparql import (
+    BGP,
+    Project,
+    SparqlParseError,
+    parse_sparql,
+    sparql_select,
+)
 
 EX = "http://example.org/"
 
@@ -16,22 +22,48 @@ def test_parse_basic():
     q = parse_sparql(
         PREFIX + "SELECT ?s ?t WHERE { ?s a ex:Reading . ?s ex:readingTemperature ?t . }"
     )
-    assert q.select_vars == ["s", "t"]
-    assert len(q.patterns) == 2
-    assert q.patterns[0].pred == "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
-    assert q.patterns[0].obj == EX + "Reading"
+    assert isinstance(q.algebra, Project) and q.algebra.vars == ["s", "t"]
+    assert isinstance(q.where, BGP) and q.algebra.child is q.where
+    assert len(q.where.patterns) == 2
+    assert q.where.patterns[0].pred == "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
+    assert q.where.patterns[0].obj == EX + "Reading"
 
 
 def test_parse_property_list_and_star():
     q = parse_sparql(PREFIX + 'SELECT * WHERE { ?s ex:status "OK" ; ex:station ?st . }')
-    assert len(q.patterns) == 2
-    assert q.patterns[0].obj_is_literal
-    assert q.select_vars == ["s", "st"]
+    assert len(q.where.patterns) == 2
+    assert q.where.patterns[0].obj_is_literal
+    assert q.algebra.vars == ["s", "st"]
 
 
 def test_parse_rejects_garbage():
     with pytest.raises(SparqlParseError):
         parse_sparql("SELECT ?s WHERE { ?s ex:broken ?o }")  # unknown prefix
+
+
+#: the SPARQL reads of perfbench's `serve` workload (perfbench/workloads.py)
+SERVE_QUERIES = {
+    "bgp": "SELECT ?s ?t WHERE { ?s a ex:Reading . ?s ex:readingTemperature ?t . FILTER(?t > 19.5) }",
+    "group": "SELECT ?st (COUNT(?s) AS ?n) WHERE { ?s ex:status ?st } GROUP BY ?st",
+    "path": "SELECT ?b WHERE { ex:shared0 ex:station/^ex:station ?b }",
+}
+
+
+@pytest.mark.parametrize("shape, jobs", [("bgp", 4), ("group", 3), ("path", 5)])
+def test_serve_query_job_count(spark, triples_001, shape, jobs):
+    """The `serve` query shapes keep their Spark job counts over the cached
+    sf0.001 triples: a BGP with a FILTER, a GROUP BY and a path."""
+    out = sparql_select(triples_001, PREFIX + SERVE_QUERIES[shape])
+    sc = spark.sparkContext
+    group = f"test_serve_query_jobs_{shape}"
+    sc.setJobGroup(group, group)
+    try:
+        rows = out.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert rows
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
 
 
 def test_bgp_join(spark, triples_001):

@@ -9,7 +9,13 @@ from __future__ import annotations
 
 import pytest
 
-from rdfshape_api_spark.plans.sparql import SparqlParseError, parse_sparql, sparql_select
+from rdfshape_api_spark.plans.sparql import (
+    Group,
+    Project,
+    SparqlParseError,
+    parse_sparql,
+    sparql_select,
+)
 
 EX = "http://example.org/"
 PREFIX = f"PREFIX ex: <{EX}>\n"
@@ -42,11 +48,11 @@ def test_parse_subquery():
                 } GROUP BY ?st }
             }"""
     )
-    assert len(q.subqueries) == 1
-    sq = q.subqueries[0]
-    assert sq.group_by == ["st"]
-    assert sq.aggregates[0][0] == "MAX"
-    assert q.select_vars == ["st", "maxt"]
+    assert q.algebra.vars == ["st", "maxt"]
+    sq = q.where  # the WHERE clause is the subquery's own algebra
+    assert isinstance(sq, Project) and isinstance(sq.child, Group)
+    assert sq.child.keys == ["st"]
+    assert sq.child.aggs[0].func == "MAX"
 
 
 def test_subquery_select_star_projection():
@@ -58,7 +64,7 @@ def test_subquery_select_star_projection():
               { SELECT ?st WHERE { ?r ex:station ?st . ?r ex:temp ?t . } }
             }"""
     )
-    assert q.select_vars == ["st"]
+    assert q.algebra.vars == ["st"]
 
 
 def test_subquery_aggregate_joined_to_outer(spark):
